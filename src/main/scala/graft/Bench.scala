@@ -78,6 +78,35 @@ object Bench {
     median((1 to 3).map(_ => shot()))
   }
 
+  /** Where the full JSON record goes: `SPARK_GRAFT_BENCH_OUT` when set;
+    * otherwise `BENCH_PARSED.json` at the repo root for a full run, and
+    * the side file `BENCH_FILTERED.json` for a run filtered by
+    * `SPARK_GRAFT_ONLY` — a filtered run never replaces the record of
+    * the whole registry. */
+  private[graft] def outputPath(filtered: Boolean, env: Map[String, String],
+      repoRoot: String): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      s"$repoRoot/${if (filtered) "BENCH_FILTERED.json" else "BENCH_PARSED.json"}")
+
+  /** JSON string body: quotes, backslashes and control characters
+    * escaped (memo keys, paths and exception messages are free text). */
+  private[graft] def esc(s: String): String = {
+    val named = s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
+    // remaining C0 control chars (vertical tab, form feed, …) get the
+    // generic \u00XX escape — JSON forbids them raw
+    named.flatMap(c => if (c < 0x20) f"\\u${c.toInt}%04x" else c.toString)
+  }
+
+  /** The `errors` object: each failed query's last exception, as its
+    * class name and message — the cause of a `failed` count, in the
+    * record instead of only on stderr. */
+  private[graft] def errorsJson(errors: Seq[(String, Throwable)]): String =
+    errors.map { case (q, e) =>
+      s""""${esc(q)}":{"class":"${esc(e.getClass.getName)}",""" +
+        s""""message":"${esc(String.valueOf(e.getMessage))}"}"""
+    }.mkString("{", ",", "}")
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) Double.NaN
@@ -140,6 +169,9 @@ object Bench {
       selected.map { case (n, _) =>
         n -> scala.collection.mutable.ArrayBuffer.empty[Double] }.toMap
     val passCanaries = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // each query's latest timed-rep failure — reported for the queries
+    // that failed every rep (the `failed` count) as "errors"
+    val errors = scala.collection.mutable.Map.empty[String, Throwable]
     (1 to math.max(1, reps)).foreach { pass =>
       selected.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -151,7 +183,8 @@ object Bench {
         val ok = try { graft.operators.CacheScope.withScope {
           fn(spark, sfDir).count() }; true }
         catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          errors(name) = e; false }
         if (ok) acc(name) += (System.nanoTime() - t0) / 1e9
       }
       if (pass < math.max(1, reps)) {
@@ -182,16 +215,9 @@ object Bench {
     // ties (or exonerates) ambient per-query creep to memo cache
     // pressure, and the committed record of what the memo-warm minima
     // hold pinned for the session.
-    // memo keys and the sf field embed the user-supplied sfDir path —
-    // the only user-controlled strings on the JSON line; a quote or
-    // backslash in them must not produce a malformed artifact
-    def esc(s: String) = {
-      val named = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-      // remaining C0 control chars (vertical tab, form feed, …) get the
-      // generic \u00XX escape — JSON forbids them raw
-      named.flatMap(c => if (c < 0x20) f"\\u${c.toInt}%04x" else c.toString)
-    }
+    // memo keys and the sf field embed the user-supplied sfDir path,
+    // and errors carry exception messages: all go through esc, so a
+    // quote or backslash in them cannot produce a malformed artifact
     val memoJson = {
       val rep = graft.operators.Memo.report
       val detail = rep.map { e =>
@@ -222,6 +248,8 @@ object Bench {
     val total = results.collect { case (_, ts) if ts.nonEmpty => ts.min }.sum
     val totalMed = results.collect { case (_, ts) if ts.nonEmpty => median(ts) }.sum
     val nFailed = results.count(_._2.isEmpty)
+    val errs = errorsJson(results.collect {
+      case (k, ts) if ts.isEmpty && errors.contains(k) => k -> errors(k) })
     val cps = passCanaries.map(c => f"$c%.3f").mkString("[", ",", "]")
     // The artifact applies its own trust rule (the scaladoc band) so a
     // recording that violates it says so IN the JSON — the r15 closing
@@ -229,13 +257,12 @@ object Bench {
     val loadSuspect = canaryRatio < 0.67 || canaryRatio > 1.5 ||
       passCanaries.exists(c => c >= 1.5 * math.max(canaryStart, canaryEnd))
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$nFailed,"total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$nFailed,"total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"errors":$errs,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
     println(full)
     // The full line (~3 KB at 86 queries) outgrows the harness's 2000-char
     // output tail, so per-query numbers also go to a FILE, and the very
     // last line is a compact summary that always survives the tail whole.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      graft.queries.Q.repoRoot + "/BENCH_PARSED.json")
+    val outPath = outputPath(only.isDefined, sys.env, graft.queries.Q.repoRoot)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }

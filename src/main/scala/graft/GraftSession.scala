@@ -70,6 +70,14 @@ object GraftSession {
             graft.functions.MinhashSig(a, b, c)
           }))
         ext.injectFunction((
+          FunctionIdentifier("graft_sorted_intersect_size"),
+          new ExpressionInfo(classOf[graft.functions.SortedIntersectSize].getName,
+            "graft_sorted_intersect_size"),
+          (children: Seq[Expression]) => {
+            val Seq(a, b) = arity("graft_sorted_intersect_size", 2, children)
+            graft.functions.SortedIntersectSize(a, b)
+          }))
+        ext.injectFunction((
           FunctionIdentifier("graft_kgram_first_pos"),
           new ExpressionInfo(classOf[graft.functions.KgramFirstPos].getName,
             "graft_kgram_first_pos"),

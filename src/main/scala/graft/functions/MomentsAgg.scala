@@ -71,6 +71,11 @@ final class MomentsBuf(var dims: Int) extends Serializable
 final case class MomentsOut(n: Long, bad: Long, s: Seq[Double], m: Seq[Double])
 
 object MomentsAgg {
+  /** Built once per JVM: `Encoders.product` derives the encoder by Scala
+    * reflection, and Spark asks for it in every task that runs the
+    * aggregate. */
+  lazy val outputEncoder: Encoder[MomentsOut] = Encoders.product[MomentsOut]
+
   /** Limbs per accumulator cell. Each cell is a signed fixed-point
     * integer Σₖ limbs(k)·2^(32k) scaled by 2^EBASE, spanning
     * [2^EBASE, 2^(32·NL + EBASE)) = [2^-1080, 2^136): every finite
@@ -244,5 +249,5 @@ class MomentsAgg(dims: Int) extends Aggregator[Seq[Double], MomentsBuf, MomentsO
   }
 
   override def bufferEncoder: Encoder[MomentsBuf] = Encoders.kryo[MomentsBuf]
-  override def outputEncoder: Encoder[MomentsOut] = Encoders.product[MomentsOut]
+  override def outputEncoder: Encoder[MomentsOut] = MomentsAgg.outputEncoder
 }

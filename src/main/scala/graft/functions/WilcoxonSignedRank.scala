@@ -104,6 +104,9 @@ object WilcoxonSignedRank extends Aggregator[Double, List[Double], WilcoxonStats
     math.min(1.0, 2.0 * (math.min(pl, pg) / tot))
   }
 
-  override def bufferEncoder: Encoder[List[Double]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[WilcoxonStats] = Encoders.product[WilcoxonStats]
+  /** Both encoders are built once per JVM, not per access: they are
+    * derived by Scala reflection, and Spark asks for them in every task
+    * that runs the aggregate. */
+  override lazy val bufferEncoder: Encoder[List[Double]] = ExpressionEncoder()
+  override lazy val outputEncoder: Encoder[WilcoxonStats] = Encoders.product[WilcoxonStats]
 }

@@ -63,9 +63,38 @@ object Dedup {
   def mixA(i: Int): Long = 1103515245L + 2L * i * 7919L // odd
   def mixB(i: Int): Long = 104729L + 12345L * i
 
+  /** The shingle-set encoding of the signature family — recorded in the
+    * column metadata of `s` and in a signature store's `meta/`: each
+    * shingle is its raw 16-byte MD5 digest (`unhex(md5(shingle))`), and
+    * a document's set is an `array<binary>` sorted ascending by unsigned
+    * byte order, duplicates removed ([[graft.functions.MinhashSig]]).
+    * MD5 is kept whole, so every pair, Jaccard value and count is exact;
+    * the sorted form is what [[shingleOverlap]]'s merge reads. A store
+    * or table carrying another encoding (the 32-char hex strings of
+    * earlier builds) is refused, never misread. */
+  val shingleEncoding = "md5-bin16-sorted"
+
+  /** |A ∩ B| of two shingle-set columns in [[shingleEncoding]]: one
+    * allocation-free merge per row (`graft_sorted_intersect_size`).
+    * `size(array_intersect(..))` would fall back to a nested loop over
+    * binary elements, which have no hashable `equals`. */
+  def shingleOverlap(a: String, b: String): org.apache.spark.sql.Column =
+    expr(s"graft_sorted_intersect_size($a, $b)")
+
+  /** Provenance stamped on `s`: ngram, textCol and the encoding are
+    * INVISIBLE in the data (shingles are hashes), so without it a
+    * consumer called with a mismatched ngram would silently compute the
+    * wrong-n measure — [[requireSigProvenance]] checks all three. */
+  private def sigMeta(ngram: Int, textCol: String) =
+    new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("graft_ngram", ngram.toLong)
+      .putString("graft_text_col", textCol)
+      .putString("graft_shingle_encoding", shingleEncoding).build()
+
   /** Per-document minhash SIGNATURE TABLE — the tokenize/shingle stage
     * of the text-dedup family factored out once: (idCol, carry...,
-    * s: array<string> — the distinct shingle-md5 set, mh0..mh{nHash−1}
+    * s: array<binary> — the distinct shingle-md5 set in
+    * [[shingleEncoding]], mh0..mh{nHash−1}
     * — the affine-mix minima). Documents with fewer than `ngram`
     * tokens are dropped (NULL signature), exactly as in the inline
     * stages it replaces.
@@ -90,23 +119,20 @@ object Dedup {
   def minhashSigTable(docs: DataFrame, idCol: String, textCol: String,
       carry: Seq[String] = Nil, ngram: Int = 3, nHash: Int = 12,
       memoKey: Option[String] = None): DataFrame = {
-    // provenance rides as column metadata on `s`: ngram and textCol are
-    // INVISIBLE in the data (shingles are hashes), so without this a
-    // consumer called with a mismatched ngram would silently compute
-    // the wrong-n measure — consumers require a match when present
-    val sMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft_ngram", ngram.toLong)
-      .putString("graft_text_col", textCol).build()
     def build: DataFrame = docs
       .select((col(idCol) +: carry.map(col) :+
         expr(s"graft_minhash_sig($textCol, $ngram, $nHash)").as("ms")): _*)
       .filter(col("ms").isNotNull)
-      .select((col(idCol) +: carry.map(col) :+ col("ms.shs").as("s", sMeta)) ++
+      .select((col(idCol) +: carry.map(col) :+
+        col("ms.shs").as("s", sigMeta(ngram, textCol))) ++
         (0 until nHash).map(i =>
           element_at(col("ms.sig"), i + 1).as(s"mh$i")): _*)
     memoKey match {
+      // the encoding is in the key: a written corpus-tier table of an
+      // earlier encoding then sits under another directory, unread
       case Some(mk) => Memo.cachedCorpus(
-        s"$mk/sigTable/$idCol/$textCol/${carry.mkString(",")}/$ngram/$nHash")(build)
+        s"$mk/sigTable/$idCol/$textCol/${carry.mkString(",")}/$ngram/$nHash/" +
+          shingleEncoding)(build)
       case None => build
     }
   }
@@ -131,15 +157,19 @@ object Dedup {
     * derived table is the one you WRITE instead of caching). Two
     * datasets under `dir`:
     *
-    *  - `sig/` (id, s, mh0..mh{nHash−1}): one row per corpus document —
-    *    its distinct shingle-md5 set and its minhash signature. The
-    *    only corpus-sized dataset; NO raw text rides along, so serving
-    *    jobs never touch the corpus text again.
-    *  - `meta/` (id_col, text_col, ngram, n_hash): one row of
+    *  - `sig/` (id, s: array<binary>, mh0..mh{nHash−1}: bigint): one
+    *    row per corpus document — its distinct shingle-md5 set (raw
+    *    16-byte digests, sorted: [[shingleEncoding]]) and its minhash
+    *    signature. The only corpus-sized dataset; NO raw text rides
+    *    along, so serving jobs never touch the corpus text again.
+    *  - `meta/` (id_col, text_col, ngram, n_hash, encoding): one row of
     *    structural parameters — they are INVISIBLE in the signature
     *    data (shingles are hashes), so the store carries them
     *    explicitly and [[searchMinhashSigStore]] validates/derives from
-    *    them instead of trusting the caller. Written LAST: a
+    *    them instead of trusting the caller. `encoding` is
+    *    [[shingleEncoding]]; serve, append and compact refuse a store
+    *    whose `meta/` records another encoding or none (a store written
+    *    before the field existed holds hex strings). Written LAST: a
     *    `meta/_SUCCESS` marker implies the whole store landed, which is
     *    what skip-if-exists callers should test.
     *
@@ -147,7 +177,7 @@ object Dedup {
     * of the SAME docs/textCol/ngram with at least `nHash` minhashes —
     * the text stage is then skipped and the store is a projection of
     * it. Shingle sets and signatures round-trip Parquet exactly
-    * (strings and longs), so a serve over the store is row-identical
+    * (binary and longs), so a serve over the store is row-identical
     * to the inline incremental chain — proven through the oracle gate
     * by the `dedup_sig_store_serve` registry query.
     *
@@ -176,8 +206,25 @@ object Dedup {
     StoreFs.sizedForWrite(sig).write.mode("overwrite").parquet(s"$dir/sig")
     docs.sparkSession.range(1)
       .select(lit(idCol).as("id_col"), lit(textCol).as("text_col"),
-        lit(ngram).as("ngram"), lit(nHash).as("n_hash"))
+        lit(ngram).as("ngram"), lit(nHash).as("n_hash"),
+        lit(shingleEncoding).as("encoding"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+  }
+
+  /** The store's `meta/` row, refused unless it records
+    * [[shingleEncoding]]: a store of another encoding (or of none — one
+    * written before `meta/` had the field, holding hex strings) would
+    * be misread by every consumer of `s`. */
+  private def storeMeta(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): org.apache.spark.sql.Row = {
+    val meta = spark.read.parquet(s"$storeDir/meta").head()
+    val enc =
+      if (meta.schema.fieldNames.contains("encoding")) meta.getAs[String]("encoding")
+      else "none recorded"
+    require(enc == shingleEncoding,
+      s"store at $storeDir has shingle encoding '$enc', this engine reads " +
+        s"'$shingleEncoding' — rebuild the store with writeMinhashSigStore")
+    meta
   }
 
   /** APPEND half of the signature store — the continuous-ingest
@@ -234,7 +281,7 @@ object Dedup {
       s"shard '$shardId' was already compacted into $storeDir/sig — " +
         "re-appending would duplicate its rows; corrections after " +
         "compaction require rebuilding the base store")
-    val meta = spark.read.parquet(s"$storeDir/meta").head()
+    val meta = storeMeta(spark, storeDir)
     val storeText = meta.getAs[String]("text_col")
     require(storeText == textCol,
       s"store at $storeDir was built over '$storeText', " +
@@ -296,6 +343,7 @@ object Dedup {
     }
     require(StoreFs.datasetComplete(spark, s"$storeDir/meta"),
       s"store at $storeDir is incomplete (no meta/_SUCCESS) — refusing to compact")
+    storeMeta(spark, storeDir)
     import spark.implicits._
     // compaction is WHERE small files get healed: the fold re-sizes the
     // union of base + shard datasets to the serve-side file target
@@ -420,7 +468,7 @@ object Dedup {
         "mid-rewrite, mid-compaction, or a crashed write")
     // 1-row structural fetch before the search jobs, as in
     // searchIvfPqIndex — adjudicated driver-side read
-    val meta = spark.read.parquet(s"$storeDir/meta").head()
+    val meta = storeMeta(spark, storeDir)
     val storeId = meta.getAs[String]("id_col")
     val storeText = meta.getAs[String]("text_col")
     val ngram = meta.getAs[Int]("ngram")
@@ -452,11 +500,8 @@ object Dedup {
       minhashSigTable(shard, idCol, textCol, Nil, ngram, nHash)
         .select(col(idCol) +: lit(true).as("is_new") +:
           col("s") +: mhCols.map(col): _*))
-    val sMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft_ngram", ngram.toLong)
-      .putString("graft_text_col", textCol).build()
     val union = store.unionByName(shardSig)
-      .withColumn("s", col("s").as("s", sMeta))
+      .withColumn("s", col("s").as("s", sigMeta(ngram, textCol)))
     minhashLshIncremental(shard, idCol, textCol, "is_new", nHash, bandRows,
       threshold, ngram, maxBucket, sigTable = Some(union))
   }
@@ -530,8 +575,7 @@ object Dedup {
       // and hashed a ~2·|s|-element array per candidate pair.
       cand.join(sb.hint("shuffle_hash"), "doc_b")
         .join(sa.hint("shuffle_hash"), "doc_a")
-        .withColumn("inter",
-          size(array_intersect(col("s_a"), col("s_b"))).cast("double"))
+        .withColumn("inter", shingleOverlap("s_a", "s_b").cast("double"))
         .withColumn("j",
           col("inter") / (size(col("s_a")) + size(col("s_b")) - col("inter")))
         .filter(col("j") >= threshold)
@@ -678,8 +722,7 @@ object Dedup {
     // Union size as na+nb−inter (exact: `s` is a distinct set) — the
     // concat/array_distinct form built a 2·|s|-element array per pair.
     cand.join(sb.hint("shuffle_hash"), "doc_other").join(sa, "doc_new")
-      .withColumn("inter",
-        size(array_intersect(col("s_a"), col("s_b"))).cast("double"))
+      .withColumn("inter", shingleOverlap("s_a", "s_b").cast("double"))
       .withColumn("j",
         col("inter") / (size(col("s_a")) + size(col("s_b")) - col("inter")))
       .filter(col("j") >= threshold)
@@ -1134,7 +1177,9 @@ object Dedup {
       s"carry columns must be distinct from blockCols/idCol, got $carry")
     // The distinct shingle set and its size are PER-DOCUMENT values, so
     // they come from the row-local native MinhashSig pass (shs is its
-    // distinct-md5 set, first 8 hex chain identical to shingles()):
+    // distinct-md5 set as 16-byte digests — one-to-one with the hex
+    // md5s of shingles(), so the binary join keys match exactly the
+    // pairs the hex keys did):
     // the exploded index frame is a pure projection of the input — no
     // corpus-wide distinct shuffle and no per-doc count window before
     // the join, the same structural win minhashLsh took. (The earlier
@@ -1603,13 +1648,6 @@ object Dedup {
       CacheScope.persist(df)
     else df
 
-  /** Pins the [[minhashSigTable]] provenance a consumer silently
-    * depends on: when the table carries the metadata the builder
-    * stamps on `s`, its ngram/textCol must match the call's (the
-    * shingle hashes themselves cannot reveal a mismatch — the failure
-    * mode is a silently wrong-n similarity measure). Tables built
-    * before the stamp (or hand-built frames) carry no metadata and
-    * pass unchecked, preserving the documented caller contract. */
   /** Validates a caller-supplied [[ngramPairStats]] frame against the
     * consuming call's parameters, via the provenance metadata stamped
     * on `inter` (mirror of [[requireSigProvenance]]): the stats must
@@ -1665,9 +1703,30 @@ object Dedup {
             s"this call expects maxDf=${maxDf.getOrElse(-1L)}")
     }
 
+  /** Pins the [[minhashSigTable]] provenance a consumer silently
+    * depends on: when the table carries the metadata the builder
+    * stamps on `s`, its ngram/textCol/encoding must match the call's
+    * (the shingle hashes themselves cannot reveal a mismatch — the
+    * failure mode is a silently wrong-n similarity measure). Hand-built
+    * frames carry no metadata and pass those checks, but `s` must be an
+    * `array<binary>` whatever its origin: the hex-string sets of earlier
+    * builds are refused here, by name, rather than in the verify
+    * kernel's type check. */
   private def requireSigProvenance(st: DataFrame, ngram: Int,
       textCol: String): Unit =
     st.schema.fields.find(_.name == "s").foreach { f =>
+      import org.apache.spark.sql.types.{ArrayType, BinaryType}
+      require(f.dataType match {
+          case ArrayType(BinaryType, _) => true
+          case _ => false
+        },
+        s"sigTable column s is ${f.dataType.sql}; the shingle encoding " +
+          s"'$shingleEncoding' needs array<binary>")
+      if (f.metadata.contains("graft_shingle_encoding"))
+        require(f.metadata.getString("graft_shingle_encoding") == shingleEncoding,
+          s"sigTable was built with shingle encoding " +
+            s"'${f.metadata.getString("graft_shingle_encoding")}', this engine " +
+            s"reads '$shingleEncoding'")
       if (f.metadata.contains("graft_ngram"))
         require(f.metadata.getLong("graft_ngram") == ngram.toLong,
           s"sigTable was built with ngram=${f.metadata.getLong("graft_ngram")}, " +

@@ -100,7 +100,8 @@ object Memo {
     * corpus changes [[corpusKey]]'s fingerprint and therefore the
     * directory, making staleness structurally impossible. Row-identity
     * with the cached posture is pinned by MemoAuditSpec (signature
-    * columns are strings/longs — exact Parquet round-trip). */
+    * columns are longs and `array<binary>` shingle sets of 16-byte
+    * digests — Parquet INT64 and BINARY, both exact round-trips). */
   def cachedCorpus(key: String)(build: => DataFrame): DataFrame =
     corpusSpillRoot match {
       case Some(root) => writtenCorpus(root, key)(build)

@@ -475,7 +475,9 @@ object TextOps {
     * PROJECTION: the occurrence count is token arithmetic and the min
     * md5 rides the row-local native minhash expression (the overall
     * min equals the distinct-set min) — no explode, no groupBy
-    * shuffle. */
+    * shuffle. The expression's set holds raw 16-byte digests; their
+    * unsigned byte order is the order of their lowercase hex
+    * spellings, so the hex of the binary minimum is the hex minimum. */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
     docs
@@ -484,7 +486,7 @@ object TextOps {
         expr(s"graft_minhash_sig($textCol, $n, 1)").as("ms"))
       .filter(col("ms").isNotNull)
       .select(col(idCol), col("n_shingles"),
-        array_min(col("ms.shs")).as("fingerprint"))
+        lower(hex(array_min(col("ms.shs")))).as("fingerprint"))
 
   /** Per-document bigram-LM negative log-likelihood with add-α
     * smoothing — the CCNet-style perplexity signal (Wenzek et al.

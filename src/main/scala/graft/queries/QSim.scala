@@ -399,9 +399,11 @@ object QSim {
   )((s, d) => {
     val isShard = col("source").isin(incNewSources: _*)
     // every write-time parameter in the fingerprint key (ngram=3 is
-    // sigTab's), hashed with full md5 — the ivfpq-index discipline
+    // sigTab's), the shingle encoding included so a store of an earlier
+    // encoding is never picked up, hashed with full md5 — the ivfpq-index
+    // discipline
     val storeKey = graft.operators.Memo.corpusKey("sigstore", d) +
-      s"/doc_id/text/3/$nHash/not:${incNewSources.mkString(",")}"
+      s"/doc_id/text/3/$nHash/${Dedup.shingleEncoding}/not:${incNewSources.mkString(",")}"
     val storeDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_sig_store",
       new java.math.BigInteger(1, java.security.MessageDigest
@@ -448,7 +450,7 @@ object QSim {
     // corpus → different fingerprint key): base = everything except
     // the two shards
     val storeKey = graft.operators.Memo.corpusKey("sigstore-app", d) +
-      s"/doc_id/text/3/$nHash/base-not:${(appendShardSrcs ++ probeShardSrcs).mkString(",")}"
+      s"/doc_id/text/3/$nHash/${Dedup.shingleEncoding}/base-not:${(appendShardSrcs ++ probeShardSrcs).mkString(",")}"
     val storeDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_sig_store",
       new java.math.BigInteger(1, java.security.MessageDigest
@@ -498,7 +500,7 @@ object QSim {
     // a store of its OWN (compaction mutates the layout in place; the
     // append-serve query's store must keep its sig_append/ form)
     val storeKey = graft.operators.Memo.corpusKey("sigstore-cmp", d) +
-      s"/doc_id/text/3/$nHash/base-not:${(appendShardSrcs ++ probeShardSrcs).mkString(",")}"
+      s"/doc_id/text/3/$nHash/${Dedup.shingleEncoding}/base-not:${(appendShardSrcs ++ probeShardSrcs).mkString(",")}"
     val storeDir = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_sig_store",
       new java.math.BigInteger(1, java.security.MessageDigest

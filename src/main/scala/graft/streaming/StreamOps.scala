@@ -485,7 +485,7 @@ object StreamOps {
       // union size as na+nb−inter (exact: shingle sets are distinct) —
       // the minhashLsh verify identity, r14
       .withColumn("inter",
-        size(array_intersect(col("s"), col("s_old"))).cast("double"))
+        graft.operators.Dedup.shingleOverlap("s", "s_old").cast("double"))
       .withColumn("j",
         col("inter") / (size(col("s")) + size(col("s_old")) - col("inter")))
       .filter(col("j") >= threshold)

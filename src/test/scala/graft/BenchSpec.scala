@@ -1,0 +1,25 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The bench record's output routing and its `errors` object. */
+class BenchSpec extends AnyFunSuite {
+
+  test("a filtered run writes a side file unless told where to write") {
+    assert(Bench.outputPath(filtered = false, Map.empty, "/r") == "/r/BENCH_PARSED.json")
+    assert(Bench.outputPath(filtered = true, Map.empty, "/r") == "/r/BENCH_FILTERED.json")
+    val out = Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/x.json")
+    assert(Bench.outputPath(filtered = true, out, "/r") == "/tmp/x.json")
+    assert(Bench.outputPath(filtered = false, out, "/r") == "/tmp/x.json")
+  }
+
+  test("errors carry each failed query's exception class and escaped message") {
+    val js = Bench.errorsJson(Seq(
+      "q1" -> new IllegalStateException("bad \"quote\"\nline"),
+      "q2" -> new RuntimeException(null: String)))
+    assert(js == """{"q1":{"class":"java.lang.IllegalStateException",""" +
+      """"message":"bad \"quote\"\nline"},""" +
+      """"q2":{"class":"java.lang.RuntimeException","message":"null"}}""")
+    assert(Bench.errorsJson(Nil) == "{}")
+  }
+}

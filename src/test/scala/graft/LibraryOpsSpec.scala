@@ -884,26 +884,35 @@ class LibraryOpsSpec extends AnyFunSuite {
     } :+ (99L -> "x  y   z") // consecutive spaces ⇒ empty tokens
     val d = texts.toDF("id", "body")
     for ((n, k) <- Seq((3, 12), (2, 5), (1, 1))) {
-      // reference: the old plan-level formulation
+      // reference: the old plan-level formulation; the set is the
+      // shingles' raw digests, unhex(md5(..)), in Spark's binary order
       val ex = Dedup.shingles(d, "body", Seq("id"), n, dedup = false)
       val h1 = pmod(expr("conv(substring(sh, 1, 8), 16, 10)").cast("long"),
         lit(Dedup.mixM))
       val mhCols = (0 until k).map(i =>
         min(pmod(col("h1") * lit(Dedup.mixA(i)) + lit(Dedup.mixB(i)),
           lit(Dedup.mixM))).as(s"mh$i"))
+      // byte arrays compare by reference: hex-spell both sides' sets
+      // for the comparison (the ORDER compared is the binary one)
+      def hexes(r: org.apache.spark.sql.Row, i: Int) =
+        r.getSeq[Array[Byte]](i).map(_.map(b => f"${b & 0xff}%02x").mkString)
       val want = ex.withColumn("h1", h1).groupBy("id")
-        .agg(collect_set(col("sh")).as("s"), mhCols: _*)
-        .collect().map(r => (r.getLong(0),
-          r.getSeq[String](1).sorted,
+        .agg(sort_array(collect_set(unhex(col("sh")))).as("s"), mhCols: _*)
+        .collect().map(r => (r.getLong(0), hexes(r, 1),
           (0 until k).map(i => r.getLong(2 + i)))).sortBy(_._1).toSeq
       val got = d.select(col("id"),
           expr(s"graft_minhash_sig(body, $n, $k)").as("ms"))
         .filter(col("ms").isNotNull)
         .select(col("id"), col("ms.shs"), col("ms.sig"))
-        .collect().map(r => (r.getLong(0),
-          r.getSeq[String](1).sorted,
+        .collect().map(r => (r.getLong(0), hexes(r, 1),
           r.getSeq[Long](2))).sortBy(_._1).toSeq
       assert(got == want, s"(ngram=$n nHash=$k)")
+      // the emitted set is sorted + distinct as emitted (the verify
+      // kernel's input contract), and its hex spellings are the md5s
+      assert(got.forall { case (_, s, _) => s == s.sorted && s.distinct == s })
+      val md5s = ex.groupBy("id").agg(sort_array(collect_set(col("sh"))).as("s"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      assert(got.forall { case (id, s, _) => md5s(id) == s })
     }
   }
 
@@ -991,6 +1000,10 @@ class LibraryOpsSpec extends AnyFunSuite {
     val d = docs((7L, "g", "a b c d"))
     val r = TextOps.fingerprint(d, "id", "body", n = 2).collect()(0)
     assert(r.getLong(1) == 3) // 4 tokens -> 3 bigrams
+    // the fingerprint is the smallest lowercase-hex shingle md5
+    val minMd5 = Dedup.shingles(d, "body", Seq("id"), 2)
+      .agg(min(col("sh"))).head().getString(0)
+    assert(r.getString(2) == minMd5)
   }
 
   test("TextOps.patternFlags counts per pattern and NULL text stays NULL") {
@@ -2315,6 +2328,47 @@ class LibraryOpsSpec extends AnyFunSuite {
     StoreFs.createMarker(spark, s"$dir/sig") // restore for any later walk
     assert(!Dedup.compactMinhashSigStore(spark, dir))
     assert(StoreFs.datasetComplete(spark, s"$dir/meta"))
+  }
+
+  test("a signature store of another shingle encoding is refused by serve, append and compact") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven")).toDF("id", "body")
+    val shard = Seq((10L, "alpha beta gamma delta epsilon zeta eta kappa"))
+      .toDF("id", "body")
+    val dir = java.nio.file.Files.createTempDirectory("graft-sig-enc").toString
+    Dedup.writeMinhashSigStore(corpus, "id", "body", dir, ngram = 3, nHash = 8)
+    val meta = spark.read.parquet(s"$dir/meta").head()
+    assert(meta.getAs[String]("encoding") == Dedup.shingleEncoding)
+    val sigType = spark.read.parquet(s"$dir/sig").schema("s").dataType
+    assert(sigType.sql == "ARRAY<BINARY>", s"sig/ s is $sigType")
+    Dedup.appendMinhashSigStore(dir, shard, "id", "body", shardId = "day1")
+    // the meta/ of a store written before the encoding was recorded:
+    // same structural fields, no `encoding` (its sig/ held hex strings)
+    Seq(("id", "body", 3, 8)).toDF("id_col", "text_col", "ngram", "n_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/meta"))
+    def refused(what: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(Dedup.shingleEncoding) &&
+        e.getMessage.contains("none recorded"), s"$what: ${e.getMessage}")
+    }
+    refused("serve")(Dedup.searchMinhashSigStore(dir, shard, "id", "body"))
+    refused("append")(Dedup.appendMinhashSigStore(dir, shard, "id", "body",
+      shardId = "day2"))
+    refused("compact")(Dedup.compactMinhashSigStore(spark, dir))
+    // nothing moved: the refused compaction left the append in place
+    assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/sig_append/day1"))
+    // a hand-built signature table with hex-string shingle sets is
+    // refused by name too, before the verify kernel's type check
+    val hexTab = Dedup.minhashSigTable(corpus, "id", "body", nHash = 8)
+      .withColumn("s", transform(col("s"), x => lower(hex(x))))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minhashLsh(corpus, "id", "body", nHash = 8, sigTable = Some(hexTab))
+    }
+    assert(e.getMessage.contains(Dedup.shingleEncoding) &&
+      e.getMessage.contains("ARRAY<STRING>"), e.getMessage)
   }
 
   test("sizedForWrite: tiny frames land as one file, big targets keep the width") {

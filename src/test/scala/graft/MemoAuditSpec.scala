@@ -147,6 +147,24 @@ class MemoAuditSpec extends AnyFunSuite {
       val third = Memo.cachedCorpus(key)(fail("post-eviction hit must not rebuild"))
       assert(third.collect().map(_.toSeq).toSet == expected,
         "post-eviction serve from the written table diverged")
+
+      // a signature table's array<binary> shingle sets round-trip the
+      // written table exactly (compared hex-spelled: byte arrays compare
+      // by reference)
+      import org.apache.spark.sql.functions.{col, hex, transform}
+      import graft.operators.Dedup
+      def docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four five"))
+        .toDF("doc_id", "text")
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("doc_id"), transform(col("s"), x => hex(x)), col("mh0"), col("mh1"))
+        .collect().map(_.toSeq).toSet
+      val sigKey = "tok:/spec/spill-sig@0ddba11"
+      val sigWritten = Dedup.minhashSigTable(docs, "doc_id", "text", nHash = 2,
+        memoKey = Some(sigKey))
+      assert(Memo.report.exists(e => e.key.startsWith(sigKey) &&
+        e.storage.startsWith("written:")), "signature table was not written")
+      assert(rows(sigWritten) == rows(Dedup.minhashSigTable(docs, "doc_id", "text",
+        nHash = 2)), "written signature table diverged from the built frame")
     } finally {
       spark.conf.unset(conf)
       Memo.clear()

@@ -217,4 +217,13 @@ class MomentsAggSpec extends AnyFunSuite {
       assert(byG(g)._4.forall(_.isNaN) && byG(g)._5.forall(_.isNaN), s"group $g flood")
     }
   }
+
+  test("typed-aggregator output encoders are built once per JVM") {
+    // Encoders.product derives by Scala reflection; Spark asks for the
+    // encoder in every task, so a per-access build re-ran that per task
+    assert(new MomentsAgg(2).outputEncoder eq new MomentsAgg(5).outputEncoder)
+    val w = graft.functions.WilcoxonSignedRank
+    assert(w.outputEncoder eq w.outputEncoder)
+    assert(w.bufferEncoder eq w.bufferEncoder)
+  }
 }

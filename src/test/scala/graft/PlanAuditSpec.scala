@@ -235,6 +235,58 @@ class PlanAuditSpec extends AnyFunSuite {
         s"no longer hint-flagged (update the list): ${intentional -- offenders}")
   }
 
+  test("no plan applies array_intersect to binary elements") {
+    // Spark's array_intersect hashes only element types with a proper
+    // equals; byte[] has none, so over array<binary> it falls back to a
+    // nested loop per row. Shingle sets are array<binary>, and their
+    // overlap goes through the merge kernel (Dedup.shingleOverlap) —
+    // a consumer that reaches for array_intersect instead fails here.
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.types.{ArrayType, BinaryType}
+    // descend into cached frames (memo entries hide their producer's
+    // plan) and AQE wrappers
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodes(a.inputPlan)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    def binaryIntersects(df: org.apache.spark.sql.DataFrame): Int =
+      nodes(df.queryExecution.executedPlan).map(_.expressions.map(_.collect {
+        case ai: ArrayIntersect if (ai.left.dataType match {
+          case ArrayType(BinaryType, _) => true
+          case _ => false
+        }) => ai
+      }.size).sum).sum
+    // the detector sees the construct it guards against (over a range,
+    // not literal rows, which the optimizer would evaluate away)
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{array, array_intersect, hex, unhex}
+    val probe = spark.range(2).select(array(unhex(hex($"id"))).as("a"))
+      .select(array_intersect($"a", $"a"))
+    assert(binaryIntersects(probe) == 1)
+    val offenders = Q.registry
+      .filterNot(q => q.name.startsWith("stream_") || q.buildExecutes)
+      .filter(q => binaryIntersects(q.build(spark, s"${Q.testdataRoot}/sf0.001")) > 0)
+      .map(_.name)
+    assert(offenders.isEmpty,
+      s"array_intersect over binary elements (nested-loop fallback): $offenders")
+    // the plans the registry walk skips: the ingest-time near-dup plan
+    // (over a batch frame — its streaming build executes) and the
+    // signature-store serve (its registry queries write a store in build)
+    import graft.operators.Dedup
+    import graft.streaming.StreamOps
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta epsilon eta")).toDF("doc_id", "text")
+    assert(binaryIntersects(StreamOps.nearDupPlan(docs, StreamOps.nearDupIndex(docs))) == 0)
+    val sigDir = java.nio.file.Files.createTempDirectory("graft-audit-bin").toString
+    Dedup.writeMinhashSigStore(docs, "doc_id", "text", sigDir, nHash = 8)
+    assert(binaryIntersects(Dedup.searchMinhashSigStore(sigDir,
+      docs.withColumn("doc_id", $"doc_id" + 10), "doc_id", "text")) == 0)
+  }
+
   test("j1_skewed_segment joins on the deterministic salt") {
     val plan = Q.registry.find(_.name == "j1_skewed_segment").get
       .build(spark, s"${Q.testdataRoot}/sf0.001")
