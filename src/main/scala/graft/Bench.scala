@@ -34,8 +34,9 @@ import org.apache.spark.sql.SparkSession
   * matters: an immediate raw shot reads the pass's trailing async
   * unpersist/GC, ~3× the idle floor, so it used to flag every honest
   * recording). "canary_ratio" (end/start) near 1.0 means a steady
-  * machine; either leg far off the historical band (~0.07 s at
-  * local[32], idle), a ratio outside [0.67, 1.5], or a pass canary
+  * machine; either leg far off the idle band for the record's
+  * `cpus` (~0.07 s on 32 cores, ~0.1 s on 4), a ratio outside
+  * [0.67, 1.5], or a pass canary
   * far above both endpoints (≳1.5×) marks the recording suspect —
   * re-run rather than trust it. Reduced sensitivity, stated plainly:
   * because the pass canary is a settled median-of-3, the ≳1.5× rule
@@ -107,6 +108,12 @@ object Bench {
         s""""message":"${esc(String.valueOf(e.getMessage))}"}"""
     }.mkString("{", ",", "}")
 
+  /** The fields that open both the full record and the closing summary
+    * line. `cpus` is the session's core count: totals recorded at
+    * different core counts do not compare. */
+  private[graft] def headJson(total: Double, failed: Int, cpus: Int): String =
+    f""""metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"cpus":$cpus"""
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) Double.NaN
@@ -116,12 +123,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.coreCount()
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     // JVM/codegen warm-up on the smallest sf so per-query numbers
     // measure the plan, not first-call compilation.
@@ -257,7 +261,7 @@ object Bench {
     val loadSuspect = canaryRatio < 0.67 || canaryRatio > 1.5 ||
       passCanaries.exists(c => c >= 1.5 * math.max(canaryStart, canaryEnd))
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$nFailed,"total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"errors":$errs,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
+      "{" + headJson(total, nFailed, cpus) + f""","total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"errors":$errs,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
     println(full)
     // The full line (~3 KB at 86 queries) outgrows the harness's 2000-char
     // output tail, so per-query numbers also go to a FILE, and the very
@@ -269,7 +273,7 @@ object Bench {
     val slowest = results.collect { case (k, ts) if ts.nonEmpty => (k, ts.min) }
       .sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$nFailed,"canary_ratio":$canaryRatio%.3f,"sf":"${esc(sfDir)}","queries_file":"${esc(outPath)}","slowest":$slowest}""")
+    println("{" + headJson(total, nFailed, cpus) + f""","canary_ratio":$canaryRatio%.3f,"sf":"${esc(sfDir)}","queries_file":"${esc(outPath)}","slowest":$slowest}""")
     spark.stop()
   }
 }

@@ -259,8 +259,19 @@ object GraftSession {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Standalone session for tests / benchmarks. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Core count of a session built by [[local]]: `SPARK_GRAFT_CPUS`
+    * when set, else the host's processor count. A set value that is not
+    * a positive integer is refused, by name, rather than falling back. */
+  private[graft] def coreCount(env: Map[String, String] = sys.env,
+      available: Int = Runtime.getRuntime.availableProcessors()): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(available) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** The one session recipe of every main and test:
+    * `local[cores]` with the standard configuration above. */
+  def local(cores: Int = coreCount()): SparkSession = {
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName("graft"),
       cores.toString

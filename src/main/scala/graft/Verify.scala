@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,11 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }

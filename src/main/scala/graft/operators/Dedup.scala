@@ -81,6 +81,34 @@ object Dedup {
   def shingleOverlap(a: String, b: String): org.apache.spark.sql.Column =
     expr(s"graft_sorted_intersect_size($a, $b)")
 
+  /** The exact Jaccard verify of the MinHash family (batch,
+    * incremental and streaming): keeps the candidate rows whose
+    * shingle-set columns `a` and `b` reach |A∩B| / |A∪B| ≥ `threshold`
+    * and returns `keep` plus `jaccard`, rounded to 6 places (the
+    * threshold sees the raw value). |A∪B| is na+nb−inter, NOT
+    * array_distinct(concat(..)): `s` is a distinct set by construction,
+    * so the identity is exact and the division operands are identical —
+    * the concat form built and hashed a ~2·|s|-element array per pair.
+    * Join order and hints stay with the caller, which owns the plan. */
+  private[graft] def jaccardVerify(cand: DataFrame, a: String, b: String,
+      threshold: Double, keep: String*): DataFrame =
+    cand.withColumn("inter", shingleOverlap(a, b).cast("double"))
+      .withColumn("j",
+        col("inter") / (size(col(a)) + size(col(b)) - col("inter")))
+      .filter(col("j") >= threshold)
+      .select(keep.map(col) :+ round(col("j"), 6).as("jaccard"): _*)
+
+  /** The degenerate-corpus guard's drop list for a banded frame: the
+    * (band, bkey) buckets holding more than `maxBucket` rows, which
+    * the caller anti-joins away before its candidate join (see
+    * [[minhashLsh]]'s `maxBucket`). Shared by the batch, incremental
+    * and streaming operators, so what the guard drops is decided in
+    * one place. */
+  private[graft] def overCapBuckets(bands: DataFrame, maxBucket: Long): DataFrame =
+    bands.groupBy("band", "bkey")
+      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
+      .select("band", "bkey")
+
   /** Provenance stamped on `s`: ngram, textCol and the encoding are
     * INVISIBLE in the data (shingles are hashes), so without it a
     * consumer called with a mismatched ngram would silently compute the
@@ -569,17 +597,9 @@ object Dedup {
       // side through one driver broadcast (an OOM shape at real corpus
       // sizes); hash-partitioned on the doc key, AQE broadcasts the
       // pair frame instead and the arrays move once, in parallel.
-      // |A∪B| as na+nb−inter, NOT array_distinct(concat(..)): `s` is a
-      // distinct set by construction, so the identity is exact and the
-      // integer division operands are identical — the concat form built
-      // and hashed a ~2·|s|-element array per candidate pair.
-      cand.join(sb.hint("shuffle_hash"), "doc_b")
-        .join(sa.hint("shuffle_hash"), "doc_a")
-        .withColumn("inter", shingleOverlap("s_a", "s_b").cast("double"))
-        .withColumn("j",
-          col("inter") / (size(col("s_a")) + size(col("s_b")) - col("inter")))
-        .filter(col("j") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
+      jaccardVerify(cand.join(sb.hint("shuffle_hash"), "doc_b")
+          .join(sa.hint("shuffle_hash"), "doc_a"),
+        "s_a", "s_b", threshold, "doc_a", "doc_b")
     }
     memoKey match {
       case Some(mk) => Memo.cached(
@@ -652,12 +672,10 @@ object Dedup {
     val bandsAll = perDoc
       .select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val overCap = bandsAll.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select("band", "bkey")
     // guarding ONE side suffices: a pair needs both endpoints in the
     // bucket, so an empty a-side kills every pair of an over-cap bucket
-    val bands = bandsAll.join(overCap, Seq("band", "bkey"), "left_anti")
+    val bands = bandsAll.join(overCapBuckets(bandsAll, maxBucket),
+      Seq("band", "bkey"), "left_anti")
     val candRows = bands.as("a").join(bandsAll.as("b"),
         col("a.bkey") === col("b.bkey") && col("a.band") === col("b.band") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
@@ -719,15 +737,9 @@ object Dedup {
     // broadcast join (shard-sized build) instead of re-exchanging.
     // The a-first order carried s_a arrays into the b-join's exchange —
     // ~5 KB per candidate row of shuffle the arithmetic never needed.
-    // Union size as na+nb−inter (exact: `s` is a distinct set) — the
-    // concat/array_distinct form built a 2·|s|-element array per pair.
-    cand.join(sb.hint("shuffle_hash"), "doc_other").join(sa, "doc_new")
-      .withColumn("inter", shingleOverlap("s_a", "s_b").cast("double"))
-      .withColumn("j",
-        col("inter") / (size(col("s_a")) + size(col("s_b")) - col("inter")))
-      .filter(col("j") >= threshold)
-      .select(col("doc_new"), col("doc_other"), col("other_is_new"),
-        round(col("j"), 6).as("jaccard"))
+    jaccardVerify(
+      cand.join(sb.hint("shuffle_hash"), "doc_other").join(sa, "doc_new"),
+      "s_a", "s_b", threshold, "doc_new", "doc_other", "other_is_new")
   }
 
   /** The banded candidate stage of [[minhashLshIncremental]] alone:
@@ -791,13 +803,10 @@ object Dedup {
       .select(col(idCol), col("is_new"), explode(array(bandStructs: _*)).as("bb"))
       .select(col(idCol), col("is_new"),
         col("bb.band").as("band"), col("bb.bkey").as("bkey")))
-    val overCap = bandsAll.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select("band", "bkey")
     // guard the NEW side only: every emitted pair has a new endpoint,
     // so an empty new side kills all pairs of an over-cap bucket
     val bandsNew = bandsAll.filter(col("is_new"))
-      .join(overCap, Seq("band", "bkey"), "left_anti")
+      .join(overCapBuckets(bandsAll, maxBucket), Seq("band", "bkey"), "left_anti")
     val candRows = bandsNew.as("a").join(bandsAll.as("b"),
         col("a.bkey") === col("b.bkey") && col("a.band") === col("b.band") &&
           // old partner: any order (pair surfaces once, new side first);
@@ -1217,7 +1226,7 @@ object Dedup {
     // row-local projection of a caller-supplied (cached) per-doc
     // frame: re-deriving that per join side measured faster than
     // materializing 2.6M exploded rows at the 10x bench scale
-    // (jaccard 5.1 → 4.1 s, containment neutral — tools.ProfileDedup,
+    // (jaccard 5.1 → 4.1 s, containment neutral — a per-stage split,
     // r13; the simhash probe frame took the same treatment). The
     // INLINE text path persists regardless — Catalyst does not CSE
     // across self-join branches, so an unpersisted base would run the
@@ -1325,7 +1334,7 @@ object Dedup {
     * never fewer; the island window sorts only a pair's matches on one
     * diagonal. All-integer arithmetic end to end.
     *
-    * Cost floor, decomposed at the 10x bench scale (tools.ProfileDedup,
+    * Cost floor, decomposed at the 10x bench scale (a per-stage split,
     * r14 — the committed adjudication of the query's ~4.3 s): k-gram
     * md5 pass 1.9 s (30M token-window hashes, row-local — the md5 is
     * the oracle-portable contract), df window gate +0.75 s (one
@@ -1488,7 +1497,7 @@ object Dedup {
     * at the base and at every same-bit flip, bw + 1 = up to 29 times —
     * and the r6–r12 form emitted every meeting and collapsed them with
     * a distinct, which at sf1 meant materializing and shuffling 28.2M
-    * join rows to keep 2.4M pairs (profiled via tools.ProfileDedup;
+    * join rows to keep 2.4M pairs (a per-stage split, r13;
     * this predicate took the query 12.2 → ~6 s). The join now keeps
     * exactly ONE meeting per pair, decided row-locally from the two
     * carried base prefixes (D = base_a XOR base_b): if popcount(D) ≤ 1
@@ -1566,7 +1575,7 @@ object Dedup {
     // width aggregate once. Materializing the (bw + 1)-fanned probe
     // rows instead was measured ~1.1 s SLOWER per run at the 10x bench
     // scale (cache write of 1.45M wide rows beats three cheap
-    // re-explodes — tools.ProfileDedup, r13).
+    // re-explodes — a per-stage split, r13).
     val pr =
       sh.crossJoin(broadcast(observedBucketWidth(sh, probeBits, targetBucketSize)))
         .withColumn("base", expr("simhash div CAST(pow(2, 32 - bw) AS BIGINT)"))
@@ -1838,7 +1847,7 @@ object Dedup {
     // probe arrays) was MEASURED A LOSS here and deliberately not
     // taken: observed meeting multiplicity is only ~1.15× (4.37M
     // candidate rows for 3.80M distinct pairs at the 10x bench scale —
-    // tools.ProfileDedup), so the per-match intersect cost exceeded
+    // a per-stage split, r13), so the per-match intersect cost exceeded
     // the few duplicate cosines it saved (full query 5.3 → 7.3 s).
     // simhash's predicate pays because its multiplicity is ~11×.
     // Threshold applies to the RAW cosine (rounding is display-only),

@@ -53,8 +53,8 @@ object Graphs {
     * graph frame derived from a 100 TB corpus. Results are identical
     * either way (spec-proven row identity); only fault tolerance and
     * checkpoint IO differ — and the IO half is MEASURED, not assumed:
-    * tools.ProfileCkpt at sf0.1 (memo off, 5 reps, co-purchase graph)
-    * reads pageRank 4.94/4.07 s and LPA 4.42/4.13 s min wall-clock for
+    * at sf0.1 in r13 (memo off, 5 reps, co-purchase graph), pageRank
+    * took 4.94/4.07 s and LPA 4.42/4.13 s min wall-clock for
     * local/reliable — the reliable mode's directory writes are
     * indistinguishable from localCheckpoint's block writes for
     * node-sized graph frames (within rep noise; the reliable legs ran

@@ -316,7 +316,7 @@ object QGaps2 {
     * both broadcast copies of the rank table); everything downstream
     * operates on those 25 rows.
     *
-    * Cost floor, decomposed (tools.ProfileP5, r15 — the adjudication of
+    * Cost floor, decomposed (a per-job split, r15 — the adjudication of
     * the r13→r14 1.46→1.59 s sf0.1 / 2.98→3.20 s sf1 watch item): warm,
     * fact→cells alone = 1.4 s sf0.1 / 2.6 s sf1 across 17 jobs — the
     * one data-proportional stage, sub-linear (1.8× on 10× data) and the

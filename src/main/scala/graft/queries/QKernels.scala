@@ -367,7 +367,7 @@ object QKernels {
     * independent numpy leg in tools/check_kernels.py re-running the
     * whole chain (segmentation re-derived in SQL, CCA in numpy).
     *
-    * Cost shape (tools.ProfileP5, r15, sf0.1 warm): the data stage —
+    * Cost shape (a per-job split, r15, sf0.1 warm): the data stage —
     * segment join + trial aggregate — is 0.6–0.9 s across 4 jobs;
     * everything downstream of the qualifying-trial frame is 17 more
     * jobs of 5-row work (stable-unit gate, region attach, moment

@@ -461,10 +461,8 @@ object StreamOps {
       sigTable: Option[DataFrame] = None): DataFrame = {
     val oldRows = graft.operators.Dedup.minhashBandRows(
       oldDocs, "doc_id", "text", nHash, bandRows, ngram, sigTable)
-    val overCap = oldRows.groupBy("band", "bkey")
-      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select("band", "bkey")
-    oldRows.join(overCap, Seq("band", "bkey"), "left_anti")
+    oldRows.join(graft.operators.Dedup.overCapBuckets(oldRows, maxBucket),
+        Seq("band", "bkey"), "left_anti")
       .select(col("band"), col("bkey"),
         col("doc_id").as("doc_old"), col("s").as("s_old"))
   }
@@ -475,21 +473,15 @@ object StreamOps {
   def nearDupPlan(arriving: DataFrame, index: DataFrame, nHash: Int = 12,
       bandRows: Int = 2, threshold: Double = 0.5, ngram: Int = 3,
       broadcastIndex: Boolean = false): DataFrame =
-    graft.operators.Dedup
-      .minhashBandRows(arriving, "doc_id", "text", nHash, bandRows, ngram)
-      .withColumnRenamed("doc_id", "doc_new")
-      .join(
-        if (broadcastIndex) broadcast(index)
-        else index.repartition(col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      // union size as na+nb−inter (exact: shingle sets are distinct) —
-      // the minhashLsh verify identity, r14
-      .withColumn("inter",
-        graft.operators.Dedup.shingleOverlap("s", "s_old").cast("double"))
-      .withColumn("j",
-        col("inter") / (size(col("s")) + size(col("s_old")) - col("inter")))
-      .filter(col("j") >= threshold)
-      .select(col("doc_new"), col("doc_old"), round(col("j"), 6).as("jaccard"))
+    graft.operators.Dedup.jaccardVerify(
+      graft.operators.Dedup
+        .minhashBandRows(arriving, "doc_id", "text", nHash, bandRows, ngram)
+        .withColumnRenamed("doc_id", "doc_new")
+        .join(
+          if (broadcastIndex) broadcast(index)
+          else index.repartition(col("band"), col("bkey")),
+          Seq("band", "bkey")),
+      "s", "s_old", threshold, "doc_new", "doc_old")
 
   final case class Ev(user_id: Long, t: Long, ts: java.sql.Timestamp)
   final case class Session(user_id: Long, session_id: Long, session_start: Long,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, Tables}
@@ -38,11 +37,7 @@ object ScaleAccounting {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleAccounting <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scale-accounting"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val lines = args.toSeq.map { sfDir =>
       // simhash: the registry query's exact parameters (QSim.simhash)

@@ -1,15 +1,15 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry}
 import graft.operators.CacheScope
 
 /** Per-STAGE attribution for the r16 "where does the task time go"
-  * question: SmallQueryProfile showed several ~2 s queries carry
-  * 25–30 s of SUMMED executor task time (wall ≈ task_sum / 32 + the
-  * job floor) — so their wall is real compute, not pure scheduling.
+  * question: a per-query job split on 32 cores showed several ~2 s
+  * queries carry 25–30 s of SUMMED executor task time (wall ≈
+  * task_sum / 32 + the job floor) — so their wall is real compute, not
+  * pure scheduling.
   * This tool names the stages that burn it.
   *
   * Method: warm the query once (memo/codegen), then run one timed rep
@@ -19,7 +19,8 @@ import graft.operators.CacheScope
   * time so the top entry IS the optimization target.
   *
   * Usage: runMain graft.tools.StageProfile <name[,name...]>
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1); the session reads
+  * SPARK_GRAFT_CPUS and SPARK_GRAFT_CONF like every other main.
   */
 object StageProfile {
 
@@ -90,16 +91,9 @@ object StageProfile {
     require(args.nonEmpty, "usage: StageProfile <name,...>")
     val names = args(0).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // A/B harness: GRAFT_EXTRA_CONF="k=v;k=v" lets a hypothesis be
-    // tested against the standard session without touching GraftSession.
-    var b = GraftSession.configure(
-      SparkSession.builder().master("local[32]").appName("graft-stageprofile"),
-      "32")
-    sys.env.get("GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b = b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // A/B a hypothesis against the standard session with
+    // SPARK_GRAFT_CONF="k=v;k=v", which GraftSession applies last.
+    val spark = GraftSession.local()
     val reg = SparkEntry.queries
     names.foreach { n =>
       val fn = reg(n)

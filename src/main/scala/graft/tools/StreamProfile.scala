@@ -1,27 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: wall-clock decomposition of one bounded streaming replay
   * (micro-batch durationMs breakdown from the progress events), to see
   * where the fixed stream floor actually goes. Not part of the driver
-  * contract. Usage: runMain graft.tools.StreamProfile <sfDir> <op> */
+  * contract. Usage: runMain graft.tools.StreamProfile <sfDir> <op>
+  * To measure the RocksDB state store's per-batch overhead against the
+  * default, run with SPARK_GRAFT_CONF set to
+  * spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val op = if (args.length > 1) args(1) else "interval_join"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-stream-profile"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb measures the cluster-scale
-    // state-store knob's per-batch overhead against the default
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      println("state store: RocksDBStateStoreProvider")
-    }
+    val spark = graft.GraftSession.local()
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new StreamingQueryListener {

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench record's output routing and its `errors` object. */
+/** The bench record's output routing, its head fields and its `errors`
+  * object. */
 class BenchSpec extends AnyFunSuite {
 
   test("a filtered run writes a side file unless told where to write") {
@@ -11,6 +12,11 @@ class BenchSpec extends AnyFunSuite {
     val out = Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/x.json")
     assert(Bench.outputPath(filtered = true, out, "/r") == "/tmp/x.json")
     assert(Bench.outputPath(filtered = false, out, "/r") == "/tmp/x.json")
+  }
+
+  test("the record and the summary line carry the session's core count") {
+    assert(Bench.headJson(12.3456, 1, 4) ==
+      """"metric":"total","value":12.346,"unit":"sec","failed":1,"cpus":4""")
   }
 
   test("errors carry each failed query's exception class and escaped message") {
