@@ -2,24 +2,25 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the whole per-document MinHash stage in
   * ONE row-local pass — `graft_minhash_sig(text, ngram, nHash)` →
-  * `struct<sig: array<bigint>, shs: array<binary>>` where `sig(i)` is
+  * `struct<sig: array<bigint>, shs: array<bigint>>` where `sig(i)` is
   * the i-th affine-mix minimum over the document's word-`ngram`
-  * shingle md5s and `shs` is the distinct shingle-md5 set as raw
-  * 16-byte digests, sorted ascending by unsigned byte order — the
-  * order Spark's BinaryType compares in, and the order of the digests'
-  * lowercase hex spellings. Sorted + distinct is the contract
-  * [[SortedIntersectSize]] verifies against; 16 bytes instead of 32 hex
-  * chars is what makes this column (the largest one the dedup family
-  * caches, persists and stores) about 40% smaller.
+  * shingle md5s and `shs` is the distinct shingle-md5 set as 2n longs:
+  * element 2k is the first 8 bytes of digest k read big-endian, element
+  * 2k+1 the last 8. The (hi, lo) pairs are distinct and sorted by
+  * unsigned (hi, lo) — the order of the digests' unsigned bytes and of
+  * their lowercase hex spellings. Sorted + distinct is the contract
+  * [[SortedIntersectSize]] verifies against. Fixed-width elements need
+  * no per-element offset slot, so a shingle costs 16 bytes in a cached
+  * frame, a shuffle or an `UnsafeRow` (an `array<binary>` of 16-byte
+  * digests paid 24).
   *
   * Why an expression and not a plan: the signature and the shingle set
   * are PER-DOCUMENT values, but the expression-convenient formulation
@@ -36,14 +37,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bit-parity contract (spec-pinned in LibraryOpsSpec against the
   * explode+groupBy formulation): tokens = `split(text, ' ')` with
   * Spark's limit −1 semantics (empty tokens kept); shingle text =
-  * `concat_ws(' ', w[i..i+n−1])`; md5 over UTF-8 bytes (the set
-  * element is `unhex(md5(..))`); h1 = top 4 digest bytes (the first 8
-  * hex chars) read unsigned, reduced mod 2³¹;
+  * `concat_ws(' ', w[i..i+n−1])`; md5 over UTF-8 bytes (the pair is
+  * `unhex(md5(..))` split into two big-endian longs); h1 = top 4 digest
+  * bytes (the first 8 hex chars) read unsigned, reduced mod 2³¹;
   * mix i = (h1·mixA(i) + mixB(i)) mod 2³¹ with the shared
   * [[graft.operators.Dedup]] constants — all intermediates < 2⁶²,
   * exactly the chain the DuckDB oracle replays. Documents with fewer
   * than `ngram` tokens return NULL (the caller's `isNotNull` filter
   * is the old `size(w) >= n` gate).
+  *
+  * Per shingle the pass allocates nothing: a space byte only ever
+  * encodes ' ', so shingle i is a byte range of the document's UTF-8
+  * bytes, digested into a reused buffer and recorded as two longs in a
+  * per-thread scratch array.
   */
 case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
     extends TernaryExpression with CodegenFallback {
@@ -66,7 +72,7 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
 
   override def dataType: DataType = StructType(Seq(
     StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("shs", ArrayType(BinaryType, containsNull = false), nullable = false)))
+    StructField("shs", ArrayType(LongType, containsNull = false), nullable = false)))
 
   override def nullable: Boolean = true
 
@@ -78,28 +84,36 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
   override def eval(input: InternalRow): Any = {
     val t = text.eval(input)
     if (t == null) return null
-    val tokens = t.asInstanceOf[UTF8String].toString.split(" ", -1)
-    if (tokens.length < n) return null
+    // decode + re-encode: ill-formed UTF-8 is replaced exactly as the
+    // split-then-encode formulation replaces it, token by token
+    val bytes = t.asInstanceOf[UTF8String].toString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var spaces = 0
+    var b = 0
+    while (b < bytes.length) { if (bytes(b) == ' ') spaces += 1; b += 1 }
+    if (spaces + 1 < n) return null
+    val shingles = spaces + 2 - n
+    val sc = MinhashSig.scratch.get().reserve(spaces + 1, shingles)
+    // ends(w) = the byte index just past token w
+    val ends = sc.ends
+    var w = 0
+    b = 0
+    while (b < bytes.length) { if (bytes(b) == ' ') { ends(w) = b; w += 1 }; b += 1 }
+    ends(w) = bytes.length
     val m = graft.operators.Dedup.mixM
     val mins = Array.fill(k)(Long.MaxValue)
-    val digs = new Array[Array[Byte]](tokens.length - n + 1)
-    val md = MinhashSig.digest.get()
-    val sb = new java.lang.StringBuilder()
+    val pairs = sc.pairs
+    val md = sc.md
     var i = 0
-    while (i <= tokens.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(tokens(i + j))
-        j += 1
-      }
-      md.reset()
-      val dig = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      digs(i) = dig
+    while (i < shingles) {
+      val from = if (i == 0) 0 else ends(i - 1) + 1
+      md.update(bytes, from, ends(i + n - 1) - from)
+      md.digest(sc.dig, 0, 16)
+      val hi = sc.digBuf.getLong(0)
+      pairs(2 * i) = hi
+      pairs(2 * i + 1) = sc.digBuf.getLong(8)
       // first 8 hex chars = top 4 digest bytes, unsigned, mod 2^31
-      val h1 = (((dig(0) & 0xFFL) << 24) | ((dig(1) & 0xFFL) << 16) |
-        ((dig(2) & 0xFFL) << 8) | (dig(3) & 0xFFL)) % m
+      val h1 = (hi >>> 32) % m
       var x = 0
       while (x < k) {
         val v = (h1 * as(x) + bs(x)) % m
@@ -108,8 +122,10 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
       }
       i += 1
     }
+    val distinct = MinhashSig.sortDistinct(pairs, sc.tmp, shingles)
     new GenericInternalRow(Array[Any](
-      new GenericArrayData(mins), new GenericArrayData(MinhashSig.sortedDistinct(digs))))
+      UnsafeArrayData.fromPrimitiveArray(mins),
+      UnsafeArrayData.fromPrimitiveArray(pairs, Platform.LONG_ARRAY_OFFSET, 2 * distinct, 8)))
   }
 
   override protected def withNewChildrenInternal(
@@ -120,30 +136,61 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
 }
 
 object MinhashSig {
-  /** MD5 instances are not thread-safe and expressions may be shared
-    * across tasks — one digest per thread. */
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
+  /** Per-thread working state: MD5 instances are not thread-safe and
+    * expressions may be shared across tasks. The arrays grow to the
+    * largest document a thread has seen and are reused after that. */
+  private final class Scratch {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val dig = new Array[Byte](16)
+    val digBuf: java.nio.ByteBuffer = java.nio.ByteBuffer.wrap(dig) // big-endian
+    var ends = new Array[Int](64)
+    var pairs = new Array[Long](128)
+    var tmp = new Array[Long](128)
+
+    def reserve(tokens: Int, shingles: Int): Scratch = {
+      if (ends.length < tokens) ends = new Array[Int](math.max(tokens, 2 * ends.length))
+      if (pairs.length < 2 * shingles) {
+        val len = math.max(2 * shingles, 2 * pairs.length)
+        pairs = new Array[Long](len); tmp = new Array[Long](len)
+      }
+      this
+    }
   }
 
-  private val unsignedOrder: java.util.Comparator[Array[Byte]] =
-    (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+  private val scratch = new ThreadLocal[Scratch] {
+    override def initialValue(): Scratch = new Scratch
+  }
 
-  /** The distinct digests of `digs` in unsigned byte order (`digs` is
-    * sorted and compacted in place). */
-  private def sortedDistinct(digs: Array[Array[Byte]]): Array[Any] = {
-    java.util.Arrays.sort(digs, unsignedOrder)
+  /** Sorts the first `count` (hi, lo) pairs of `p` by unsigned (hi, lo)
+    * and compacts away repeats; returns the number of distinct pairs.
+    * `tmp` is merge scratch of at least `2 · count` longs. */
+  private def sortDistinct(p: Array[Long], tmp: Array[Long], count: Int): Int = {
+    sort(p, tmp, 0, count)
     var m = 0
     var i = 0
-    while (i < digs.length) {
-      if (m == 0 || !java.util.Arrays.equals(digs(i), digs(m - 1))) {
-        digs(m) = digs(i); m += 1
+    while (i < count) {
+      if (m == 0 || p(2 * i) != p(2 * m - 2) || p(2 * i + 1) != p(2 * m - 1)) {
+        p(2 * m) = p(2 * i); p(2 * m + 1) = p(2 * i + 1); m += 1
       }
       i += 1
     }
-    val out = new Array[Any](m)
-    System.arraycopy(digs, 0, out, 0, m)
-    out
+    m
   }
+
+  /** Merge sort of pairs [from, until) by unsigned (hi, lo). */
+  private def sort(p: Array[Long], tmp: Array[Long], from: Int, until: Int): Unit =
+    if (until - from > 1) {
+      val mid = (from + until) >>> 1
+      sort(p, tmp, from, mid)
+      sort(p, tmp, mid, until)
+      var i = from; var j = mid; var o = from
+      while (o < until) {
+        val takeLeft = j >= until || (i < mid && SortedIntersect.comparePairs(
+          p(2 * i), p(2 * i + 1), p(2 * j), p(2 * j + 1)) <= 0)
+        val s = if (takeLeft) { i += 1; i - 1 } else { j += 1; j - 1 }
+        tmp(2 * o) = p(2 * s); tmp(2 * o + 1) = p(2 * s + 1)
+        o += 1
+      }
+      System.arraycopy(tmp, 2 * from, p, 2 * from, 2 * (until - from))
+    }
 }

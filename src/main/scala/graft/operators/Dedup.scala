@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Reusable corpus-deduplication operators (the LLM-training-data
   * extension set). DataFrame-in → DataFrame-out, schema-parameterized —
@@ -65,21 +66,31 @@ object Dedup {
 
   /** The shingle-set encoding of the signature family — recorded in the
     * column metadata of `s` and in a signature store's `meta/`: each
-    * shingle is its raw 16-byte MD5 digest (`unhex(md5(shingle))`), and
-    * a document's set is an `array<binary>` sorted ascending by unsigned
-    * byte order, duplicates removed ([[graft.functions.MinhashSig]]).
-    * MD5 is kept whole, so every pair, Jaccard value and count is exact;
-    * the sorted form is what [[shingleOverlap]]'s merge reads. A store
-    * or table carrying another encoding (the 32-char hex strings of
-    * earlier builds) is refused, never misread. */
-  val shingleEncoding = "md5-bin16-sorted"
+    * shingle is its 16-byte MD5 digest (`unhex(md5(shingle))`) held as
+    * two big-endian longs, and a document's set is one `array<bigint>`
+    * of 2n longs — element 2k the first 8 bytes of digest k, element
+    * 2k+1 the last 8 — with the (hi, lo) pairs distinct and sorted by
+    * unsigned (hi, lo) ([[graft.functions.MinhashSig]]). MD5 is kept
+    * whole, so every pair, Jaccard value and count is exact; the sorted
+    * form is what [[shingleOverlap]]'s merge reads. A store or table
+    * carrying another encoding ([[retiredShingleEncoding]]'s
+    * `array<binary>` digests, or the 32-char hex strings before it) is
+    * refused, never misread. */
+  val shingleEncoding = "md5-i64x2-sorted"
+
+  /** The encoding [[shingleEncoding]] replaced: the same sorted digests,
+    * one 16-byte `binary` element each. Named in the refusal messages. */
+  val retiredShingleEncoding = "md5-bin16-sorted"
 
   /** |A ∩ B| of two shingle-set columns in [[shingleEncoding]]: one
-    * allocation-free merge per row (`graft_sorted_intersect_size`).
-    * `size(array_intersect(..))` would fall back to a nested loop over
-    * binary elements, which have no hashable `equals`. */
+    * allocation-free merge per row (`graft_sorted_intersect_size`). */
   def shingleOverlap(a: String, b: String): org.apache.spark.sql.Column =
     expr(s"graft_sorted_intersect_size($a, $b)")
+
+  /** |A| of a shingle-set column in [[shingleEncoding]]: two longs per
+    * digest. */
+  private[graft] def shingleCount(c: String): org.apache.spark.sql.Column =
+    size(col(c)) / 2
 
   /** The exact Jaccard verify of the MinHash family (batch,
     * incremental and streaming): keeps the candidate rows whose
@@ -94,7 +105,7 @@ object Dedup {
       threshold: Double, keep: String*): DataFrame =
     cand.withColumn("inter", shingleOverlap(a, b).cast("double"))
       .withColumn("j",
-        col("inter") / (size(col(a)) + size(col(b)) - col("inter")))
+        col("inter") / (shingleCount(a) + shingleCount(b) - col("inter")))
       .filter(col("j") >= threshold)
       .select(keep.map(col) :+ round(col("j"), 6).as("jaccard"): _*)
 
@@ -121,8 +132,8 @@ object Dedup {
 
   /** Per-document minhash SIGNATURE TABLE — the tokenize/shingle stage
     * of the text-dedup family factored out once: (idCol, carry...,
-    * s: array<binary> — the distinct shingle-md5 set in
-    * [[shingleEncoding]], mh0..mh{nHash−1}
+    * s: array<bigint> — the distinct shingle-md5 set as sorted (hi, lo)
+    * pairs, [[shingleEncoding]], mh0..mh{nHash−1}
     * — the affine-mix minima). Documents with fewer than `ngram`
     * tokens are dropped (NULL signature), exactly as in the inline
     * stages it replaces.
@@ -185,28 +196,31 @@ object Dedup {
     * derived table is the one you WRITE instead of caching). Two
     * datasets under `dir`:
     *
-    *  - `sig/` (id, s: array<binary>, mh0..mh{nHash−1}: bigint): one
-    *    row per corpus document — its distinct shingle-md5 set (raw
-    *    16-byte digests, sorted: [[shingleEncoding]]) and its minhash
-    *    signature. The only corpus-sized dataset; NO raw text rides
-    *    along, so serving jobs never touch the corpus text again.
+    *  - `sig/` (id, s: array<bigint>, mh0..mh{nHash−1}: bigint): one
+    *    row per corpus document — its distinct shingle-md5 set (each
+    *    digest two big-endian longs, pairs sorted: [[shingleEncoding]])
+    *    and its minhash signature. The only corpus-sized dataset; NO
+    *    raw text rides along, so serving jobs never touch the corpus
+    *    text again.
     *  - `meta/` (id_col, text_col, ngram, n_hash, encoding): one row of
     *    structural parameters — they are INVISIBLE in the signature
     *    data (shingles are hashes), so the store carries them
     *    explicitly and [[searchMinhashSigStore]] validates/derives from
     *    them instead of trusting the caller. `encoding` is
     *    [[shingleEncoding]]; serve, append and compact refuse a store
-    *    whose `meta/` records another encoding or none (a store written
-    *    before the field existed holds hex strings). Written LAST: a
-    *    `meta/_SUCCESS` marker implies the whole store landed, which is
-    *    what skip-if-exists callers should test.
+    *    whose `meta/` records another encoding (one written as
+    *    [[retiredShingleEncoding]] holds `array<binary>` digests) or
+    *    none (a store written before the field existed holds hex
+    *    strings). Written LAST: a `meta/_SUCCESS` marker implies the
+    *    whole store landed, which is what skip-if-exists callers should
+    *    test.
     *
     * `sigTable`: a pre-built (typically memoized) [[minhashSigTable]]
     * of the SAME docs/textCol/ngram with at least `nHash` minhashes —
     * the text stage is then skipped and the store is a projection of
-    * it. Shingle sets and signatures round-trip Parquet exactly
-    * (binary and longs), so a serve over the store is row-identical
-    * to the inline incremental chain — proven through the oracle gate
+    * it. Shingle sets and signatures round-trip Parquet exactly (all
+    * longs), so a serve over the store is row-identical to the inline
+    * incremental chain — proven through the oracle gate
     * by the `dedup_sig_store_serve` registry query.
     *
     * REWRITE protocol: on an overwrite of an existing store the old
@@ -214,7 +228,14 @@ object Dedup {
     * invariant holds only for the first write, and a skip-if-exists
     * gate (or a concurrent serve) observing the stale marker would
     * read a half-rewritten `sig/`. With the marker bracketing the
-    * rewrite, `meta/_SUCCESS` ⇒ the whole store landed, always. */
+    * rewrite, `meta/_SUCCESS` ⇒ the whole store landed, always.
+    *
+    * Store size: Parquet dictionary-encodes each INT64 half on its own,
+    * which on a small corpus dedups repeated digests less well than a
+    * dictionary of whole 16-byte BINARY digests did (sf0.1: 1.12 →
+    * 1.50 MB). At corpus scale the 1 MB dictionary page overflows and
+    * Parquet falls back to PLAIN, where two INT64 halves (16 B) are
+    * smaller than a length-prefixed BINARY digest (20 B). */
   def writeMinhashSigStore(docs: DataFrame, idCol: String, textCol: String,
       dir: String, ngram: Int = 3, nHash: Int = 12,
       sigTable: Option[DataFrame] = None): Unit = {
@@ -239,19 +260,29 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
+  /** The fixed schema of a store's `meta/`, which only
+    * [[writeMinhashSigStore]] writes: reading with it skips Parquet's
+    * schema-inference job, and a field the files lack reads as NULL. */
+  private val storeMetaSchema = StructType(Seq(
+    StructField("id_col", StringType), StructField("text_col", StringType),
+    StructField("ngram", IntegerType), StructField("n_hash", IntegerType),
+    StructField("encoding", StringType)))
+
   /** The store's `meta/` row, refused unless it records
-    * [[shingleEncoding]]: a store of another encoding (or of none — one
-    * written before `meta/` had the field, holding hex strings) would
-    * be misread by every consumer of `s`. */
+    * [[shingleEncoding]] and every structural field: a store of another
+    * encoding (or of none — one written before `meta/` had the field,
+    * holding hex strings) would be misread by every consumer of `s`,
+    * and a missing `n_hash` must never read as 0 minhashes. */
   private def storeMeta(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): org.apache.spark.sql.Row = {
-    val meta = spark.read.parquet(s"$storeDir/meta").head()
-    val enc =
-      if (meta.schema.fieldNames.contains("encoding")) meta.getAs[String]("encoding")
-      else "none recorded"
+    val meta = spark.read.schema(storeMetaSchema).parquet(s"$storeDir/meta").head()
+    val enc = Option(meta.getAs[String]("encoding")).getOrElse("none recorded")
     require(enc == shingleEncoding,
       s"store at $storeDir has shingle encoding '$enc', this engine reads " +
         s"'$shingleEncoding' — rebuild the store with writeMinhashSigStore")
+    storeMetaSchema.fieldNames.foreach(f => require(!meta.isNullAt(meta.fieldIndex(f)),
+      s"store at $storeDir records no '$f' in meta/ — rebuild the store " +
+        "with writeMinhashSigStore"))
     meta
   }
 
@@ -428,7 +459,7 @@ object Dedup {
     if (!StoreFs.datasetComplete(spark, s"$storeDir/shards_compacted")) return
     if (!StoreFs.dataFilesPresent(spark, s"$storeDir/meta")) return
     val meta =
-      try spark.read.parquet(s"$storeDir/meta").head()
+      try storeMeta(spark, storeDir)
       catch { case scala.util.control.NonFatal(_) => return }
     val sigCols = spark.read.parquet(s"$storeDir/sig").columns.toSet
     val n = meta.getAs[Int]("n_hash")
@@ -1186,9 +1217,9 @@ object Dedup {
       s"carry columns must be distinct from blockCols/idCol, got $carry")
     // The distinct shingle set and its size are PER-DOCUMENT values, so
     // they come from the row-local native MinhashSig pass (shs is its
-    // distinct-md5 set as 16-byte digests — one-to-one with the hex
-    // md5s of shingles(), so the binary join keys match exactly the
-    // pairs the hex keys did):
+    // distinct-md5 set as (hi, lo) long pairs — one-to-one with the hex
+    // md5s of shingles(), so the (sh_hi, sh_lo) join keys match exactly
+    // the pairs the hex keys did):
     // the exploded index frame is a pure projection of the input — no
     // corpus-wide distinct shuffle and no per-doc count window before
     // the join, the same structural win minhashLsh took. (The earlier
@@ -1201,24 +1232,31 @@ object Dedup {
     // text stage with a projection of the memoized frame.
     val keep = blockCols ++ carry
     sigTable.foreach(requireSigProvenance(_, ngram, textCol))
-    val base = sigTable match {
-      case Some(st) => st.select((col(idCol) +: keep.map(col) :+
-        size(col("s")).cast("long").as("n") :+
-        explode(col("s")).as("sh")): _*)
+    val sets = sigTable match {
+      case Some(st) => st.select((col(idCol) +: keep.map(col) :+ col("s")): _*)
       case None => docs
         .select((col(idCol) +: keep.map(col) :+
           expr(s"graft_minhash_sig($textCol, $ngram, 1)").as("ms")): _*)
         .filter(col("ms").isNotNull)
-        .select((col(idCol) +: keep.map(col) :+
-          size(col("ms.shs")).cast("long").as("n") :+
-          explode(col("ms.shs")).as("sh")): _*)
+        .select((col(idCol) +: keep.map(col) :+ col("ms.shs").as("s")): _*)
     }
+    // one index row per digest, keyed by both halves: k walks the
+    // 1-based position of each pair's hi (an empty set explodes NULL,
+    // i.e. no rows — sequence(1, -1, 2) would be refused)
+    val base = sets
+      .select((col(idCol) +: keep.map(col) :+ col("s") :+
+        shingleCount("s").cast("long").as("n") :+
+        explode(when(size(col("s")) > 0,
+          sequence(lit(1), size(col("s")) - 1, lit(2)))).as("k")): _*)
+      .select((col(idCol) +: keep.map(col) :+ col("n") :+
+        element_at(col("s"), col("k")).as("sh_hi") :+
+        element_at(col("s"), col("k") + 1).as("sh_lo")): _*)
     val capped = maxDf match {
       case Some(cap) =>
         require(cap >= 1, s"ngramJaccard needs maxDf >= 1, got $cap")
         base
           .withColumn("df", count(lit(1)).over(
-            Window.partitionBy(("sh" +: blockCols).map(col): _*)))
+            Window.partitionBy((Seq("sh_hi", "sh_lo") ++ blockCols).map(col): _*)))
           .filter(col("df") <= cap).drop("df")
       case None => base
     }
@@ -1234,7 +1272,7 @@ object Dedup {
     // WINDOW chain (running that twice re-shuffles the shingle stream).
     val ex = if (maxDf.isDefined || sigTable.isEmpty) CacheScope.persist(capped)
       else capped
-    val joinCond = (Seq("sh") ++ blockCols)
+    val joinCond = (Seq("sh_hi", "sh_lo") ++ blockCols)
       .map(c => col(s"a.$c") === col(s"b.$c"))
       .reduce(_ && _) && col(s"a.$idCol") < col(s"b.$idCol")
     // SHUFFLE_HASH on the b side (r14, the dedup-family discipline): on
@@ -1718,19 +1756,20 @@ object Dedup {
     * (the shingle hashes themselves cannot reveal a mismatch — the
     * failure mode is a silently wrong-n similarity measure). Hand-built
     * frames carry no metadata and pass those checks, but `s` must be an
-    * `array<binary>` whatever its origin: the hex-string sets of earlier
-    * builds are refused here, by name, rather than in the verify
-    * kernel's type check. */
+    * `array<bigint>` whatever its origin: the `array<binary>` digests of
+    * [[retiredShingleEncoding]] and the hex-string sets before it are
+    * refused here, by name, rather than in the verify kernel's type
+    * check. */
   private def requireSigProvenance(st: DataFrame, ngram: Int,
       textCol: String): Unit =
     st.schema.fields.find(_.name == "s").foreach { f =>
-      import org.apache.spark.sql.types.{ArrayType, BinaryType}
       require(f.dataType match {
-          case ArrayType(BinaryType, _) => true
+          case ArrayType(LongType, _) => true
           case _ => false
         },
         s"sigTable column s is ${f.dataType.sql}; the shingle encoding " +
-          s"'$shingleEncoding' needs array<binary>")
+          s"'$shingleEncoding' needs ARRAY<BIGINT> (ARRAY<BINARY> is the " +
+          s"retired '$retiredShingleEncoding' layout — rebuild the table)")
       if (f.metadata.contains("graft_shingle_encoding"))
         require(f.metadata.getString("graft_shingle_encoding") == shingleEncoding,
           s"sigTable was built with shingle encoding " +

@@ -100,8 +100,8 @@ object Memo {
     * corpus changes [[corpusKey]]'s fingerprint and therefore the
     * directory, making staleness structurally impossible. Row-identity
     * with the cached posture is pinned by MemoAuditSpec (signature
-    * columns are longs and `array<binary>` shingle sets of 16-byte
-    * digests — Parquet INT64 and BINARY, both exact round-trips). */
+    * columns are longs and shingle sets `array<bigint>` digest halves —
+    * Parquet INT64, an exact round-trip). */
   def cachedCorpus(key: String)(build: => DataFrame): DataFrame =
     corpusSpillRoot match {
       case Some(root) => writtenCorpus(root, key)(build)

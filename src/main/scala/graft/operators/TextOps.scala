@@ -475,18 +475,20 @@ object TextOps {
     * PROJECTION: the occurrence count is token arithmetic and the min
     * md5 rides the row-local native minhash expression (the overall
     * min equals the distinct-set min) — no explode, no groupBy
-    * shuffle. The expression's set holds raw 16-byte digests; their
-    * unsigned byte order is the order of their lowercase hex
-    * spellings, so the hex of the binary minimum is the hex minimum. */
+    * shuffle. The expression's set is sorted (hi, lo) digest pairs in
+    * unsigned order, the order of their lowercase hex spellings, so the
+    * minimum is pair 0, spelled as two zero-padded 16-digit halves. */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame =
+      n: Int = 3): DataFrame = {
+    def half(i: Int) = lpad(hex(element_at(col("ms.shs"), i)), 16, "0")
     docs
       .select(col(idCol),
         (size(split(col(textCol), " ")) - n + 1).cast("long").as("n_shingles"),
         expr(s"graft_minhash_sig($textCol, $n, 1)").as("ms"))
       .filter(col("ms").isNotNull)
       .select(col(idCol), col("n_shingles"),
-        lower(hex(array_min(col("ms.shs")))).as("fingerprint"))
+        lower(concat(half(1), half(2))).as("fingerprint"))
+  }
 
   /** Per-document bigram-LM negative log-likelihood with add-α
     * smoothing — the CCNet-style perplexity signal (Wenzek et al.

@@ -885,21 +885,25 @@ class LibraryOpsSpec extends AnyFunSuite {
     val d = texts.toDF("id", "body")
     for ((n, k) <- Seq((3, 12), (2, 5), (1, 1))) {
       // reference: the old plan-level formulation; the set is the
-      // shingles' raw digests, unhex(md5(..)), in Spark's binary order
+      // shingles' distinct hex md5s, sorted (string order = unsigned
+      // digest order)
       val ex = Dedup.shingles(d, "body", Seq("id"), n, dedup = false)
       val h1 = pmod(expr("conv(substring(sh, 1, 8), 16, 10)").cast("long"),
         lit(Dedup.mixM))
       val mhCols = (0 until k).map(i =>
         min(pmod(col("h1") * lit(Dedup.mixA(i)) + lit(Dedup.mixB(i)),
           lit(Dedup.mixM))).as(s"mh$i"))
-      // byte arrays compare by reference: hex-spell both sides' sets
-      // for the comparison (the ORDER compared is the binary one)
-      def hexes(r: org.apache.spark.sql.Row, i: Int) =
-        r.getSeq[Array[Byte]](i).map(_.map(b => f"${b & 0xff}%02x").mkString)
       val want = ex.withColumn("h1", h1).groupBy("id")
-        .agg(sort_array(collect_set(unhex(col("sh")))).as("s"), mhCols: _*)
-        .collect().map(r => (r.getLong(0), hexes(r, 1),
+        .agg(sort_array(collect_set(col("sh"))).as("s"), mhCols: _*)
+        .collect().map(r => (r.getLong(0), r.getSeq[String](1),
           (0 until k).map(i => r.getLong(2 + i)))).sortBy(_._1).toSeq
+      // the emitted set is 2n longs: each (hi, lo) pair, spelled as two
+      // zero-padded 16-digit halves, must be one md5 — in the same order
+      def hexes(r: org.apache.spark.sql.Row, i: Int) = {
+        val longs = r.getSeq[Long](i)
+        assert(longs.size % 2 == 0, s"odd-length set $longs")
+        longs.grouped(2).map { case Seq(hi, lo) => f"$hi%016x$lo%016x" }.toSeq
+      }
       val got = d.select(col("id"),
           expr(s"graft_minhash_sig(body, $n, $k)").as("ms"))
         .filter(col("ms").isNotNull)
@@ -908,11 +912,8 @@ class LibraryOpsSpec extends AnyFunSuite {
           r.getSeq[Long](2))).sortBy(_._1).toSeq
       assert(got == want, s"(ngram=$n nHash=$k)")
       // the emitted set is sorted + distinct as emitted (the verify
-      // kernel's input contract), and its hex spellings are the md5s
+      // kernel's input contract)
       assert(got.forall { case (_, s, _) => s == s.sorted && s.distinct == s })
-      val md5s = ex.groupBy("id").agg(sort_array(collect_set(col("sh"))).as("s"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      assert(got.forall { case (id, s, _) => md5s(id) == s })
     }
   }
 
@@ -1004,6 +1005,17 @@ class LibraryOpsSpec extends AnyFunSuite {
     val minMd5 = Dedup.shingles(d, "body", Seq("id"), 2)
       .agg(min(col("sh"))).head().getString(0)
     assert(r.getString(2) == minMd5)
+    // both halves keep their leading zeros and sign-bit digits: over
+    // many documents every fingerprint is the 32-digit minimum md5
+    val many = docs((1 to 300).map(i => (i.toLong, "g", s"w$i x${i % 7} y z")): _*)
+    val want = Dedup.shingles(many, "body", Seq("id"), 2).groupBy("id")
+      .agg(min(col("sh"))).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val fps = TextOps.fingerprint(many, "id", "body", n = 2).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(fps == want)
+    assert(fps.values.exists(_.startsWith("0")) && fps.values.exists(_.charAt(16) == '0'))
+    assert(fps.values.exists(h => Integer.parseInt(h.substring(0, 1), 16) >= 8) &&
+      fps.values.exists(h => Integer.parseInt(h.substring(16, 17), 16) >= 8))
   }
 
   test("TextOps.patternFlags counts per pattern and NULL text stays NULL") {
@@ -2342,33 +2354,81 @@ class LibraryOpsSpec extends AnyFunSuite {
     val meta = spark.read.parquet(s"$dir/meta").head()
     assert(meta.getAs[String]("encoding") == Dedup.shingleEncoding)
     val sigType = spark.read.parquet(s"$dir/sig").schema("s").dataType
-    assert(sigType.sql == "ARRAY<BINARY>", s"sig/ s is $sigType")
+    assert(sigType.sql == "ARRAY<BIGINT>", s"sig/ s is $sigType")
     Dedup.appendMinhashSigStore(dir, shard, "id", "body", shardId = "day1")
-    // the meta/ of a store written before the encoding was recorded:
-    // same structural fields, no `encoding` (its sig/ held hex strings)
-    Seq(("id", "body", 3, 8)).toDF("id_col", "text_col", "ngram", "n_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/meta"))
-    def refused(what: String)(f: => Any): Unit = {
+    def refused(what: String, recorded: String)(f: => Any): Unit = {
       val e = intercept[IllegalArgumentException](f)
       assert(e.getMessage.contains(Dedup.shingleEncoding) &&
-        e.getMessage.contains("none recorded"), s"$what: ${e.getMessage}")
+        e.getMessage.contains(recorded), s"$what: ${e.getMessage}")
     }
-    refused("serve")(Dedup.searchMinhashSigStore(dir, shard, "id", "body"))
-    refused("append")(Dedup.appendMinhashSigStore(dir, shard, "id", "body",
-      shardId = "day2"))
-    refused("compact")(Dedup.compactMinhashSigStore(spark, dir))
-    // nothing moved: the refused compaction left the append in place
-    assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/sig_append/day1"))
-    // a hand-built signature table with hex-string shingle sets is
-    // refused by name too, before the verify kernel's type check
-    val hexTab = Dedup.minhashSigTable(corpus, "id", "body", nHash = 8)
-      .withColumn("s", transform(col("s"), x => lower(hex(x))))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.minhashLsh(corpus, "id", "body", nHash = 8, sigTable = Some(hexTab))
+    // the meta/ of a store written in the retired binary-digest layout,
+    // and of one written before the encoding was recorded (same
+    // structural fields, no `encoding`; its sig/ held hex strings)
+    val retired = Seq(("id", "body", 3, 8, Dedup.retiredShingleEncoding))
+      .toDF("id_col", "text_col", "ngram", "n_hash", "encoding")
+    val unrecorded = Seq(("id", "body", 3, 8)).toDF("id_col", "text_col", "ngram", "n_hash")
+    for ((oldMeta, recorded) <- Seq(retired -> s"'${Dedup.retiredShingleEncoding}'",
+        unrecorded -> "none recorded")) {
+      oldMeta.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/meta"))
+      refused("serve", recorded)(Dedup.searchMinhashSigStore(dir, shard, "id", "body"))
+      refused("append", recorded)(Dedup.appendMinhashSigStore(dir, shard, "id", "body",
+        shardId = "day2"))
+      refused("compact", recorded)(Dedup.compactMinhashSigStore(spark, dir))
+      // nothing moved: the refused compaction left the append in place
+      assert(graft.operators.StoreFs.datasetComplete(spark, s"$dir/sig_append/day1"))
     }
-    assert(e.getMessage.contains(Dedup.shingleEncoding) &&
-      e.getMessage.contains("ARRAY<STRING>"), e.getMessage)
+    // hand-built signature tables in either earlier layout — binary
+    // digests, hex strings — are refused by name too, before the verify
+    // kernel's type check
+    val halves = Dedup.minhashSigTable(corpus, "id", "body", nHash = 8)
+    def digestHex(k: org.apache.spark.sql.Column) =
+      lower(concat(lpad(hex(element_at(col("s"), k)), 16, "0"),
+        lpad(hex(element_at(col("s"), k + 1)), 16, "0")))
+    val steps = sequence(lit(1), size(col("s")) - 1, lit(2))
+    for ((oldSet, typ) <- Seq(transform(steps, k => unhex(digestHex(k))) -> "ARRAY<BINARY>",
+        transform(steps, digestHex(_)) -> "ARRAY<STRING>")) {
+      val oldTab = halves.withColumn("s", oldSet)
+      assert(oldTab.schema("s").dataType.sql == typ)
+      val e = intercept[IllegalArgumentException] {
+        Dedup.minhashLsh(corpus, "id", "body", nHash = 8, sigTable = Some(oldTab))
+      }
+      assert(e.getMessage.contains(Dedup.shingleEncoding) &&
+        e.getMessage.contains(typ) && e.getMessage.contains(Dedup.retiredShingleEncoding),
+        e.getMessage)
+    }
+  }
+
+  test("a signature store whose meta/ lacks a field is refused by name") {
+    import spark.implicits._
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("id", "body")
+    val shard = Seq((10L, "alpha beta gamma delta epsilon zeta eta kappa"))
+      .toDF("id", "body")
+    val dir = java.nio.file.Files.createTempDirectory("graft-sig-meta").toString
+    Dedup.writeMinhashSigStore(corpus, "id", "body", dir, ngram = 3, nHash = 8)
+    val full = Seq(("id", "body", 3, 8, Dedup.shingleEncoding))
+      .toDF("id_col", "text_col", "ngram", "n_hash", "encoding")
+    for (missing <- Seq("id_col", "text_col", "ngram", "n_hash")) {
+      full.drop(missing).coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains(s"'$missing'"), s"$what: ${e.getMessage}")
+      }
+      refused("serve")(Dedup.searchMinhashSigStore(dir, shard, "id", "body"))
+      refused("append")(Dedup.appendMinhashSigStore(dir, shard, "id", "body",
+        shardId = "day1"))
+    }
+    // a NULL n_hash is refused, never read as 0 minhashes
+    Seq[(String, String, Int, Option[Int], String)](
+        ("id", "body", 3, None, Dedup.shingleEncoding))
+      .toDF("id_col", "text_col", "ngram", "n_hash", "encoding")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    assert(intercept[IllegalArgumentException](
+      Dedup.searchMinhashSigStore(dir, shard, "id", "body")).getMessage.contains("'n_hash'"))
+    // the complete row serves again
+    full.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    Dedup.searchMinhashSigStore(dir, shard, "id", "body").collect()
   }
 
   test("sizedForWrite: tiny frames land as one file, big targets keep the width") {

@@ -148,16 +148,17 @@ class MemoAuditSpec extends AnyFunSuite {
       assert(third.collect().map(_.toSeq).toSet == expected,
         "post-eviction serve from the written table diverged")
 
-      // a signature table's array<binary> shingle sets round-trip the
-      // written table exactly (compared hex-spelled: byte arrays compare
-      // by reference)
-      import org.apache.spark.sql.functions.{col, hex, transform}
+      // a signature table's array<bigint> shingle sets (digest halves)
+      // round-trip the written table exactly, as the same type
+      import org.apache.spark.sql.functions.col
       import graft.operators.Dedup
       def docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four five"))
         .toDF("doc_id", "text")
-      def rows(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("doc_id"), transform(col("s"), x => hex(x)), col("mh0"), col("mh1"))
-        .collect().map(_.toSeq).toSet
+      def rows(df: org.apache.spark.sql.DataFrame) = {
+        assert(df.schema("s").dataType.sql == "ARRAY<BIGINT>", df.schema("s").dataType)
+        df.select(col("doc_id"), col("s"), col("mh0"), col("mh1"))
+          .collect().map(_.toSeq).toSet
+      }
       val sigKey = "tok:/spec/spill-sig@0ddba11"
       val sigWritten = Dedup.minhashSigTable(docs, "doc_id", "text", nHash = 2,
         memoKey = Some(sigKey))

@@ -235,15 +235,20 @@ class PlanAuditSpec extends AnyFunSuite {
         s"no longer hint-flagged (update the list): ${intentional -- offenders}")
   }
 
-  test("no plan applies array_intersect to binary elements") {
-    // Spark's array_intersect hashes only element types with a proper
-    // equals; byte[] has none, so over array<binary> it falls back to a
-    // nested loop per row. Shingle sets are array<binary>, and their
-    // overlap goes through the merge kernel (Dedup.shingleOverlap) —
-    // a consumer that reaches for array_intersect instead fails here.
+  test("shingle sets stay array<bigint> and never meet array_intersect in any plan") {
+    // Shingle sets — in a plan that builds or verifies them, the array
+    // columns s and shs and the verify sides s_a, s_b, s_old — are
+    // array<bigint> digest halves (Dedup.shingleEncoding), and their
+    // overlap goes through the merge kernel (Dedup.shingleOverlap).
+    // array_intersect over one counts halves, not digests, whatever the
+    // element type; a set in another type is a layout the kernel and
+    // the signature store refuse. (Kernel queries carry an unrelated
+    // array<double> `s`; their plans build no shingle sets.)
     import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.types.{ArrayType, BinaryType}
+    import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
+    import graft.functions.{MinhashSig, SortedIntersectSize}
+    val setNames = Set("s", "shs", "s_a", "s_b", "s_old")
     // descend into cached frames (memo entries hide their producer's
     // plan) and AQE wrappers
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -253,26 +258,49 @@ class PlanAuditSpec extends AnyFunSuite {
         nodes(m.relation.cachedPlan)
       case _ => p.children.flatMap(nodes)
     })
-    def binaryIntersects(df: org.apache.spark.sql.DataFrame): Int =
-      nodes(df.queryExecution.executedPlan).map(_.expressions.map(_.collect {
-        case ai: ArrayIntersect if (ai.left.dataType match {
-          case ArrayType(BinaryType, _) => true
-          case _ => false
-        }) => ai
-      }.size).sum).sum
-    // the detector sees the construct it guards against (over a range,
+    // the shingle-set arrays a column carries, itself or as a struct field
+    def sets(name: String, t: DataType): Seq[(String, ArrayType)] = t match {
+      case a: ArrayType if setNames(name) => Seq(name -> a)
+      case st: StructType => st.fields.toSeq.flatMap(f => sets(f.name, f.dataType))
+      case _ => Nil
+    }
+    def handlesSets(ns: Seq[SparkPlan]): Boolean = ns.exists(p =>
+      p.expressions.exists(_.exists {
+        case _: MinhashSig | _: SortedIntersectSize => true
+        case _ => false
+      }) || p.output.exists(_.metadata.contains("graft_shingle_encoding")))
+    def violations(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val ns = nodes(df.queryExecution.executedPlan)
+      if (!handlesSets(ns)) Nil else ns.flatMap { p =>
+        p.output.flatMap(a => sets(a.name, a.dataType)).collect {
+          case (n, t) if t.elementType != LongType => s"$n: ${t.sql}"
+        } ++ p.expressions.flatMap(_.collect {
+          case ai: ArrayIntersect
+              if ai.references.exists(a => sets(a.name, a.dataType).nonEmpty) =>
+            s"array_intersect over ${ai.references.map(_.name).mkString(", ")}"
+        })
+      }.distinct
+    }
+    // the detector sees each construct it guards against (over a range,
     // not literal rows, which the optimizer would evaluate away)
     import spark.implicits._
-    import org.apache.spark.sql.functions.{array, array_intersect, hex, unhex}
-    val probe = spark.range(2).select(array(unhex(hex($"id"))).as("a"))
-      .select(array_intersect($"a", $"a"))
-    assert(binaryIntersects(probe) == 1)
+    import org.apache.spark.sql.functions.{array, array_intersect, expr, hex, struct, unhex}
+    // a frame whose plan builds shingle sets (the marker column) next to `set`
+    def withSets(set: org.apache.spark.sql.Column) = spark.range(2)
+      .select(set, expr("graft_minhash_sig(cast(id AS string), 1, 1)").as("ms"))
+    assert(violations(withSets(array($"id", $"id").as("s"))
+      .select(array_intersect($"s", $"s"), $"ms")).exists(_.startsWith("array_intersect")))
+    assert(violations(withSets(array(unhex(hex($"id"))).as("s"))) == Seq("s: ARRAY<BINARY>"))
+    assert(violations(withSets(struct(array(hex($"id")).as("shs")).as("t"))) ==
+      Seq("shs: ARRAY<STRING>"))
+    assert(violations(withSets(array($"id", $"id").as("s"))).isEmpty)
+    // outside a shingle-set plan an array named s is not a set
+    assert(violations(spark.range(2).select(array($"id".cast("double")).as("s"))).isEmpty)
     val offenders = Q.registry
       .filterNot(q => q.name.startsWith("stream_") || q.buildExecutes)
-      .filter(q => binaryIntersects(q.build(spark, s"${Q.testdataRoot}/sf0.001")) > 0)
-      .map(_.name)
-    assert(offenders.isEmpty,
-      s"array_intersect over binary elements (nested-loop fallback): $offenders")
+      .map(q => q.name -> violations(q.build(spark, s"${Q.testdataRoot}/sf0.001")))
+      .filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, s"shingle sets intersected or mistyped: $offenders")
     // the plans the registry walk skips: the ingest-time near-dup plan
     // (over a batch frame — its streaming build executes) and the
     // signature-store serve (its registry queries write a store in build)
@@ -280,11 +308,11 @@ class PlanAuditSpec extends AnyFunSuite {
     import graft.streaming.StreamOps
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon eta")).toDF("doc_id", "text")
-    assert(binaryIntersects(StreamOps.nearDupPlan(docs, StreamOps.nearDupIndex(docs))) == 0)
-    val sigDir = java.nio.file.Files.createTempDirectory("graft-audit-bin").toString
+    assert(violations(StreamOps.nearDupPlan(docs, StreamOps.nearDupIndex(docs))).isEmpty)
+    val sigDir = java.nio.file.Files.createTempDirectory("graft-audit-sets").toString
     Dedup.writeMinhashSigStore(docs, "doc_id", "text", sigDir, nHash = 8)
-    assert(binaryIntersects(Dedup.searchMinhashSigStore(sigDir,
-      docs.withColumn("doc_id", $"doc_id" + 10), "doc_id", "text")) == 0)
+    assert(violations(Dedup.searchMinhashSigStore(sigDir,
+      docs.withColumn("doc_id", $"doc_id" + 10), "doc_id", "text")).isEmpty)
   }
 
   test("j1_skewed_segment joins on the deterministic salt") {

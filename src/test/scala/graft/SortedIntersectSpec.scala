@@ -7,27 +7,32 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SortedIntersect
 
 /** `graft_sorted_intersect_size` — the merge kernel of the minhash
-  * verify step — against `size(array_intersect(..))` over the hex
-  * spellings of the same sets, and its refusal of unsorted input. */
+  * verify step, over sets of (hi, lo) digest pairs held as one
+  * `array<bigint>` — against `size(array_intersect(..))` over the hex
+  * spellings of the same sets, and its refusal of malformed input. */
 class SortedIntersectSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
 
-  private val unsigned: Ordering[Array[Byte]] =
-    (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+  private type Digest = (Long, Long)
+
+  private val unsigned: Ordering[Digest] = (x: Digest, y: Digest) =>
+    SortedIntersect.comparePairs(x._1, x._2, y._1, y._2)
+
+  private def hexOf(d: Digest): String = f"${d._1}%016x${d._2}%016x"
+
+  private def flat(set: Seq[Digest]): Seq[Long] = set.flatMap(d => Seq(d._1, d._2))
 
   /** A sorted distinct set of `n` draws from a universe of `universe`
-    * values (digest-shaped: 16 bytes, or `len` bytes when given). */
+    * digests; `salt` picks the universe (different salts share none). */
   private def randomSet(rnd: scala.util.Random, n: Int, universe: Int,
-      len: Int = 16): Seq[Array[Byte]] = {
-    val ids = Seq.fill(n)(rnd.nextInt(universe)).distinct
-    ids.map { id =>
-      val r = new scala.util.Random(id.toLong * 7919L + len)
-      Array.fill(len)(r.nextInt(256).toByte)
+      salt: Long = 0L): Seq[Digest] =
+    Seq.fill(n)(rnd.nextInt(universe)).distinct.map { id =>
+      val r = new scala.util.Random(id.toLong * 7919L + salt)
+      (r.nextLong(), r.nextLong())
     }.sorted(unsigned)
-  }
 
-  private def cases(rnd: scala.util.Random): Seq[(Seq[Array[Byte]], Seq[Array[Byte]])] = {
+  private def cases(rnd: scala.util.Random): Seq[(Seq[Digest], Seq[Digest])] = {
     val long = randomSet(rnd, 1500, 900)
     val one = randomSet(rnd, 1, 4)
     Seq(
@@ -38,41 +43,44 @@ class SortedIntersectSpec extends AnyFunSuite {
       (one, randomSet(rnd, 3, 4)),
       (long, long),
       (long, randomSet(rnd, 900, 900)),
-      // disjoint: the two universes share no draw (different lengths)
-      (randomSet(rnd, 40, 100, len = 16), randomSet(rnd, 40, 100, len = 8)),
-      // byte values above 0x7f — unsigned order, not signed
-      (Seq(Array[Byte](1), Array[Byte](0x7f), Array[Byte](-128), Array[Byte](-1)),
-        Seq(Array[Byte](0x7f), Array[Byte](-1))),
-      // prefixes order before their extensions
-      (Seq(Array[Byte](5), Array[Byte](5, 0), Array[Byte](5, 0, 0, 0, 0, 0, 0, 0, 1)),
-        Seq(Array[Byte](5, 0), Array[Byte](5, 0, 0, 0, 0, 0, 0, 0, 1)))) ++
+      // disjoint: the two universes share no draw
+      (randomSet(rnd, 40, 100, salt = 1L), randomSet(rnd, 40, 100, salt = 2L)),
+      // halves with the sign bit set order AFTER those without: unsigned
+      (Seq((1L, 0L), (Long.MaxValue, 0L), (Long.MinValue, 0L), (-1L, 0L)),
+        Seq((Long.MaxValue, 0L), (-1L, 0L))),
+      // equal hi, different lo — the lo half decides, unsigned too
+      (Seq((5L, 1L), (5L, 2L), (5L, Long.MinValue), (5L, -1L)),
+        Seq((5L, 2L), (5L, -1L), (6L, 2L)))) ++
       Seq.fill(30)((randomSet(rnd, rnd.nextInt(80), 120),
         randomSet(rnd, rnd.nextInt(80), 120)))
   }
 
-  private def frame(pairs: Seq[(Seq[Array[Byte]], Seq[Array[Byte]])]): DataFrame = {
+  private def frame(pairs: Seq[(Seq[Long], Seq[Long])]): DataFrame = {
     import spark.implicits._
     pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
   }
 
-  private def kernelVsReference(df: DataFrame): Array[(Int, Int)] =
-    df.select(
-        expr("graft_sorted_intersect_size(a, b)"),
-        size(array_intersect(transform(col("a"), x => hex(x)),
-          transform(col("b"), x => hex(x)))))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-
   test("equals size(array_intersect) over the hex spellings, codegen and interpreted") {
-    val pairs = cases(new scala.util.Random(17))
-    val df = frame(pairs)
+    import spark.implicits._
+    val sets = cases(new scala.util.Random(17))
+    // the reference's input: each digest's 32-digit hex spelling, whose
+    // string order is the unsigned (hi, lo) order the kernel expects
+    sets.foreach { case (a, b) =>
+      Seq(a, b).foreach(s => assert(s.map(hexOf) == s.map(hexOf).sorted))
+    }
+    val df = sets.zipWithIndex.map { case ((a, b), i) =>
+      (i, flat(a), flat(b), a.map(hexOf), b.map(hexOf))
+    }.toDF("i", "a", "b", "ah", "bh")
     // the kernel really is exercised: identical long sets overlap fully
-    assert(pairs.exists(p => p._1.size >= 500 && p._1 == p._2))
+    assert(sets.exists(p => p._1.size >= 500 && p._1 == p._2))
     for ((wholeStage, factory) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))) {
       spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
       spark.conf.set("spark.sql.codegen.factoryMode", factory)
       try {
-        val got = kernelVsReference(df)
-        assert(got.length == pairs.length)
+        val got = df.select(expr("graft_sorted_intersect_size(a, b)"),
+            size(array_intersect(col("ah"), col("bh"))))
+          .collect().map(r => (r.getInt(0), r.getInt(1)))
+        assert(got.length == sets.length)
         got.foreach { case (k, ref) => assert(k == ref, s"($factory) $k != $ref") }
       } finally {
         spark.conf.unset("spark.sql.codegen.wholeStage")
@@ -80,37 +88,58 @@ class SortedIntersectSpec extends AnyFunSuite {
       }
     }
     // the generic (non-row) path agrees with the in-row one
-    pairs.foreach { case (a, b) =>
-      val want = a.map(_.toSeq).toSet.intersect(b.map(_.toSeq).toSet).size
-      assert(SortedIntersect.size(new GenericArrayData(a.toArray[Any]),
-        new GenericArrayData(b.toArray[Any])) == want)
+    sets.foreach { case (a, b) =>
+      assert(SortedIntersect.size(new GenericArrayData(flat(a).toArray[Any]),
+        new GenericArrayData(flat(b).toArray[Any])) == a.toSet.intersect(b.toSet).size)
     }
   }
 
+  /** `msg` is raised on the generic path and on the in-row path. */
+  private def refuses(a: Seq[Long], b: Seq[Long], msg: String): Unit = {
+    val e = intercept[IllegalArgumentException] {
+      SortedIntersect.size(new GenericArrayData(a.toArray[Any]),
+        new GenericArrayData(b.toArray[Any]))
+    }
+    assert(e.getMessage.contains(msg), e.getMessage)
+    val e2 = intercept[Exception] {
+      frame(Seq((a, b))).select(expr("graft_sorted_intersect_size(a, b)")).collect()
+    }
+    val chain = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains(msg)),
+      s"in-row path did not refuse ($msg): $e2")
+  }
+
+  private val x = Seq(1L, 9L); private val y = Seq(2L, 0L); private val z = Seq(3L, 0L)
+
   test("throws on an input that is not strictly increasing") {
-    val x = Array[Byte](1); val y = Array[Byte](2); val z = Array[Byte](3)
-    val bad = Seq(
-      (Seq(y, x), Seq(x, y)),       // left descending at the head
-      (Seq(x, y), Seq(x, z, y)),    // right out of order mid-merge
-      (Seq(x, x), Seq(z)),          // duplicate: not STRICTLY increasing
-      (Seq(x), Seq(x, z, y)))       // out of order after the left ran out
-    bad.foreach { case (a, b) =>
-      val e = intercept[IllegalArgumentException] {
-        SortedIntersect.size(new GenericArrayData(a.toArray[Any]),
-          new GenericArrayData(b.toArray[Any]))
+    Seq(
+      (y ++ x, x ++ y),                 // left descending at the head
+      (x ++ y, x ++ z ++ y),            // right out of order mid-merge
+      (x ++ x, z),                      // duplicate pair
+      (Seq(1L, 9L, 1L, 8L), z),         // equal hi, lo descending
+      (Seq(-1L, 0L, 1L, 0L), z),        // signed order is not unsigned
+      (x, x ++ z ++ y)                  // unsorted tail after the left ran out
+    ).foreach { case (a, b) => refuses(a, b, "not strictly increasing") }
+  }
+
+  test("throws on an odd length, a NULL element, or another element type") {
+    refuses(Seq(1L, 9L, 2L), x, "odd number of elements")
+    refuses(x, Seq(5L), "odd number of elements")
+    assert(intercept[IllegalArgumentException](SortedIntersect.size(
+      new GenericArrayData(Array[Any](1L, null)), new GenericArrayData(x.toArray[Any])))
+      .getMessage.contains("NULL"))
+    val e = intercept[Exception] {
+      spark.range(1).select(expr("graft_sorted_intersect_size(array(1L, id + 2), " +
+        "array(1L, if(id = 0, null, id)))")).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NULL")), e)
+    // the analyzer refuses other element types, the retired binary one too
+    Seq("array('a')", "array(unhex('01'))").foreach { a =>
+      val e3 = intercept[Exception] {
+        spark.range(1).select(expr(s"graft_sorted_intersect_size($a, $a)")).collect()
       }
-      assert(e.getMessage.contains("not strictly increasing"))
-      val e2 = intercept[Exception](kernelVsReference(frame(Seq((a, b)))))
-      val chain = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
-      assert(chain.exists(t => String.valueOf(t.getMessage).contains("not strictly increasing")),
-        s"in-row path did not refuse unsorted input: $e2")
+      assert(e3.getMessage.contains("array<bigint>"), e3.getMessage)
     }
-    // the analyzer refuses non-binary elements
-    import spark.implicits._
-    val e3 = intercept[Exception] {
-      Seq((Seq("a"), Seq("a"))).toDF("a", "b")
-        .select(expr("graft_sorted_intersect_size(a, b)")).collect()
-    }
-    assert(e3.getMessage.contains("array<binary>"))
   }
 }

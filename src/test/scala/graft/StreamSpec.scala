@@ -350,16 +350,10 @@ class StreamSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     val st = Dedup.minhashSigTable(docs, "doc_id", "text",
       carry = Seq("source"), ngram = 3, nHash = 8)
-    // shingle sets are array<binary>: byte arrays compare by reference,
-    // so rows compare with each digest as a value-equal Seq[Byte]
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
-      case s: scala.collection.Seq[_] =>
-        s.map { case b: Array[Byte] => b.toSeq; case o => o }.toList
-      case o => o
-    }).toSet
-    val inline = rows(StreamOps.nearDupIndex(docs, nHash = 8))
-    val fromSig = rows(StreamOps.nearDupIndex(docs, nHash = 8,
-      sigTable = Some(st)))
+    val inline = StreamOps.nearDupIndex(docs, nHash = 8)
+      .collect().map(_.toSeq).toSet
+    val fromSig = StreamOps.nearDupIndex(docs, nHash = 8,
+      sigTable = Some(st)).collect().map(_.toSeq).toSet
     assert(inline == fromSig && inline.nonEmpty)
   }
 }
