@@ -109,16 +109,36 @@ object Dedup {
       .filter(col("j") >= threshold)
       .select(keep.map(col) :+ round(col("j"), 6).as("jaccard"): _*)
 
-  /** The degenerate-corpus guard's drop list for a banded frame: the
-    * (band, bkey) buckets holding more than `maxBucket` rows, which
-    * the caller anti-joins away before its candidate join (see
-    * [[minhashLsh]]'s `maxBucket`). Shared by the batch, incremental
-    * and streaming operators, so what the guard drops is decided in
-    * one place. */
-  private[graft] def overCapBuckets(bands: DataFrame, maxBucket: Long): DataFrame =
-    bands.groupBy("band", "bkey")
+  /** The degenerate-corpus guard's drop list for a bucketed frame: the
+    * buckets (distinct `keys` values — (band, bkey) for the MinHash
+    * family, the probed `bucket` for [[simhash]]) holding more than
+    * `maxBucket` rows, which the caller anti-joins away before its
+    * candidate join (see [[minhashLsh]]'s `maxBucket`). Shared by the
+    * batch, incremental, streaming and simhash operators, so what the
+    * guard drops is decided in one place. */
+  private[graft] def overCapBuckets(bucketed: DataFrame, maxBucket: Long,
+      keys: Seq[String] = Seq("band", "bkey")): DataFrame = {
+    require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
+    bucketed.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select("band", "bkey")
+      .select(keys.map(col): _*)
+  }
+
+  /** The LSH bands of a frame carrying minhash columns mh0..: `keep`
+    * plus one (band, bkey) row per band of `bandRows` consecutive
+    * minhashes, bkey their `_`-joined decimal spelling (the DuckDB
+    * oracle's spelling). One explode — a per-band union would recompute
+    * the signature stage once per band. */
+  private def explodeBands(perDoc: DataFrame, keep: Seq[String], nHash: Int,
+      bandRows: Int): DataFrame = {
+    val bandStructs = (0 until nHash / bandRows).map { b =>
+      val ks = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
+      struct(lit(b).as("band"), concat_ws("_", ks: _*).as("bkey"))
+    }
+    perDoc.select(keep.map(col) :+ explode(array(bandStructs: _*)).as("bb"): _*)
+      .select(keep.map(col) :+ col("bb.band").as("band") :+
+        col("bb.bkey").as("bkey"): _*)
+  }
 
   /** Provenance stamped on `s`: ngram, textCol and the encoding are
     * INVISIBLE in the data (shingles are hashes), so without it a
@@ -131,12 +151,15 @@ object Dedup {
       .putString("graft_shingle_encoding", shingleEncoding).build()
 
   /** Per-document minhash SIGNATURE TABLE — the tokenize/shingle stage
-    * of the text-dedup family factored out once: (idCol, carry...,
-    * s: array<bigint> — the distinct shingle-md5 set as sorted (hi, lo)
-    * pairs, [[shingleEncoding]], mh0..mh{nHash−1}
-    * — the affine-mix minima). Documents with fewer than `ngram`
-    * tokens are dropped (NULL signature), exactly as in the inline
-    * stages it replaces.
+    * of the text-dedup family, and the one place its signatures are
+    * built: (idCol, carry..., s: array<bigint> — the distinct
+    * shingle-md5 set as sorted (hi, lo) pairs, [[shingleEncoding]],
+    * mh0..mh{nHash−1} — the affine-mix minima). Documents with fewer
+    * than `ngram` tokens are dropped (NULL signature). Every consumer —
+    * the batch, incremental and band-row MinHash operators, the n-gram
+    * index, the signature store and [[TextOps.fingerprint]] — reads
+    * either a caller-supplied table or one it builds here, so the
+    * memoized and the inline paths are the same expression.
     *
     * Why it exists: the per-doc token/gram hashing is the single
     * largest shared cost of the dedup family — at sf1 the five
@@ -146,8 +169,6 @@ object Dedup {
     * how many mixes run), so ONE nHash=12 table serves the Jaccard/
     * containment consumers (which need only `s`) and the LSH/
     * incremental consumers (which need `s` + the signature) alike.
-    * Each consumer's chain stays bit-identical: they read the same
-    * `graft_minhash_sig` columns they computed inline before.
     *
     * `memoKey`: when set, the table is memoized session-wide in the
     * CORPUS tier ([[Memo.cachedCorpus]] — corpus-proportional by
@@ -241,7 +262,7 @@ object Dedup {
       sigTable: Option[DataFrame] = None): Unit = {
     val sig = sigTable match {
       case Some(st) =>
-        requireSigProvenance(st, ngram, textCol)
+        requireSigProvenance(st, textCol, Some(ngram))
         require((0 until nHash).forall(i => st.columns.contains(s"mh$i")),
           s"sigTable carries ${st.columns.count(c => c.startsWith("mh") &&
             c.drop(2).forall(_.isDigit))} minhashes, the store needs nHash=$nHash")
@@ -589,25 +610,28 @@ object Dedup {
     * flood large enough to blow the cap is precisely the boilerplate
     * exact dedup removes. With no bucket over the cap the result is
     * bit-identical to the uncapped form (the committed corpora never
-    * exceed it; the DuckDB oracle replays the same guard). */
-  /** `memoKey`: when set, the verified pair OUTPUT is memoized
+    * exceed it; the DuckDB oracle replays the same guard).
+    *
+    * `memoKey`: when set, the verified pair OUTPUT is memoized
     * session-wide ([[Memo]]) under `memoKey/params` — three registry
     * consumers (the pair report, the CC clustering, the curation
     * funnel) run the identical signature→band→verify chain on the same
     * corpus, and the pairs frame is output-sized (never larger than
     * the near-dup mass the corpus owes), so one materialization serves
-    * all. The caller's key must identify the corpus. */
-  /** `sigTable`: a pre-built [[minhashSigTable]] of the SAME docs /
+    * all. The caller's key must identify the corpus.
+    *
+    * `sigTable`: a pre-built [[minhashSigTable]] of the SAME docs /
     * textCol / ngram with nHash ≥ this call's — the tokenize stage is
     * then skipped and the per-doc frame is read straight from it
     * (typically the memoized corpus-tier table five family members
-    * share). Results are bit-identical by construction: the table IS
-    * the inline stage's output. The table is consumed by SEVERAL plan
-    * branches (bands + both verify sides) with no persist layered on
-    * top — the memoized table is already cached and a projection of it
-    * re-reads that cache; a RAW unpersisted table would re-run its
-    * text stage per branch, so persist it (or pass `memoKey` to
-    * [[minhashSigTable]]) before handing it in. */
+    * share). Results are bit-identical by construction: without one
+    * the operator builds the same table itself. A supplied table is
+    * used as-is by SEVERAL plan branches (bands + both verify sides)
+    * with no persist layered on top — the memoized table is already
+    * cached and a projection of it re-reads that cache; a RAW
+    * unpersisted table would re-run its text stage per branch, so
+    * persist it (or pass `memoKey` to [[minhashSigTable]]) before
+    * handing it in. */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
       nHash: Int = 12, bandRows: Int = 2, threshold: Double = 0.5,
       ngram: Int = 3, maxBucket: Long = defaultMaxBandBucket,
@@ -658,36 +682,17 @@ object Dedup {
   private def minhashBandParts(docs: DataFrame, idCol: String, textCol: String,
       nHash: Int, bandRows: Int, ngram: Int, maxBucket: Long,
       sigTable: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    require(maxBucket >= 2, s"minhashLsh needs maxBucket >= 2, got $maxBucket")
     // The whole shingle→md5→mix→min stage is per-document, so it runs
-    // as ONE row-local native expression (functions.MinhashSig) — the
-    // r5/r6 explode + groupBy formulations paid a corpus-wide shuffle
-    // of the (doc, shingle) stream just to reassemble rows that were
-    // row-local all along; now ZERO shuffles happen before band
-    // bucketing. Bit-identical to that formulation (spec-pinned) and
-    // to the DuckDB oracle's chain. The persist covers the three
-    // consumers of the narrow per-doc frame (bands + both verify
-    // sides) — with a caller-supplied sigTable the frame is a
-    // projection of an already-memoized table, so no scoped persist is
-    // layered on top (it would duplicate the cached bytes).
-    sigTable.foreach(requireSigProvenance(_, ngram, textCol))
-    val perDoc = sigTable match {
-      case Some(st) => st.select(col(idCol) +: col("s") +:
-        (0 until nHash).map(i => col(s"mh$i")): _*)
-      case None => CacheScope.persist(
-        docs.select(col(idCol),
-            expr(s"graft_minhash_sig($textCol, $ngram, $nHash)").as("ms"))
-          .filter(col("ms").isNotNull) // < ngram tokens: no shingles
-          .select(col(idCol) +: col("ms.shs").as("s") +:
-            (0 until nHash).map(i =>
-              element_at(col("ms.sig"), i + 1).as(s"mh$i")): _*))
-    }
-    // bands via ONE explode — a per-band union would recompute the
-    // shingle→signature pipeline once per band
-    val bandStructs = (0 until nHash / bandRows).map { b =>
-      val ks = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
-      struct(lit(b).as("band"), concat_ws("_", ks: _*).as("bkey"))
-    }
+    // as ONE row-local native expression (functions.MinhashSig) and
+    // ZERO shuffles happen before band bucketing. The persist covers
+    // the three consumers of the narrow per-doc frame (bands + both
+    // verify sides) — a caller-supplied sigTable is already memoized,
+    // so no scoped persist is layered on top (it would duplicate the
+    // cached bytes).
+    sigTable.foreach(requireSigProvenance(_, textCol, Some(ngram)))
+    val perDoc = sigTable.getOrElse(CacheScope.persist(
+        minhashSigTable(docs, idCol, textCol, Nil, ngram, nHash)))
+      .select(col(idCol) +: col("s") +: (0 until nHash).map(i => col(s"mh$i")): _*)
     // Population guard BEFORE the self-join, as an ANTI-join against
     // the over-cap bucket list: bucket populations reduce through a
     // map-side-combinable aggregate (only distinct (band, bkey) rows
@@ -700,9 +705,7 @@ object Dedup {
     // (verified: a broadcast guard costs an extra blocking job, a
     // window guard a full sort of the stream — both measured ~1.5× this
     // plan's cost at sf0.1).
-    val bandsAll = perDoc
-      .select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+    val bandsAll = explodeBands(perDoc, Seq(idCol), nHash, bandRows)
     // guarding ONE side suffices: a pair needs both endpoints in the
     // bucket, so an empty a-side kills every pair of an over-cap bucket
     val bands = bandsAll.join(overCapBuckets(bandsAll, maxBucket),
@@ -732,8 +735,9 @@ object Dedup {
     * `maxBucket` guards the new side against degenerate buckets
     * exactly as in [[minhashLsh]] (bucket population counted over ALL
     * docs — a flood of old boilerplate also disables its bucket).
-    * Output: (doc_new, doc_other, other_is_new, jaccard). */
-  /** `sigTable`: as in [[minhashLsh]] — a pre-built [[minhashSigTable]]
+    * Output: (doc_new, doc_other, other_is_new, jaccard).
+    *
+    * `sigTable`: as in [[minhashLsh]] — a pre-built [[minhashSigTable]]
     * that additionally carries `isNewCol` (typically a projection the
     * caller layers over the shared memoized table). */
   def minhashLshIncremental(docs: DataFrame, idCol: String, textCol: String,
@@ -808,32 +812,17 @@ object Dedup {
       textCol: String, isNewCol: String, nHash: Int, bandRows: Int,
       ngram: Int, maxBucket: Long,
       sigTable: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    require(maxBucket >= 2, s"minhashLshIncremental needs maxBucket >= 2, got $maxBucket")
-    sigTable.foreach(requireSigProvenance(_, ngram, textCol))
+    sigTable.foreach(requireSigProvenance(_, textCol, Some(ngram)))
     // NULL is_new coalesces to false (old corpus): left as-is it would
     // fail BOTH candidate predicates (filter(is_new) and !b.is_new each
     // evaluate NULL) and the row could never pair at all (r8 ADVICE).
-    val perDoc = sigTable match {
-      case Some(st) => st.select(col(idCol) +:
+    val perDoc = sigTable.getOrElse(CacheScope.persist(
+        minhashSigTable(docs, idCol, textCol, Seq(isNewCol), ngram, nHash)))
+      .select(col(idCol) +:
         coalesce(col(isNewCol).cast("boolean"), lit(false)).as("is_new") +:
         col("s") +: (0 until nHash).map(i => col(s"mh$i")): _*)
-      case None => CacheScope.persist(
-        docs.select(col(idCol),
-            coalesce(col(isNewCol).cast("boolean"), lit(false)).as("is_new"),
-            expr(s"graft_minhash_sig($textCol, $ngram, $nHash)").as("ms"))
-          .filter(col("ms").isNotNull)
-          .select(col(idCol) +: col("is_new") +: col("ms.shs").as("s") +:
-            (0 until nHash).map(i =>
-              element_at(col("ms.sig"), i + 1).as(s"mh$i")): _*))
-    }
-    val bandStructs = (0 until nHash / bandRows).map { b =>
-      val ks = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
-      struct(lit(b).as("band"), concat_ws("_", ks: _*).as("bkey"))
-    }
-    val bandsAll = CacheScope.persist(perDoc
-      .select(col(idCol), col("is_new"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("is_new"),
-        col("bb.band").as("band"), col("bb.bkey").as("bkey")))
+    val bandsAll = CacheScope.persist(
+      explodeBands(perDoc, Seq(idCol, "is_new"), nHash, bandRows))
     // guard the NEW side only: every emitted pair has a new endpoint,
     // so an empty new side kills all pairs of an over-cap bucket
     val bandsNew = bandsAll.filter(col("is_new"))
@@ -850,8 +839,8 @@ object Dedup {
   }
 
   /** One banded-signature row per (document, band) — the row-local
-    * minhash chain of [[minhashLsh]] (same expression, same band keys)
-    * WITHOUT the candidate join or any persist, so it runs on a
+    * minhash chain of [[minhashLsh]] (same signature table, same band
+    * keys) WITHOUT the candidate join or any persist, so it runs on a
     * STREAMING frame as well as a batch one: every stage is a
     * projection (signature expression → band explode). This is the
     * per-arrival half of ingest-time near-dup
@@ -859,38 +848,20 @@ object Dedup {
     * builds the old-corpus band index with the same call. Output:
     * (idCol, s — the shingle set for the verify step, band, bkey);
     * documents shorter than `ngram` tokens vanish (NULL signature),
-    * exactly as in the batch operators. */
-  /** `sigTable`: as in [[minhashLsh]] — a pre-built [[minhashSigTable]]
+    * exactly as in the batch operators.
+    *
+    * `sigTable`: as in [[minhashLsh]] — a pre-built [[minhashSigTable]]
     * replaces the text stage (the static-index half of ingest-time
     * near-dup reads the memoized corpus table this way; the STREAMING
     * half keeps hashing inline — a memo cannot serve rows that have
     * not arrived yet). */
   def minhashBandRows(docs: DataFrame, idCol: String, textCol: String,
       nHash: Int = 12, bandRows: Int = 2, ngram: Int = 3,
-      sigTable: Option[DataFrame] = None): DataFrame = sigTable match {
-    case Some(st) =>
-      requireSigProvenance(st, ngram, textCol)
-      val bandStructs = (0 until nHash / bandRows).map { b =>
-        val ks = (0 until bandRows).map(r => col(s"mh${b * bandRows + r}"))
-        struct(lit(b).as("band"), concat_ws("_", ks: _*).as("bkey"))
-      }
-      st.select(col(idCol), col("s"), explode(array(bandStructs: _*)).as("bb"))
-        .select(col(idCol), col("s"),
-          col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    case None =>
-      val perDoc = docs.select(col(idCol),
-          expr(s"graft_minhash_sig($textCol, $ngram, $nHash)").as("ms"))
-        .filter(col("ms").isNotNull)
-      val bandStructs = (0 until nHash / bandRows).map { b =>
-        val ks = (0 until bandRows).map(r =>
-          element_at(col("ms.sig"), b * bandRows + r + 1))
-        struct(lit(b).as("band"), concat_ws("_", ks: _*).as("bkey"))
-      }
-      perDoc
-        .select(col(idCol), col("ms.shs").as("s"),
-          explode(array(bandStructs: _*)).as("bb"))
-        .select(col(idCol), col("s"),
-          col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+      sigTable: Option[DataFrame] = None): DataFrame = {
+    sigTable.foreach(requireSigProvenance(_, textCol, Some(ngram)))
+    explodeBands(
+      sigTable.getOrElse(minhashSigTable(docs, idCol, textCol, Nil, ngram, nHash)),
+      Seq(idCol, "s"), nHash, bandRows)
   }
 
   /** Connected components over an undirected edge list — the stage that
@@ -1122,8 +1093,9 @@ object Dedup {
     * arrays (measured 5.1 → 7.2 s jaccard, 6.4 → 9.1 s containment at
     * 10x). Prefix filtering pays when candidates ≫ outputs (sparse
     * similarity); corpus DEDUP at t = 0.8 on crawl-shaped data is the
-    * opposite regime. */
-  /** `pairStats`: a pre-built [[ngramPairStats]] frame replacing the
+    * opposite regime.
+    *
+    * `pairStats`: a pre-built [[ngramPairStats]] frame replacing the
     * candidate+count stage (typically the memoized table the jaccard
     * and containment queries share). Caller contract: the stats were
     * built with `minContainment <= threshold` (J <= C always — the
@@ -1171,8 +1143,9 @@ object Dedup {
     * superset land in different bands by construction). Output:
     * (doc_sub, doc_sup, containment, jaccard) — jaccard rides along so
     * consumers can separate true near-dups (high C, high J) from
-    * asymmetric inclusions (high C, low J). */
-  /** `pairStats`: as in [[ngramJaccard]] — a pre-built
+    * asymmetric inclusions (high C, low J).
+    *
+    * `pairStats`: as in [[ngramJaccard]] — a pre-built
     * [[ngramPairStats]] frame, except containment VALIDATES the stats'
     * blocking EQUALS this call's (when the pins are present), not
     * merely no-finer: this consumer applies no further row filter, so
@@ -1216,30 +1189,19 @@ object Dedup {
     require(carry.intersect(blockCols).isEmpty && !carry.contains(idCol),
       s"carry columns must be distinct from blockCols/idCol, got $carry")
     // The distinct shingle set and its size are PER-DOCUMENT values, so
-    // they come from the row-local native MinhashSig pass (shs is its
-    // distinct-md5 set as (hi, lo) long pairs — one-to-one with the hex
-    // md5s of shingles(), so the (sh_hi, sh_lo) join keys match exactly
-    // the pairs the hex keys did):
-    // the exploded index frame is a pure projection of the input — no
-    // corpus-wide distinct shuffle and no per-doc count window before
-    // the join, the same structural win minhashLsh took. (The earlier
-    // window form re-shuffled the whole shingle stream twice just to
-    // rebuild row-local facts; its "window beats broadcast" measurement
-    // compared two post-shuffle variants, not this shuffle-free one.)
-    // A caller-supplied sigTable (a [[minhashSigTable]] carrying
-    // blockCols — `shs` is nHash-invariant, so the shared nHash=12
-    // table serves this nHash-free consumer identically) replaces the
-    // text stage with a projection of the memoized frame.
+    // they come from the signature table's `s` (distinct md5s as
+    // (hi, lo) long pairs — one-to-one with the hex md5s of shingles(),
+    // so the (sh_hi, sh_lo) join keys match exactly the pairs the hex
+    // keys did): the exploded index frame is a pure projection of the
+    // input — no corpus-wide distinct shuffle and no per-doc count
+    // window before the join, the same structural win minhashLsh took.
+    // `s` is nHash-invariant, so a caller's shared nHash=12 table
+    // serves this nHash-free consumer exactly as the nHash=1 table
+    // built here does.
     val keep = blockCols ++ carry
-    sigTable.foreach(requireSigProvenance(_, ngram, textCol))
-    val sets = sigTable match {
-      case Some(st) => st.select((col(idCol) +: keep.map(col) :+ col("s")): _*)
-      case None => docs
-        .select((col(idCol) +: keep.map(col) :+
-          expr(s"graft_minhash_sig($textCol, $ngram, 1)").as("ms")): _*)
-        .filter(col("ms").isNotNull)
-        .select((col(idCol) +: keep.map(col) :+ col("ms.shs").as("s")): _*)
-    }
+    sigTable.foreach(requireSigProvenance(_, textCol, Some(ngram)))
+    val sets = sigTable.getOrElse(minhashSigTable(docs, idCol, textCol, keep, ngram, 1))
+      .select((col(idCol) +: keep.map(col) :+ col("s")): _*)
     // one index row per digest, keyed by both halves: k walks the
     // 1-based position of each pair's hi (an empty set explodes NULL,
     // i.e. no rows — sequence(1, -1, 2) would be refused)
@@ -1549,8 +1511,9 @@ object Dedup {
     * WWW 2007 — was measured as the alternative: its fixed 16-bit
     * two-block keys admitted 27.4M mostly-false candidates on the same
     * corpus, because concentration demands the ADAPTIVE key width.)
-    * Output: (doc_a, doc_b, hamming), one row per pair. */
-  /** `maxBucket` is the degenerate-corpus guard (analog of
+    * Output: (doc_a, doc_b, hamming), one row per pair.
+    *
+    * `maxBucket` is the degenerate-corpus guard (analog of
     * [[minhashLsh]]'s cap): the width rule keeps HONEST bucket
     * populations near `targetBucketSize`, but IDENTICAL signatures
     * (10⁶ copies of one boilerplate doc) collapse into one bucket no
@@ -1585,25 +1548,17 @@ object Dedup {
     *
     * `sigTable`: a pre-built [[simhashSigTable]] of the same docs /
     * textCol — the signature stage is then read from it (typically the
-    * memoized corpus-tier table) instead of re-hashing the text. */
+    * memoized corpus-tier table) instead of re-hashing the text. As in
+    * [[minhashLsh]], a supplied table is used as-is by the four
+    * consumers below, so a RAW one should be persisted (or memoized)
+    * before it is handed in; inline signatures are scope-persisted. */
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       probeBits: Int = 16, targetBucketSize: Int = 256,
       maxBucket: Long = defaultMaxBandBucket,
       sigTable: Option[DataFrame] = None): DataFrame = {
-    require(maxBucket >= 2, s"simhash needs maxBucket >= 2, got $maxBucket")
-    // textCol provenance pin, as in requireSigProvenance: the simhash
-    // value cannot reveal which column it hashed
-    sigTable.foreach(_.schema.fields.find(_.name == "simhash").foreach { f =>
-      if (f.metadata.contains("graft_text_col"))
-        require(f.metadata.getString("graft_text_col") == textCol,
-          s"sigTable was built over '${f.metadata.getString("graft_text_col")}', " +
-            s"this call expects '$textCol'")
-    })
-    // a caller-supplied table is usually the memoized corpus-tier frame
-    // (already persisted); a RAW one would otherwise re-run the whole
-    // signature stage once per consumer (four below), so it gets the
-    // scoped persist the inline path always had
-    val sh = sigTable.map(scopedIfUncached).getOrElse(
+    // the simhash value cannot reveal which column it hashed
+    sigTable.foreach(requireSigProvenance(_, textCol, pinned = "simhash"))
+    val sh = sigTable.getOrElse(
       CacheScope.persist(simhashSignatures(docs, idCol, textCol)))
     // The probe frame is deliberately NOT persisted: its three
     // consumers (population aggregate, anti-join survivor side, join
@@ -1624,10 +1579,8 @@ object Dedup {
     // population guard BEFORE the self-join (minhashLsh's anti-join
     // shape: aggregate, anti-join and candidate join all key on
     // `bucket`, so the exchange is reused; guarding one side suffices)
-    val overCap = pr.groupBy("bucket")
-      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select("bucket")
-    val prG = pr.join(overCap, Seq("bucket"), "left_anti")
+    val prG = pr.join(overCapBuckets(pr, maxBucket, Seq("bucket")),
+      Seq("bucket"), "left_anti")
     // canonical-meeting predicate (see the operator scaladoc): with
     // D = base_a XOR base_b, keep the base-side meeting when the bases
     // differ in ≤ 1 bit, else the meeting where `a` is flipped at D's
@@ -1681,19 +1634,6 @@ object Dedup {
       .agg(coalesce(min(when(col("maxpop") <= targetBucketSize, col("w"))), lit(28))
         .cast("int").as("bw"))
   }
-
-  /** Scoped persist for a frame that is not already cached — the guard
-    * for caller-supplied signature tables consumed several times inside
-    * one operator: the memoized corpus-tier table arrives persisted
-    * (left untouched), a RAW table gets the scoped persist the inline
-    * path always had. NOTE: a bare PROJECTION of a cached frame also
-    * reads storageLevel NONE and would be double-cached here — callers
-    * layering projections should persist (or memoize) the projection
-    * themselves if they pass it to a multi-consumer operator. */
-  private def scopedIfUncached(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      CacheScope.persist(df)
-    else df
 
   /** Validates a caller-supplied [[ngramPairStats]] frame against the
     * consuming call's parameters, via the provenance metadata stamped
@@ -1750,35 +1690,40 @@ object Dedup {
             s"this call expects maxDf=${maxDf.getOrElse(-1L)}")
     }
 
-  /** Pins the [[minhashSigTable]] provenance a consumer silently
-    * depends on: when the table carries the metadata the builder
-    * stamps on `s`, its ngram/textCol/encoding must match the call's
-    * (the shingle hashes themselves cannot reveal a mismatch — the
-    * failure mode is a silently wrong-n similarity measure). Hand-built
-    * frames carry no metadata and pass those checks, but `s` must be an
-    * `array<bigint>` whatever its origin: the `array<binary>` digests of
-    * [[retiredShingleEncoding]] and the hex-string sets before it are
-    * refused here, by name, rather than in the verify kernel's type
-    * check. */
-  private def requireSigProvenance(st: DataFrame, ngram: Int,
-      textCol: String): Unit =
-    st.schema.fields.find(_.name == "s").foreach { f =>
-      require(f.dataType match {
-          case ArrayType(LongType, _) => true
-          case _ => false
-        },
-        s"sigTable column s is ${f.dataType.sql}; the shingle encoding " +
-          s"'$shingleEncoding' needs ARRAY<BIGINT> (ARRAY<BINARY> is the " +
-          s"retired '$retiredShingleEncoding' layout — rebuild the table)")
+  /** Pins the signature-table provenance a consumer silently depends
+    * on: when the table carries the metadata its builder stamps on the
+    * `pinned` column — `s` for a [[minhashSigTable]], `simhash` for a
+    * [[simhashSigTable]] (which stamps only the text column) — its
+    * textCol, ngram and encoding must match the call's (the hashes
+    * themselves cannot reveal a mismatch — the failure mode is a
+    * silently wrong-n, or wrong-column, similarity measure). Hand-built
+    * frames carry no metadata and pass those checks, but a shingle set
+    * `s` must be an `array<bigint>` whatever its origin: the
+    * `array<binary>` digests of [[retiredShingleEncoding]] and the
+    * hex-string sets before it are refused here, by name, rather than
+    * in the verify kernel's type check. */
+  private def requireSigProvenance(st: DataFrame, textCol: String,
+      ngram: Option[Int] = None, pinned: String = "s"): Unit =
+    st.schema.fields.find(_.name == pinned).foreach { f =>
+      if (pinned == "s")
+        require(f.dataType match {
+            case ArrayType(LongType, _) => true
+            case _ => false
+          },
+          s"sigTable column s is ${f.dataType.sql}; the shingle encoding " +
+            s"'$shingleEncoding' needs ARRAY<BIGINT> (ARRAY<BINARY> is the " +
+            s"retired '$retiredShingleEncoding' layout — rebuild the table)")
       if (f.metadata.contains("graft_shingle_encoding"))
         require(f.metadata.getString("graft_shingle_encoding") == shingleEncoding,
           s"sigTable was built with shingle encoding " +
             s"'${f.metadata.getString("graft_shingle_encoding")}', this engine " +
             s"reads '$shingleEncoding'")
-      if (f.metadata.contains("graft_ngram"))
-        require(f.metadata.getLong("graft_ngram") == ngram.toLong,
-          s"sigTable was built with ngram=${f.metadata.getLong("graft_ngram")}, " +
-            s"this call expects ngram=$ngram")
+      ngram.foreach { n =>
+        if (f.metadata.contains("graft_ngram"))
+          require(f.metadata.getLong("graft_ngram") == n.toLong,
+            s"sigTable was built with ngram=${f.metadata.getLong("graft_ngram")}, " +
+              s"this call expects ngram=$n")
+      }
       if (f.metadata.contains("graft_text_col"))
         require(f.metadata.getString("graft_text_col") == textCol,
           s"sigTable was built over '${f.metadata.getString("graft_text_col")}', " +

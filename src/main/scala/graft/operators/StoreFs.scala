@@ -151,8 +151,8 @@ object StoreFs {
     * (measured r17: the compact-serve scan ran 59 tasks over 59 tiny
     * files, in-rows ≈ tasks).
     *
-    * The partition target is `ceil(est / spark.graft.store.targetFileBytes)`
-    * (default 64 MB) with `est` from the optimized plan's statistics —
+    * The partition target is `ceil(est / targetFileBytes)` (default
+    * 64 MB) with `est` from the optimized plan's statistics —
     * the real accumulated size when the lineage is materialized (cached
     * frame, parquet scan), a conservative over-estimate otherwise; and
     * in-memory stats over-estimate parquet-on-disk bytes anyway, so the
@@ -161,15 +161,14 @@ object StoreFs {
     * the current width is a no-op), so a corpus-sized frame keeps its
     * full write parallelism on any cluster — scale-adaptive, not a
     * local-mode constant. */
-  def sizedForWrite(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.conf
-      .get("spark.graft.store.targetFileBytes", (64L << 20).toString).toLong
-    require(target > 0, s"spark.graft.store.targetFileBytes must be > 0, got $target")
+  def sizedForWrite(df: org.apache.spark.sql.DataFrame,
+      targetFileBytes: Long = 64L << 20): org.apache.spark.sql.DataFrame = {
+    require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
     val est =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => return df }
-    val parts = ((est + target - 1) / target).min(BigInt(Int.MaxValue)).toInt
+    val parts = ((est + targetFileBytes - 1) / targetFileBytes)
+      .min(BigInt(Int.MaxValue)).toInt
     df.coalesce(math.max(1, parts))
   }
 }

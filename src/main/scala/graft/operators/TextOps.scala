@@ -473,19 +473,18 @@ object TextOps {
     * word n-gram md5s (non-distinct count, so `n_shingles` = tokens −
     * n + 1). Both values are per-document, so this is a pure
     * PROJECTION: the occurrence count is token arithmetic and the min
-    * md5 rides the row-local native minhash expression (the overall
-    * min equals the distinct-set min) — no explode, no groupBy
-    * shuffle. The expression's set is sorted (hi, lo) digest pairs in
-    * unsigned order, the order of their lowercase hex spellings, so the
-    * minimum is pair 0, spelled as two zero-padded 16-digit halves. */
+    * md5 is read from the shingle set of [[Dedup.minhashSigTable]] (the
+    * overall min equals the distinct-set min) — no explode, no groupBy
+    * shuffle. The set is sorted (hi, lo) digest pairs in unsigned
+    * order, the order of their lowercase hex spellings, so the minimum
+    * is pair 0, spelled as two zero-padded 16-digit halves. */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame = {
-    def half(i: Int) = lpad(hex(element_at(col("ms.shs"), i)), 16, "0")
-    docs
-      .select(col(idCol),
-        (size(split(col(textCol), " ")) - n + 1).cast("long").as("n_shingles"),
-        expr(s"graft_minhash_sig($textCol, $n, 1)").as("ms"))
-      .filter(col("ms").isNotNull)
+    def half(i: Int) = lpad(hex(element_at(col("s"), i)), 16, "0")
+    Dedup.minhashSigTable(
+        docs.withColumn("n_shingles",
+          (size(split(col(textCol), " ")) - n + 1).cast("long")),
+        idCol, textCol, Seq("n_shingles"), n, 1)
       .select(col(idCol), col("n_shingles"),
         lower(concat(half(1), half(2))).as("fingerprint"))
   }

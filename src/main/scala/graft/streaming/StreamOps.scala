@@ -113,16 +113,17 @@ object StreamOps {
     * file per partition per stateful operator, so the state width is a
     * deployment knob separate from the batch shuffle width — on bounded
     * replay (2–3 micro-batches, small state) the batch default of 32 is
-    * pure commit fan-out. SPARK_GRAFT_STREAM_PARTITIONS wins when set;
-    * otherwise the width is derived from the replay source size the
-    * caller passes (`srcBytes`, probed once per path through the FS
-    * API): one state partition per 16 MB of source, clamped to
+    * pure commit fan-out. The width is derived from the replay source
+    * size the caller passes (`srcBytes`, probed once per path through
+    * the FS API): one state partition per 16 MB of source, clamped to
     * [2, session shuffle width] — scale-adaptive instead of a constant
     * tuned for either local mode or a cluster (r17, measured at sf0.1:
     * the family's 2 MB source → width 2, −13% on cross-run minima vs
     * the old fixed 8; a corpus-sized directory source grows the width
-    * up to the session's own shuffle setting, and a live deployment
-    * owns the width via env/conf since the checkpoint pins it).
+    * up to the session's own shuffle setting). Without `srcBytes` the
+    * width is 8. This helper is bounded replay only — its checkpoint is
+    * throwaway — so a live deployment, whose checkpoint pins the state
+    * width, sets it on its own session.
     * The session conf is restored afterwards, so downstream batch
     * aggregation keeps the engine default. Results are
     * partitioning-invariant (keyed state). StreamExecution clones the
@@ -132,11 +133,11 @@ object StreamOps {
       mode: OutputMode, watermarkFlush: Boolean = true,
       srcBytes: Long = -1L): DataFrame = {
     spark.streams.active.filter(_.name == name).foreach(_.stop())
-    val stateWidth = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
+    val stateWidth =
       if (srcBytes < 0L) "8"
       else math.max(2L, math.min(
         spark.conf.get("spark.sql.shuffle.partitions").toLong,
-        (srcBytes + (16L << 20) - 1) / (16L << 20))).toString)
+        (srcBytes + (16L << 20) - 1) / (16L << 20))).toString
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> stateWidth,
       // bounded replay: the checkpoint is deleted right after the run,
@@ -424,8 +425,9 @@ object StreamOps {
     * shingle arrays) + the post-sink DISTINCT. The static index's
     * text hashing is already served from the memoized signature table
     * when the caller passes one; what remains in addBatch is the
-    * work a live ingest screen performs per shard. */
-  /** `sigTable`: a pre-built [[graft.operators.Dedup.minhashSigTable]]
+    * work a live ingest screen performs per shard.
+    *
+    * `sigTable`: a pre-built [[graft.operators.Dedup.minhashSigTable]]
     * of the WHOLE corpus carrying `source` — the static index half is
     * then served from it (filtered to the old corpus) instead of
     * re-hashing the standing corpus's text inside every micro-batch,

@@ -1896,6 +1896,20 @@ class LibraryOpsSpec extends AnyFunSuite {
     val sh = Dedup.simhashSigTable(d, "id", "body")
     assert(rows(Dedup.simhash(d, "id", "body", maxHamming = 8)) ==
       rows(Dedup.simhash(d, "id", "body", maxHamming = 8, sigTable = Some(sh))))
+    // band rows carry the shingle set `s` too: compared whole
+    val bandInline = Dedup.minhashBandRows(d, "id", "body", nHash = 8)
+    assert(rows(bandInline) ==
+      rows(Dedup.minhashBandRows(d, "id", "body", nHash = 8, sigTable = Some(st))))
+    assert(bandInline.count() == 5 * 4) // 5 docs of >= 3 tokens, 4 bands
+    // the fingerprint is pair 0 of the table's sorted set, in hex
+    val minPair = Dedup.minhashSigTable(d, "id", "body", ngram = 3, nHash = 1)
+      .collect().map(r => r.getLong(0) -> {
+        val s = r.getSeq[Long](1)
+        f"${s(0)}%016x${s(1)}%016x"
+      }).toMap
+    val fps = TextOps.fingerprint(d, "id", "body").collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(fps == minPair && fps.size == 5)
     // sanity: the family actually emits pairs on this fixture (an
     // empty==empty comparison would prove nothing)
     assert(Dedup.minhashLsh(d, "id", "body", nHash = 8, threshold = 0.3).count() > 0)
@@ -2448,19 +2462,10 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(spark.read.parquet(d1).as[Int].collect().sorted.toSeq == (1 to 40))
     // with a 1-byte target every partition stays: coalesce never
     // INCREASES the width, so the write keeps its full parallelism
-    val prior = spark.conf.getOption("spark.graft.store.targetFileBytes")
-    spark.conf.set("spark.graft.store.targetFileBytes", "1")
-    try {
-      val d2 = java.nio.file.Files.createTempDirectory("graft-szw2").toString
-      StoreFs.sizedForWrite(tiny).write.mode("overwrite").parquet(d2)
-      assert(partFiles(d2) == 16,
-        s"1-byte target must keep all 16 partitions, got ${partFiles(d2)}")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.graft.store.targetFileBytes", v)
-        case None => spark.conf.unset("spark.graft.store.targetFileBytes")
-      }
-    }
+    val d2 = java.nio.file.Files.createTempDirectory("graft-szw2").toString
+    StoreFs.sizedForWrite(tiny, targetFileBytes = 1).write.mode("overwrite").parquet(d2)
+    assert(partFiles(d2) == 16,
+      s"1-byte target must keep all 16 partitions, got ${partFiles(d2)}")
     // end-to-end: a sig store written over a session-width corpus frame
     // serves from a single-file sig/ dataset with identical rows
     val corpus = (1L to 30L).map(i =>
