@@ -39,11 +39,10 @@ object CacheScope {
     override def initialValue(): List[ArrayBuffer[DataFrame]] = Nil
   }
 
-  /** Persist `df` at `level` and enroll it for unpersist when the
-    * innermost active scope closes. Returns `df` for chaining. */
-  def persist(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    df.persist(level)
+  /** Persist `df` at MEMORY_AND_DISK and enroll it for unpersist when
+    * the innermost active scope closes. Returns `df` for chaining. */
+  def persist(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     stack.get() match {
       case top :: _ => top += df
       case Nil      => () // no scope: session-lifetime cache, caller-owned

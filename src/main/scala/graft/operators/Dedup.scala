@@ -914,14 +914,7 @@ object Dedup {
       maxIter: Int = 25, localFinishEdges: Long = 1L << 22,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter >= 1, s"connectedComponents needs maxIter >= 1, got $maxIter")
-    // checkpoint-dir semantics (context-global dir, file lifecycle):
-    // see Graphs.ckpt — Graphs.ensureCheckpointDir IS that convention
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        Graphs.ensureCheckpointDir(edges.sparkSession.sparkContext, dir, "dedup")
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(true)
-    }
+    val ckpt = Graphs.ckpt(checkpointDir, "dedup")
     def clean(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v")).distinct()
     def sym(e: DataFrame): DataFrame =
@@ -1753,16 +1746,17 @@ object Dedup {
       .filter(col("simhash").isNotNull)
 
   /** Embedding-cosine near-dup with IVF-cell blocking: a seeded coarse
-    * quantizer (same `hrand`-picked centroids as Similarity.ivfTopK;
-    * cell count data-driven with `nList` as floor,
+    * quantizer (Similarity.seededCentroids, the pick every IVF operator
+    * uses; cell count data-driven with `nList` as floor,
     * Similarity.autoCellCount — the LINEAR constant-population rule,
-    * not the query-path √ rule)
-    * assigns every vector to its `nProbe` nearest cells, and
-    * the pair join runs on (blockCols..., cell) equality — never an
-    * all-pairs join within a block key, so a popular block at 100 TB
-    * splits across cells instead of exploding O(n²). Multi-probe on
-    * BOTH sides: a pair is emitted when any probed cell is shared
-    * (≥ the single-cell recall of a query-side-only probe).
+    * not the query-path √ rule; `numVectors` per the Similarity
+    * header's invariant) assigns every vector to its `nProbe` nearest
+    * cells, and the pair join ([[cellPairs]]) runs on
+    * (blockCols..., cell) equality — never an all-pairs join within a
+    * block key, so a popular block at 100 TB splits across cells
+    * instead of exploding O(n²). Multi-probe on BOTH sides: a pair is
+    * emitted when any probed cell is shared (≥ the single-cell recall
+    * of a query-side-only probe).
     *
     * Approximation contract: recall is complete only in the regime
     * blocking is designed for — genuinely near-duplicate vectors
@@ -1774,10 +1768,10 @@ object Dedup {
     */
   def embeddingNearDup(vectors: DataFrame, idCol: String, vecCol: String,
       blockCols: Seq[String], threshold: Double, nList: Int = 8,
-      nProbe: Int = 4, seed: Long = 1337L, dim: Int = 64,
+      nProbe: Int = 4, seed: Long = 1337L,
       targetCellSize: Int = 256, numVectors: Option[Long] = None): DataFrame =
     embeddingNearDupCandidates(vectors, idCol, vecCol, blockCols, nList,
-      nProbe, seed, dim, targetCellSize, numVectors)
+      nProbe, seed, targetCellSize, numVectors)
       .filter(col("c") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("c"), 6).as("cos"))
       .distinct()
@@ -1789,24 +1783,16 @@ object Dedup {
     * bounds, emitted volume is the output the corpus owes. */
   def embeddingNearDupCandidates(vectors: DataFrame, idCol: String, vecCol: String,
       blockCols: Seq[String], nList: Int = 8,
-      nProbe: Int = 4, seed: Long = 1337L, dim: Int = 64,
+      nProbe: Int = 4, seed: Long = 1337L,
       targetCellSize: Int = 256, numVectors: Option[Long] = None): DataFrame = {
-    import graft.functions.Deterministic.hrand
+    require(nProbe >= 1, s"embeddingNearDup needs nProbe >= 1, got $nProbe")
     // Data-driven cell count (Similarity.autoCellCount LINEAR rule —
     // constant ~targetCellSize populations): `nList` is the floor, so a
     // growing corpus splits into more cells and the pair join's
     // cells·pop² work stays linear in n (the query-path √ rule measured
-    // n^1.5 here: 50× on 10× data at sf1). Corpus size comes in as
-    // `numVectors` (session-cached metadata statistic); the count()
-    // fallback replays the input's lineage.
-    // API INVARIANT: `numVectors` must count the EXACT FRAME passed as
-    // `vectors` — a raw-table count over a filtered/derived frame
-    // silently mis-sizes the cells (see simhash.numDocs).
+    // n^1.5 here: 50× on 10× data at sf1).
     val nCells = Similarity.autoCellCount(numVectors.getOrElse(vectors.count()), nList, targetCellSize)
-    val cent = vectors
-      .orderBy(hrand(col(idCol), seed), col(idCol))
-      .limit(nCells)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv"))
+    val cent = Similarity.seededCentroids(vectors, idCol, vecCol, nCells, seed)
     val carried = col(idCol) +: blockCols.map(col) :+ col(vecCol)
     // Shuffle-free multi-probe assignment (Similarity.topCells): the
     // top-nProbe cells per vector are selected inside one expression
@@ -1817,11 +1803,6 @@ object Dedup {
       .select(col(idCol) +: blockCols.map(col) :+ col(vecCol) :+
         explode(Similarity.topCells(vecCol, nProbe)).as("cc"): _*)
       .select(carried :+ col("cc.cent_id").as("cell"): _*)
-    val asgC = CacheScope.persist(asg)
-    val joinCond = blockCols
-      .map(c => col(s"a.$c") === col(s"b.$c"))
-      .foldLeft(col("a.cell") === col("b.cell") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))(_ && _)
     // The pair cosine is evaluated once per SHARED probed cell and
     // collapsed by distinct(); deduping ids first would instead shuffle
     // both 64-wide vectors per candidate to re-join them — more bytes
@@ -1836,14 +1817,31 @@ object Dedup {
     // simhash's predicate pays because its multiplicity is ~11×.
     // Threshold applies to the RAW cosine (rounding is display-only),
     // matching the documented `cos >= τ` contract exactly.
-    // SHUFFLE_HASH on the b side (r14, the dedup-family discipline):
-    // the assignment frame carries the full vectors, and Catalyst's
-    // under-threshold estimate of the cached frame would serialize all
-    // of them through one driver broadcast; hash-partitioned on the
-    // (cell, blocks) key both sides exchange once, in parallel — the
-    // only plan that survives a corpus-sized vector table.
+    cellPairs(asg, idCol, vecCol, blockCols)
+  }
+
+  /** The cell-blocked pair join of the embedding dedup family
+    * ([[embeddingNearDupCandidates]]' IVF cells, dedup_semantic's
+    * k-means cells): over an assignment `asg` (idCol, blockCols...,
+    * vecCol, cell), one row per pair sharing a cell and every block
+    * column, `a.id < b.id` — (vec_a, vec_b, c), c the RAW cosine. A pair
+    * sharing several cells (multi-probe assignments) appears once per
+    * shared cell. `asg` is scope-persisted: it feeds both join sides.
+    * SHUFFLE_HASH on the b side (r14, the dedup-family discipline): the
+    * assignment carries the full vectors, and Catalyst's
+    * under-threshold estimate of the cached frame would serialize all
+    * of them through one driver broadcast; hash-partitioned on the
+    * (cell, blocks) key both sides exchange once, in parallel — the
+    * only plan that survives a corpus-sized vector table. */
+  private[graft] def cellPairs(asg: DataFrame, idCol: String, vecCol: String,
+      blockCols: Seq[String] = Nil): DataFrame = {
+    val asgC = CacheScope.persist(asg)
+    val joinCond = blockCols
+      .map(c => col(s"a.$c") === col(s"b.$c"))
+      .foldLeft(col("a.cell") === col("b.cell") &&
+        col(s"a.$idCol") < col(s"b.$idCol"))(_ && _)
     asgC.as("a").join(asgC.hint("shuffle_hash").as("b"), joinCond)
       .select(col(s"a.$idCol").as("vec_a"), col(s"b.$idCol").as("vec_b"),
-        Similarity.cosine(s"a.$vecCol", s"b.$vecCol", dim).as("c"))
+        Similarity.cosine(s"a.$vecCol", s"b.$vecCol").as("c"))
   }
 }

@@ -44,7 +44,8 @@ object Graphs {
     * the operator already holds, so callers never rescan the edge list
     * for it. */
   /** The checkpoint mode shared by every lineage-truncation site in
-    * this object — the [[Dedup.connectedComponents]] convention: the
+    * this object and [[Dedup.connectedComponents]] (`who` tags the
+    * checkpoint-dir conflict warning): the
     * default `localCheckpoint` (executor-block storage) is right for
     * local mode and short-lived jobs; a `checkpointDir` switches to
     * RELIABLE `checkpoint()` against that directory (set as the
@@ -73,15 +74,15 @@ object Graphs {
     * long-lived session rotating corpora should do one or the other,
     * or orphaned checkpoint directories accumulate on disk. */
   /** Sets `dir` as the context checkpoint dir if none is set; on a
-    * conflict keeps the existing one and logs a warning. ONE definition
-    * shared by every reliable-checkpoint site (this object's ckpt and
-    * [[Dedup.connectedComponents]]) so the convention cannot drift.
+    * conflict keeps the existing one and logs a warning. Called only by
+    * [[ckpt]], the one reliable-checkpoint entry, so the convention
+    * cannot drift.
     * The match is path-boundary-aware: Spark stores the requested dir
     * plus a per-context UUID segment, so an existing `dir/<uuid>`
     * matches, while a requested `/tmp/ck` does NOT silently claim an
     * existing `/tmp/ckpt2/<uuid>` (a genuinely different directory a
     * bare startsWith would accept). */
-  private[operators] def ensureCheckpointDir(
+  private def ensureCheckpointDir(
       sc: org.apache.spark.SparkContext, dir: String, who: String): Unit = {
     val existing = sc.getCheckpointDir
     if (existing.isEmpty) sc.setCheckpointDir(dir)
@@ -102,10 +103,11 @@ object Graphs {
     }
   }
 
-  private def ckpt(checkpointDir: Option[String]): DataFrame => DataFrame =
+  private[operators] def ckpt(checkpointDir: Option[String],
+      who: String): DataFrame => DataFrame =
     checkpointDir match {
       case Some(dir) => df => {
-        ensureCheckpointDir(df.sparkSession.sparkContext, dir, "graphs")
+        ensureCheckpointDir(df.sparkSession.sparkContext, dir, who)
         df.checkpoint(eager = true)
       }
       case None => _.localCheckpoint(true)
@@ -121,7 +123,7 @@ object Graphs {
   def edgeLeaf(edges: DataFrame, srcCol: String, dstCol: String,
       memoKey: Option[String],
       checkpointDir: Option[String] = None): DataFrame = {
-    def build = ckpt(checkpointDir)(
+    def build = ckpt(checkpointDir, "graphs")(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .repartition(col("src")))
     memoKey.map(mk => Memo.cached(s"$mk/graph/edges")(build)).getOrElse(build)
@@ -146,7 +148,7 @@ object Graphs {
     // instead of re-running iters |E|-row power rounds. First-build
     // cost stays visible in the bench cold pass (`queries_cold`).
     memoKey.map(mk => Memo.cached(s"$mk/pr/$iters/$damping/ranks") {
-      ckpt(checkpointDir)(build)
+      ckpt(checkpointDir, "graphs")(build)
     }).getOrElse(build)
   }
 
@@ -262,7 +264,7 @@ object Graphs {
       checkpointDir: Option[String] = None): DataFrame = {
     def build = buildTriangles(edges, srcCol, dstCol)
     memoKey.map(mk => Memo.cached(s"$mk/tri/counts") {
-      ckpt(checkpointDir)(build)
+      ckpt(checkpointDir, "graphs")(build)
     }).getOrElse(build)
   }
 
@@ -370,7 +372,7 @@ object Graphs {
     // [[edgeLeaf]] — turns the entry into an independent node-sized
     // LogicalRDD leaf that no scope close can touch.
     memoKey.map(mk => Memo.cached(s"$mk/lpa/$iters/labels") {
-      ckpt(checkpointDir)(build)
+      ckpt(checkpointDir, "graphs")(build)
     }).getOrElse(build)
   }
 }

@@ -15,6 +15,16 @@ import org.apache.spark.sql.functions._
   * bit-for-bit (and replayable by any engine that evaluates the same
   * chain). Higher-order `aggregate`/`zip_with` lambdas are interpreted
   * in Spark and measured ~7× slower on pairwise workloads.
+  *
+  * Cell sizing: the IVF operators ([[ivfTopK]], [[ivfPqTopK]],
+  * [[writeIvfPqIndex]]) and Dedup.embeddingNearDup derive their cell
+  * count from the corpus size ([[autoNList]], [[autoCellCount]]). Pass
+  * it as `numVectors` (e.g. Tables.rowCount, a session-cached
+  * metadata-level statistic); the `vectors.count()` fallback is
+  * correct but prices in whatever lineage `vectors` carries. API
+  * INVARIANT: `numVectors` must be the row count of the EXACT FRAME
+  * passed as `vectors` — a raw-table count over a filtered/derived
+  * frame silently mis-sizes the cells.
   */
 object Similarity {
 
@@ -29,28 +39,36 @@ object Similarity {
   /** Cosine similarity column between two array columns — the native
     * codegen expression `graft_cosine` (functions.CosineSimilarity,
     * injected via SparkSessionExtensions in GraftSession): bit-identical
-    * to the unrolled chain (same left-to-right fold, proven in
-    * LibraryOpsSpec) but compiled as a small loop, with the dimension
-    * read from the data. `dim` is retained for source compatibility and
-    * for [[dotExpr]]-based callers; the native expression ignores it. */
-  def cosine(x: String, y: String, dim: Int = 64): Column =
+    * to the unrolled [[dotExpr]] chain (same left-to-right fold, proven
+    * in LibraryOpsSpec) but compiled as a small loop, with the dimension
+    * read from the data. */
+  def cosine(x: String, y: String): Column =
     expr(s"graft_cosine($x, $y)")
+
+  /** The per-query top-k tail every search operator ends with: rank
+    * `scored` (query_id, cand_id, c) by (c DESC, cand_id) — a total
+    * order, so the cut is reproducible — keep rk ≤ k and emit
+    * (query_id, rk, cand_id, c AS `scoreAs`). `rk` is an int, or a long
+    * when `longRank` (the ADC paths' output type). */
+  private def topKPerQuery(scored: DataFrame, k: Int, scoreAs: String,
+      longRank: Boolean = false): DataFrame = {
+    val rk = row_number().over(
+      Window.partitionBy("query_id").orderBy(col("c").desc, col("cand_id")))
+    scored.withColumn("rk", if (longRank) rk.cast("long") else rk)
+      .filter(col("rk") <= k)
+      .select(col("query_id"), col("rk"), col("cand_id"), col("c").as(scoreAs))
+  }
 
   /** Brute-force cosine top-k: every query against every other vector,
     * ranked by (rounded cosine DESC, candidate id) so the cut is
     * reproducible. Queries should be a small subset — it is broadcast.
     * Output: (query_id, rk, cand_id, cos). */
   def bruteTopK(vectors: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int = 3, dim: Int = 64): DataFrame = {
-    val sc = broadcast(queries).as("a").join(vectors.as("b"),
+      vecCol: String, k: Int = 3): DataFrame =
+    topKPerQuery(broadcast(queries).as("a").join(vectors.as("b"),
         col(s"a.$idCol") =!= col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("query_id"), col(s"b.$idCol").as("cand_id"),
-        round(cosine(s"a.$vecCol", s"b.$vecCol", dim), 6).as("c"))
-    val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("cand_id"))
-    sc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("cand_id"), col("c").as("cos"))
-  }
+        round(cosine(s"a.$vecCol", s"b.$vecCol"), 6).as("c")), k, "cos")
 
   /** Contrastive training-pair mining for embedding-model fine-tuning:
     * per query, the top-`kPos` most-similar SAME-label candidates
@@ -71,14 +89,14 @@ object Similarity {
     * Output: (query_id, kind ∈ pos|neg, rk, cand_id, cos, label_q,
     * label_c). */
   def contrastivePairs(vectors: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, labelCol: String, kPos: Int = 3, kNeg: Int = 3,
-      dim: Int = 64): DataFrame = {
+      vecCol: String, labelCol: String, kPos: Int = 3,
+      kNeg: Int = 3): DataFrame = {
     require(kPos >= 1 && kNeg >= 1, s"contrastivePairs needs kPos, kNeg >= 1")
     val sc = broadcast(queries.select(col(idCol), col(vecCol), col(labelCol))).as("a")
       .join(vectors.as("b"), col(s"a.$idCol") =!= col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("query_id"), col(s"b.$idCol").as("cand_id"),
         col(s"a.$labelCol").as("label_q"), col(s"b.$labelCol").as("label_c"),
-        round(cosine(s"a.$vecCol", s"b.$vecCol", dim), 6).as("cos"))
+        round(cosine(s"a.$vecCol", s"b.$vecCol"), 6).as("cos"))
       .withColumn("kind",
         when(col("label_q") === col("label_c"), "pos").otherwise("neg"))
     val w = Window.partitionBy("query_id", "kind")
@@ -107,9 +125,8 @@ object Similarity {
     * native codegen expression `graft_lsh_bucket` (functions.LshBucket,
     * injected via SparkSessionExtensions): bit-identical to the unrolled
     * ±-chains (same sequential fold; proven in LibraryOpsSpec) but
-    * compiled as a small loop. `dim` is read from the data; the
-    * parameter remains for source compatibility. */
-  def lshBucket(vecCol: String, bits: Int = 8, dim: Int = 64): Column =
+    * compiled as a small loop, with the dimension read from the data. */
+  def lshBucket(vecCol: String, bits: Int = 8): Column =
     expr(s"graft_lsh_bucket($vecCol, $bits)")
 
   /** √-rule coarse-quantizer sizing (SCALE.md §ANN): hold the EXPECTED
@@ -145,6 +162,51 @@ object Similarity {
     * partition-invariant. */
   def centroidArray(cent: DataFrame): DataFrame =
     cent.agg(collect_list(struct(col("cent_id"), col("cv"))).as("cents"))
+
+  /** The seeded centroid pick every quantizer in the engine starts
+    * from: the `n` vectors first in (hrand(id, seed), id) order — a
+    * deterministic total order, replayable by the oracles'
+    * `row_number` — as (cent_id, cv). */
+  private[operators] def seededCentroids(vectors: DataFrame, idCol: String,
+      vecCol: String, n: Int, seed: Long): DataFrame = {
+    import graft.functions.Deterministic.hrand
+    vectors.orderBy(hrand(col(idCol), seed), col(idCol)).limit(n)
+      .select(col(idCol).as("cent_id"), col(vecCol).as("cv"))
+  }
+
+  /** The IVF coarse quantizer: `nCells` seeded centroids (cent), their
+    * one-row array (cents — persisted: the corpus assignment and the
+    * query probes both cross against it, and unpersisted each would
+    * re-run the pick) and the TOP-1 corpus assignment, the inverted
+    * lists (cells: cand_id, cell). */
+  private def coarseQuantizer(vectors: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, seed: Long): (DataFrame, DataFrame, DataFrame) = {
+    val cent = seededCentroids(vectors, idCol, vecCol, nCells, seed)
+    val cents = CacheScope.persist(centroidArray(cent))
+    val cells = vectors.select(col(idCol), col(vecCol))
+      .crossJoin(broadcast(cents))
+      .select(col(idCol).as("cand_id"),
+        expr(s"element_at(graft_top_cells($vecCol, cents, 1), 1).cent_id").as("cell"))
+    (cent, cents, cells)
+  }
+
+  /** The IVF probe stage: each QUERY vector's `nProbe` nearest cells
+    * (the [[topCells]] ordering against the centroid array `cents`),
+    * joined to the inverted lists `cells` (cand_id, cell) — every
+    * (query_id, cand_id) pair sharing a probed cell, self-pairs
+    * excluded. Probing from the query vectors, not from the corpus
+    * assignment, is what makes out-of-corpus queries work; for corpus
+    * members it is the same ranking. */
+  private def probedPairs(cents: DataFrame, cells: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, nProbe: Int): DataFrame = {
+    val probes = queries.select(col(idCol), col(vecCol))
+      .crossJoin(broadcast(cents))
+      .select(col(idCol).as("query_id"), explode(topCells(vecCol, nProbe)).as("pc"))
+      .select(col("query_id"), col("pc.cent_id").as("cell"))
+    broadcast(probes).join(cells, "cell")
+      .filter(col("cand_id") =!= col("query_id"))
+      .select("query_id", "cand_id")
+  }
 
   /** Per-row top-`nProbe` cells over the broadcast centroid array —
     * the native codegen-fallback expression `graft_top_cells`
@@ -209,10 +271,10 @@ object Similarity {
     * Output: final assignment (idCol, cell, cos) — cos is the rounded
     * member→centroid cosine of the final assignment. */
   def kmeans(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int = 8, iters: Int = 2, seed: Long = 7L, dim: Int = 64,
+      k: Int = 8, iters: Int = 2, seed: Long = 7L,
       memoKey: Option[String] = None): DataFrame = {
     val (pfx, assign, centFinal) =
-      kmeansParts(vectors, idCol, vecCol, k, iters, seed, dim, memoKey)
+      kmeansParts(vectors, idCol, vecCol, k, iters, seed, memoKey)
     val out = assign(centFinal).select(col(idCol), col("cell"), col("c").as("cos"))
     // CORPUS tier: one row per input vector — the centroid chain is the
     // bounded-tier entry, the assignment is corpus-proportional
@@ -226,9 +288,9 @@ object Similarity {
     * not the assignment: silhouette scoring, cell-boundary audits,
     * centroid drift. */
   def kmeansCentroids(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int = 8, iters: Int = 2, seed: Long = 7L, dim: Int = 64,
+      k: Int = 8, iters: Int = 2, seed: Long = 7L,
       memoKey: Option[String] = None): DataFrame =
-    kmeansParts(vectors, idCol, vecCol, k, iters, seed, dim, memoKey)._3
+    kmeansParts(vectors, idCol, vecCol, k, iters, seed, memoKey)._3
 
   /** Shared guts of [[kmeans]]/[[kmeansCentroids]]: (memo prefix,
     * assignment builder, final centroid frame). Memo keys are
@@ -237,9 +299,9 @@ object Similarity {
     * memoized because each is the direct input of the next iteration
     * across consumers that stop at different depths. */
   private def kmeansParts(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, seed: Long, dim: Int, memoKey: Option[String])
+      k: Int, iters: Int, seed: Long, memoKey: Option[String])
       : (Option[String], DataFrame => DataFrame, DataFrame) = {
-    import graft.functions.Deterministic.{hrand, stableSum}
+    import graft.functions.Deterministic.stableSum
     require(k >= 1, s"kmeans needs k >= 1, got $k")
     require(iters >= 1, s"kmeans needs iters >= 1, got $iters")
     // memoKey: session-wide share of the trained centroid chain and the
@@ -247,7 +309,7 @@ object Similarity {
     // and dedup_semantic train the SAME seeded Lloyd chain whenever the
     // data-driven cell count resolves to the same k. Key must identify
     // the corpus; every training parameter is appended here.
-    val pfx = memoKey.map(mk => s"$mk/km/$idCol/$vecCol/$k/$iters/$seed/$dim")
+    val pfx = memoKey.map(mk => s"$mk/km/$idCol/$vecCol/$k/$iters/$seed")
     def memoC(kk: String)(b: => DataFrame): DataFrame = pfx match {
       // coalesce(1): k centroid rows (model constant) — the r17
       // cached-width discipline (see pqTrainParts.memoP)
@@ -272,11 +334,7 @@ object Similarity {
         .agg((stableSum(col("col").cast("double"), 9) / count(lit(1))).as("m"))
         .groupBy("cent_id")
         .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)").as("cv"))
-    val cent0 = v
-      .orderBy(hrand(col(idCol), seed), col(idCol))
-      .limit(k)
-      .select(col(idCol).as("cent_id"), col("v").as("cv"))
-    val centFinal = (1 to iters).foldLeft(cent0) {
+    val centFinal = (1 to iters).foldLeft(seededCentroids(v, idCol, "v", k, seed)) {
       (cent, i) => memoC(s"cent$i") { update(assign(cent)) }
     }
     (pfx, assign, centFinal)
@@ -302,9 +360,9 @@ object Similarity {
     *
     * Output: (idCol, cell, sil) per vector, sil rounded 6. */
   def kmeansSilhouette(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int = 8, iters: Int = 2, seed: Long = 7L, dim: Int = 64,
+      k: Int = 8, iters: Int = 2, seed: Long = 7L,
       memoKey: Option[String] = None): DataFrame = {
-    val cents = kmeansCentroids(vectors, idCol, vecCol, k, iters, seed, dim, memoKey)
+    val cents = kmeansCentroids(vectors, idCol, vecCol, k, iters, seed, memoKey)
     val a = lit(1.0) - col("t2")(0)("c")
     val b = lit(1.0) - col("t2")(1)("c")
     vectors.select(col(idCol), col(vecCol).as("v"))
@@ -477,7 +535,7 @@ object Similarity {
   private[graft] def pqTrainParts(vectors: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, kCodes: Int, seed: Long, iters: Int,
       memoKey: Option[String] = None): (DataFrame, DataFrame) = {
-    import graft.functions.Deterministic.{hrand, stableSum}
+    import graft.functions.Deterministic.stableSum
     require(m >= 1 && dim % m == 0, s"PQ needs m | dim, got dim=$dim m=$m")
     require(kCodes >= 1, s"PQ needs kCodes >= 1, got $kCodes")
     require(iters >= 0, s"PQ needs iters >= 0, got $iters")
@@ -487,7 +545,9 @@ object Similarity {
     // scope-local persist. coalesce(1): model-constant-sized by
     // construction — cached at session shuffle width every consumer
     // would scan 32 near-empty partitions per read (r17 cached-width
-    // discipline; AQE cannot re-coalesce cached output partitioning)
+    // discipline; AQE re-coalesces a cached plan's output partitioning
+    // only under spark.sql.optimizer.canChangeCachedPlanOutputPartitioning,
+    // which is off by default in Spark 4.1)
     def memoP(k: String)(b: => DataFrame): DataFrame = pfx match {
       case Some(p) => Memo.cached(s"$p/$k")(b.coalesce(1))
       case None    => CacheScope.persist(b.coalesce(1))
@@ -517,10 +577,11 @@ object Similarity {
       case None    => b
     }
     val v = vectors.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-    val seeds = vectors
-      .orderBy(hrand(col(idCol), seed), col(idCol)).limit(kCodes)
-      .select(col(idCol).as("cent_id"), col(vecCol).cast("array<double>").as("cv0"))
-    val codebook0 = seeds.select(explode(array((0 until m).map(j =>
+    // cast after the pick: only the kCodes picked vectors, not the
+    // whole corpus feeding the top-k sort
+    val codebook0 = seededCentroids(vectors, idCol, vecCol, kCodes, seed)
+      .select(col("cent_id"), col("cv").cast("array<double>").as("cv0"))
+      .select(explode(array((0 until m).map(j =>
         struct(lit(j).as("j"), col("cent_id"),
           slice(col("cv0"), j * sub + 1, sub).as("cv"))): _*)).as("e"))
       .select(col("e.j").as("j"), col("e.cent_id").as("cent_id"), col("e.cv").as("cv"))
@@ -593,12 +654,8 @@ object Similarity {
     val pos = pqLutPositions(trained)
     val cand = pqEncodeRows(asgF, trained, pos, idCol, sub, m)
     val lut = pqQueryLut(queries, trained, pos, idCol, vecCol, dim, m, sub)
-    val scored = adcScore(cand.crossJoin(broadcast(lut))
-      .filter(col("query_id") =!= col("cand_id")), m)
-    val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("cand_id"), col("c").as("cos_adc"))
+    topKPerQuery(adcScore(cand.crossJoin(broadcast(lut))
+      .filter(col("query_id") =!= col("cand_id")), m), k, "cos_adc", longRank = true)
   }
 
   /** Dense per-(j, cent_id) LUT positions (within-j rank + cumulative
@@ -687,18 +744,15 @@ object Similarity {
     * (m codes) but scans the whole corpus; this composition bounds
     * both, which is what makes a 100 TB embedding store servable.
     *
-    * Structure: the coarse quantizer is [[ivfTopK]]'s (seeded centroid
-    * picks, shuffle-free [[topCells]] assignment — top-1 over the
-    * corpus for the inverted lists, top-nProbe over the QUERY vectors
-    * for the probes, so out-of-corpus queries probe correctly); the code
-    * layer is [[pqAdcTopK]]'s ([[pqTrainParts]] training — memo-shared
-    * under the same key, so a session serving both ADC variants trains
-    * once — positional LUT, unrolled decimal scoring chain). The
-    * probed-pair frame replaces pqAdcTopK's full cross join: candidate
-    * pairs (query_id, cand_id) are built from the broadcast probe set
-    * and joined to the encoded-corpus rows by a broadcast hash join,
-    * so the scoring pass is ONE scan of the 8-byte-code frame with no
-    * shuffle, emitting only probed-cell members.
+    * Structure: [[ivfPqSearch]] over [[ivfPqBuild]] — the same two
+    * stages [[writeIvfPqIndex]] persists and [[searchIvfPqIndex]]
+    * serves. The coarse quantizer is [[ivfTopK]]'s; the code layer is
+    * [[pqAdcTopK]]'s ([[pqTrainParts]] training — memo-shared under the
+    * same key, so a session serving both ADC variants trains once —
+    * positional LUT, unrolled decimal scoring chain). The probed-pair
+    * frame replaces pqAdcTopK's full cross join, so the scoring pass is
+    * ONE scan of the 8-byte-code frame with no shuffle, emitting only
+    * probed-cell members.
     *
     * Determinism: both stages' tie-breaks are spec-pinned (rounded
     * cosine DESC, id), scores ride the same DECIMAL(28,12) chains as
@@ -712,54 +766,54 @@ object Similarity {
       pqSeed: Long = 77L, iters: Int = 1, targetCellSize: Int = 256,
       numVectors: Option[Long] = None,
       memoKey: Option[String] = None): DataFrame = {
-    import graft.functions.Deterministic.hrand
     require(k >= 1, s"ivfPqTopK needs k >= 1, got $k")
-    val sub = dim / m
-    val nCells = autoNList(numVectors.getOrElse(vectors.count()), nList, targetCellSize)
-    val cent = vectors
-      .orderBy(hrand(col(idCol), ivfSeed), col(idCol))
-      .limit(nCells)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv"))
-    // one-row centroid array, persisted: both the inverted list and the
-    // query probes cross against it (the seeded pick is one pass either
-    // way, but unpersisted each consumer would re-run it)
-    val cents = CacheScope.persist(centroidArray(cent))
-    // inverted list: TOP-1 assignment only (unlike ivfTopK, probes do
-    // not come from this frame, so no nProbe fan-out and no persist —
-    // each frame has exactly one consumer)
-    val a1 = vectors.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(cents))
-      .select(col(idCol).as("cand_id"),
-        expr(s"element_at(graft_top_cells($vecCol, cents, 1), 1).cent_id").as("cent_id"))
-    // probes from the QUERY vectors directly — same topCells ordering,
-    // so identical to ranking the corpus assignment when queries are
-    // corpus members, and (unlike the id-join formulation) also correct
-    // for out-of-corpus query vectors
-    val probes = queries.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(cents))
-      .select(col(idCol).as("query_id"),
-        explode(topCells(vecCol, math.max(nProbe, 1))).as("pc"))
-      .select(col("query_id"), col("pc.cent_id").as("cent_id"))
-    val pairs = broadcast(probes).join(a1, "cent_id")
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    val (trained, asgF) =
-      pqTrainParts(vectors, idCol, vecCol, dim, m, kCodes, pqSeed, iters, memoKey)
-    val pos = pqLutPositions(trained)
-    val candEnc = pqEncodeRows(asgF, trained, pos, idCol, sub, m)
-    val lut = pqQueryLut(queries, trained, pos, idCol, vecCol, dim, m, sub)
-    val scored = adcScore(
-      candEnc.join(broadcast(pairs), "cand_id")
-        .join(broadcast(lut), "query_id"), m)
-    val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("cand_id"), col("c").as("cos_adc"))
+    require(nProbe >= 1, s"ivfPqTopK needs nProbe >= 1, got $nProbe")
+    ivfPqSearch(ivfPqBuild(vectors, idCol, vecCol, nList, ivfSeed, dim, m,
+        kCodes, pqSeed, iters, targetCellSize, numVectors, memoKey),
+      queries, idCol, vecCol, k, nProbe, dim, m)
   }
 
-  /** TRAIN/SERVE SPLIT of [[ivfPqTopK]], write half: train the coarse
-    * quantizer and the PQ codebooks, encode the corpus, and WRITE the
-    * whole index as three Parquet datasets under `dir` — the S4 sink
+  /** An IVF-PQ index: the coarse quantizer's centroids (`cent`:
+    * cent_id, cv) and their persisted one-row array (`cents`), the
+    * top-1 corpus cells (`cells`: cand_id, cell — the inverted lists),
+    * the PQ codes (`codes`: cand_id, i0..i{m−1} LUT positions, srr) and
+    * the trained codebooks (`codebooks`: j, cent_id, cv). Built by
+    * [[ivfPqBuild]], or read back from the files [[writeIvfPqIndex]]
+    * wrote. */
+  private case class IvfPqIndex(cent: DataFrame, cents: DataFrame,
+      cells: DataFrame, codes: DataFrame, codebooks: DataFrame)
+
+  /** Train an [[IvfPqIndex]]: [[coarseQuantizer]] over `nCells` =
+    * [[autoNList]] cells, [[pqTrainParts]] codebooks, and the corpus
+    * encoded to one code row per vector. */
+  private def ivfPqBuild(vectors: DataFrame, idCol: String, vecCol: String,
+      nList: Int, ivfSeed: Long, dim: Int, m: Int, kCodes: Int, pqSeed: Long,
+      iters: Int, targetCellSize: Int, numVectors: Option[Long],
+      memoKey: Option[String]): IvfPqIndex = {
+    val nCells = autoNList(numVectors.getOrElse(vectors.count()), nList, targetCellSize)
+    val (cent, cents, cells) = coarseQuantizer(vectors, idCol, vecCol, nCells, ivfSeed)
+    val (trained, asgF) =
+      pqTrainParts(vectors, idCol, vecCol, dim, m, kCodes, pqSeed, iters, memoKey)
+    IvfPqIndex(cent, cents, cells,
+      pqEncodeRows(asgF, trained, pqLutPositions(trained), idCol, dim / m, m), trained)
+  }
+
+  /** Top-k over an [[IvfPqIndex]]: the [[probedPairs]] of the query
+    * vectors, each pair joined to its candidate's code row and the
+    * query's LUT (both broadcast-hash joins, so scoring is one scan of
+    * the code frame), [[adcScore]], then the (cos DESC, cand_id) rank.
+    * The one search stage of [[ivfPqTopK]] and [[searchIvfPqIndex]]. */
+  private def ivfPqSearch(ix: IvfPqIndex, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, nProbe: Int, dim: Int, m: Int): DataFrame = {
+    val pairs = probedPairs(ix.cents, ix.cells, queries, idCol, vecCol, nProbe)
+    val lut = pqQueryLut(queries, ix.codebooks, pqLutPositions(ix.codebooks),
+      idCol, vecCol, dim, m, dim / m)
+    topKPerQuery(adcScore(ix.codes.join(broadcast(pairs), "cand_id")
+      .join(broadcast(lut), "query_id"), m), k, "cos_adc", longRank = true)
+  }
+
+  /** TRAIN/SERVE SPLIT of [[ivfPqTopK]], write half: [[ivfPqBuild]],
+    * written as three Parquet datasets under `dir` — the S4 sink
     * discipline applied to the ANN index, which is the production
     * shape at 100 TB: the index is built ONCE by a training job and
     * every serving job loads it, instead of each search dragging the
@@ -768,65 +822,50 @@ object Similarity {
     *  - `centroids/` (cent_id, cv): the coarse quantizer — nCells rows.
     *  - `codebooks/` (j, cent_id, cv): the trained PQ codebooks —
     *    m·kCodes rows.
-    *  - `codes/` (cand_id, cell, i0..i{m−1}, srr): one row per corpus
-    *    vector — its coarse cell, its m codeword LUT positions and its
-    *    reconstruction norm. The ONLY corpus-sized dataset, m bytes of
+    *  - `codes/` (cand_id, i0..i{m−1}, srr, cell): one row per corpus
+    *    vector — its m codeword LUT positions, its reconstruction norm
+    *    and its coarse cell. The ONLY corpus-sized dataset, m bytes of
     *    codes per vector: the 32× compression that makes the store
     *    servable.
     *
-    * Everything the search path needs is IN the files (LUT positions
+    * Everything the search needs is IN the files (LUT positions
     * re-derive deterministically from the codebook rows; doubles and
-    * floats round-trip Parquet exactly), so [[searchIvfPqIndex]] over
-    * the written index is row-identical to [[ivfPqTopK]] with the same
-    * parameters — spec-pinned, and proven through the oracle gate by
-    * the `sim_index_persist_search` registry query. */
+    * floats round-trip Parquet exactly), and [[searchIvfPqIndex]] runs
+    * the same [[ivfPqSearch]] over them that [[ivfPqTopK]] runs over
+    * the in-memory build — so the two are row-identical by construction
+    * for the same parameters (spec-pinned, and proven through the
+    * oracle gate by the `sim_index_persist_search` registry query). */
   def writeIvfPqIndex(vectors: DataFrame, idCol: String, vecCol: String,
       dir: String, nList: Int = 16, ivfSeed: Long = 2024L, dim: Int = 64,
       m: Int = 8, kCodes: Int = 16, pqSeed: Long = 77L, iters: Int = 1,
       targetCellSize: Int = 256, numVectors: Option[Long] = None,
       memoKey: Option[String] = None): Unit = {
-    import graft.functions.Deterministic.hrand
-    val sub = dim / m
-    val nCells = autoNList(numVectors.getOrElse(vectors.count()), nList, targetCellSize)
-    val cent = vectors
-      .orderBy(hrand(col(idCol), ivfSeed), col(idCol))
-      .limit(nCells)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv"))
-    val cents = CacheScope.persist(centroidArray(cent))
-    val a1 = vectors.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(cents))
-      .select(col(idCol).as("cand_id"),
-        expr(s"element_at(graft_top_cells($vecCol, cents, 1), 1).cent_id").as("cell"))
-    val (trained, asgF) =
-      pqTrainParts(vectors, idCol, vecCol, dim, m, kCodes, pqSeed, iters, memoKey)
-    val pos = pqLutPositions(trained)
-    val codes = pqEncodeRows(asgF, trained, pos, idCol, sub, m).join(a1, "cand_id")
+    val ix = ivfPqBuild(vectors, idCol, vecCol, nList, ivfSeed, dim, m,
+      kCodes, pqSeed, iters, targetCellSize, numVectors, memoKey)
     // serve-side file sizing (StoreFs.sizedForWrite): every search scans
     // these datasets, so their file count is every search's task count
-    StoreFs.sizedForWrite(cent).write.mode("overwrite").parquet(s"$dir/centroids")
-    StoreFs.sizedForWrite(trained).write.mode("overwrite").parquet(s"$dir/codebooks")
-    StoreFs.sizedForWrite(codes).write.mode("overwrite").parquet(s"$dir/codes")
+    StoreFs.sizedForWrite(ix.cent).write.mode("overwrite").parquet(s"$dir/centroids")
+    StoreFs.sizedForWrite(ix.codebooks).write.mode("overwrite").parquet(s"$dir/codebooks")
+    StoreFs.sizedForWrite(ix.codes.join(ix.cells, "cand_id"))
+      .write.mode("overwrite").parquet(s"$dir/codes")
   }
 
   /** TRAIN/SERVE SPLIT of [[ivfPqTopK]], serve half: answer top-k from
     * an index written by [[writeIvfPqIndex]], reading ONLY the
     * persisted files plus the caller's query vectors — no training
-    * lineage. Same probe chain (query vectors against the broadcast
-    * centroid array), same candidate restriction (probed cells' codes
-    * rows), same unrolled decimal ADC scoring and (cos DESC, cand_id)
-    * ranking as [[ivfPqTopK]] — row-identical by construction for the
-    * parameters the index was written with. `nProbe` and `k` are the
-    * serve-time choices; `dim` and `m` are STRUCTURAL properties of
-    * the written index and must match it — a mismatch would score
-    * against the wrong LUT slices, producing silently wrong cosines,
-    * so both are validated against the files here (m from the codes
-    * schema at zero cost, dim from one codebook row — a tiny driver
-    * fetch before the real search jobs). Output: (query_id, rk,
-    * cand_id, cos_adc), rk ≤ k. */
+    * lineage — through the same [[ivfPqSearch]] as [[ivfPqTopK]].
+    * `nProbe` and `k` are the serve-time choices; `dim` and `m` are
+    * STRUCTURAL properties of the written index and must match it — a
+    * mismatch would score against the wrong LUT slices, producing
+    * silently wrong cosines, so both are validated against the files
+    * here (m from the codes schema at zero cost, dim from one codebook
+    * row — a tiny driver fetch before the real search jobs). Output:
+    * (query_id, rk, cand_id, cos_adc), rk ≤ k. */
   def searchIvfPqIndex(indexDir: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 3, nProbe: Int = 2, dim: Int = 64,
       m: Int = 8): DataFrame = {
     require(k >= 1, s"searchIvfPqIndex needs k >= 1, got $k")
+    require(nProbe >= 1, s"searchIvfPqIndex needs nProbe >= 1, got $nProbe")
     val spark = queries.sparkSession
     val sub = dim / m
     val cent = spark.read.parquet(s"$indexDir/centroids")
@@ -846,25 +885,9 @@ object Similarity {
     // scan — scope-persisted so the index is read once per search job
     // (the same reader the m-validation used: one file listing)
     val codes = CacheScope.persist(codesRaw)
-    val cents = CacheScope.persist(centroidArray(cent))
-    val probes = queries.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(cents))
-      .select(col(idCol).as("query_id"),
-        explode(topCells(vecCol, math.max(nProbe, 1))).as("pc"))
-      .select(col("query_id"), col("pc.cent_id").as("cell"))
-    val pairs = broadcast(probes)
-      .join(codes.select(col("cand_id"), col("cell")), "cell")
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
-    val pos = pqLutPositions(trained)
-    val lut = pqQueryLut(queries, trained, pos, idCol, vecCol, dim, m, sub)
-    val scored = adcScore(
-      codes.drop("cell").join(broadcast(pairs), "cand_id")
-        .join(broadcast(lut), "query_id"), m)
-    val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("cand_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("cand_id"), col("c").as("cos_adc"))
+    ivfPqSearch(IvfPqIndex(cent, CacheScope.persist(centroidArray(cent)),
+        codes.select("cand_id", "cell"), codes.drop("cell"), trained),
+      queries, idCol, vecCol, k, nProbe, dim, m)
   }
 
   /** Johnson–Lindenstrauss random projection: dim → outDim with a
@@ -916,51 +939,25 @@ object Similarity {
 
   /** IVF-style top-k: a seeded coarse quantizer (centroid vectors
     * picked by the deterministic hash — single assignment pass, no
-    * Lloyd iterations), inverted lists by nearest centroid, queries
-    * probe their `nProbe` nearest cells. The cell count is data-driven:
-    * `max(nList, ceil(sqrt(n / targetCellSize)))` per [[autoNList]] —
-    * pass the corpus size via `numVectors` (e.g. Tables.rowCount, a
-    * session-cached metadata-level statistic); the `vectors.count()`
-    * fallback is correct but prices in whatever lineage `vectors`
-    * carries. API INVARIANT: `numVectors` must be the row count of the
-    * EXACT FRAME passed as `vectors` — a raw-table count over a
-    * filtered/derived frame silently mis-sizes the cells.
+    * Lloyd iterations), inverted lists by nearest centroid, each query
+    * VECTOR probes its `nProbe` nearest cells ([[probedPairs]] — so a
+    * query need not be a corpus member), and the probed members are
+    * scored by exact cosine. The cell count is data-driven:
+    * `max(nList, ceil(sqrt(n / targetCellSize)))` per [[autoNList]],
+    * with n = `numVectors` (see the header's invariant).
     * Output: (query_id, rk, cand_id, cos). */
   def ivfTopK(vectors: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int = 3, nList: Int = 16, nProbe: Int = 2,
-      seed: Long = 2024L, dim: Int = 64, targetCellSize: Int = 256,
+      seed: Long = 2024L, targetCellSize: Int = 256,
       numVectors: Option[Long] = None): DataFrame = {
-    import graft.functions.Deterministic.hrand
+    require(nProbe >= 1, s"ivfTopK needs nProbe >= 1, got $nProbe")
     val nCells = autoNList(numVectors.getOrElse(vectors.count()), nList, targetCellSize)
-    val cent = vectors
-      .orderBy(hrand(col(idCol), seed), col(idCol))
-      .limit(nCells)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cv"))
-    // Shuffle-free assignment: one-row centroid-array build side, then
-    // the top-nProbe cells per vector selected inside a single
-    // expression (see topCells) — nProbe output rows per vector, no
-    // Window. Scope-enrolled persist: the frame feeds both the inverted
-    // list and the query probes.
-    val asg = CacheScope.persist(vectors.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(centroidArray(cent)))
-      .select(col(idCol), posexplode(topCells(vecCol, math.max(nProbe, 1))))
-      .select(col(idCol), (col("pos") + 1).as("rn"), col("col.cent_id").as("cent_id")))
-    val a1 = asg.filter(col("rn") === 1)
-      .select(col(idCol).as("cand_id"), col("cent_id"))
-    val probes = asg.join(queries.select(col(idCol)), idCol)
-      .filter(col("rn") <= nProbe)
-      .select(col(idCol).as("query_id"), col("cent_id"))
-    val cand = broadcast(probes).join(a1, "cent_id")
-      .filter(col("cand_id") =!= col("query_id"))
-      .select("query_id", "cand_id")
+    val (_, cents, cells) = coarseQuantizer(vectors, idCol, vecCol, nCells, seed)
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"))
     val xv = vectors.select(col(idCol).as("cand_id"), col(vecCol).as("x"))
-    val sc = cand.join(broadcast(qv), "query_id").join(xv, "cand_id")
-      .select(col("query_id"), col("cand_id"),
-        round(cosine("q", "x", dim), 6).as("cs"))
-    val w = Window.partitionBy("query_id").orderBy(col("cs").desc, col("cand_id"))
-    sc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("cand_id"), col("cs").as("cos"))
+    topKPerQuery(probedPairs(cents, cells, queries, idCol, vecCol, nProbe)
+        .join(broadcast(qv), "query_id").join(xv, "cand_id")
+        .select(col("query_id"), col("cand_id"), round(cosine("q", "x"), 6).as("c")),
+      k, "cos")
   }
 }

@@ -960,7 +960,7 @@ object QSim {
     import graft.functions.Deterministic.stableSum
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
     Similarity.kmeans(e, "vec_id", "v", k = kmK, iters = 2, seed = kmSeed,
-        dim = kmDim, memoKey = Some(graft.operators.Memo.corpusKey("km", d)))
+        memoKey = Some(graft.operators.Memo.corpusKey("km", d)))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_vec"),
         round(stableSum(col("cos"), 6) / count(lit(1)), 6).as("mean_cos"))
@@ -996,8 +996,7 @@ object QSim {
     import graft.functions.Deterministic.stableSum
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
     Similarity.kmeansSilhouette(e, "vec_id", "v", k = kmK, iters = 2,
-        seed = kmSeed, dim = kmDim,
-        memoKey = Some(graft.operators.Memo.corpusKey("km", d)))
+        seed = kmSeed, memoKey = Some(graft.operators.Memo.corpusKey("km", d)))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"),
         round(stableSum(col("sil"), 6) / count(lit(1)), 6).as("mean_sil"),
@@ -1834,20 +1833,12 @@ object QSim {
     // rule resolves to the same k, the two queries share one trained
     // chain (k is part of the key, so a different sizing never collides)
     val asg = Similarity.kmeans(e, "vec_id", "v",
-        k = kCells, iters = 2, seed = kmSeed, dim = kmDim,
+        k = kCells, iters = 2, seed = kmSeed,
         memoKey = Some(graft.operators.Memo.corpusKey("km", d)))
       .select(col("vec_id"), col("cell"))
-    // the pair join consumes the (vec_id, cell, v) frame on both sides;
-    // SHUFFLE_HASH (r14, the dedup-family discipline): the frame
-    // carries the full vectors, and Catalyst's under-threshold estimate
-    // would serialize them all through one driver broadcast — the
-    // cell-keyed parallel exchange is the plan that survives a
-    // corpus-sized vector table
-    val withV = CacheScope.persist(asg.join(e, "vec_id"))
-    val pairs = withV.as("a").join(withV.hint("shuffle_hash").as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .filter(Similarity.cosine("a.v", "b.v", kmDim) >= semTau)
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+    val pairs = Dedup.cellPairs(asg.join(e, "vec_id"), "vec_id", "v")
+      .filter(col("c") >= semTau)
+      .select(col("vec_a"), col("vec_b"))
     val cc = Dedup.connectedComponents(pairs, "vec_a", "vec_b")
       .withColumnRenamed("node", "vec_id")
     e.select("vec_id").join(cc, Seq("vec_id"), "left")

@@ -98,17 +98,15 @@ object ScaleAccounting {
       // the linear rule, seed 4242, tau 0.4) — candidates = within-cell
       // pairs, emitted = pairs >= tau
       val (smCand, smEmit) = CacheScope.withScope {
-        import graft.operators.{CacheScope => CS, Similarity}
-        val e = CS.persist(Tables.embeddings(spark, sfDir)
+        import graft.operators.Similarity
+        val e = CacheScope.persist(Tables.embeddings(spark, sfDir)
           .select(col("vec_id"), col("embedding").as("v")))
         val nv = Tables.rowCount(spark, sfDir, "embeddings")
         val asg = Similarity.kmeans(e, "vec_id", "v",
           k = Similarity.autoCellCount(nv, 8, 256), iters = 2, seed = 4242L)
           .select(col("vec_id"), col("cell"))
-        val withV = CS.persist(asg.join(e, "vec_id"))
-        val cand = CS.persist(withV.as("a").join(withV.as("b"),
-            col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-          .select(Similarity.cosine("a.v", "b.v").as("c")))
+        val cand = CacheScope.persist(
+          Dedup.cellPairs(asg.join(e, "vec_id"), "vec_id", "v"))
         (cand.count(), cand.filter(col("c") >= 0.4).count())
       }
       // embedding cosine: the registry query's exact parameters

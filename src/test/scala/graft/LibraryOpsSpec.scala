@@ -234,7 +234,7 @@ class LibraryOpsSpec extends AnyFunSuite {
     val planted = dups.map(d => (d._1 - 100, d._1)).toSet
     assert(planted.subsetOf(expected), "every planted dup must be a brute-force tau-pair")
     val found = Dedup.embeddingNearDup(df, "vid", "vec", blockCols = Seq("lbl"),
-      threshold = tau, nList = 4, nProbe = 2, seed = 7L, dim = dim)
+      threshold = tau, nList = 4, nProbe = 2, seed = 7L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found == expected,
       s"blocking missed ${expected -- found} / emitted spurious ${found -- expected}")
@@ -312,7 +312,7 @@ class LibraryOpsSpec extends AnyFunSuite {
       assert(planted.subsetOf(expected))
       val found = Dedup.embeddingNearDup(rows.toDF("vid", "lbl", "vec"), "vid", "vec",
         blockCols = Seq("lbl"), threshold = tau, nList = floor, nProbe = 3,
-        seed = 7L, dim = dim, targetCellSize = target)
+        seed = 7L, targetCellSize = target)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(found == expected,
         s"n=${rows.size}: missed ${expected -- found} / spurious ${found -- expected}")
@@ -429,7 +429,7 @@ class LibraryOpsSpec extends AnyFunSuite {
       (3L, Array(0.0f, 1.0f, 0.0f)),
       (4L, Array(0.0f, 0.0f, 1.0f))).toDF("vid", "emb")
     val top = Similarity.bruteTopK(vecs, vecs.filter(col("vid") === 1), "vid", "emb",
-      k = 2, dim = 3)
+      k = 2)
       .orderBy("rk").collect().map(r => r.getLong(2))
     assert(top.head == 2L)             // nearest to e1 is the 0.9/0.1 vector
     assert(top.toSeq == Seq(2L, 3L) || top.toSeq == Seq(2L, 4L))
@@ -682,10 +682,10 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(Dedup.simhash(noDocs, "id", "body").count() == 0)
     assert(Dedup.ngramJaccard(noDocs, "id", "body", blockCols = Seq("grp")).count() == 0)
     assert(Dedup.embeddingNearDup(noVecs, "vid", "vec", Seq("lbl"),
-      threshold = 0.9, nList = 4, nProbe = 2, dim = 8).count() == 0)
-    assert(Similarity.bruteTopK(noVecs, noVecs, "vid", "vec", k = 3, dim = 8).count() == 0)
+      threshold = 0.9, nList = 4, nProbe = 2).count() == 0)
+    assert(Similarity.bruteTopK(noVecs, noVecs, "vid", "vec", k = 3).count() == 0)
     assert(Similarity.ivfTopK(noVecs, noVecs, "vid", "vec", k = 3,
-      nList = 4, nProbe = 2, dim = 8).count() == 0)
+      nList = 4, nProbe = 2).count() == 0)
     val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(Dedup.connectedComponents(noEdges, "a", "b").count() == 0)
     assert(TextOps.contamination(noDocs, noDocs, "id", "body").count() == 0)
@@ -972,7 +972,7 @@ class LibraryOpsSpec extends AnyFunSuite {
     }
     def run(parts: Int) =
       Similarity.kmeans(rows.toDF("vid", "vec").repartition(parts),
-          "vid", "vec", k = 2, iters = 2, seed = 99L, dim = 4)
+          "vid", "vec", k = 2, iters = 2, seed = 99L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = run(4)
     val evenCells = (0L until 20L by 2).map(got).toSet
@@ -1165,8 +1165,7 @@ class LibraryOpsSpec extends AnyFunSuite {
         kCodes = 6, pqSeed = 5L, iters = 1, numVectors = Some(40L))
       .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
     val ivf = Similarity.ivfTopK(d, q, "vid", "vec",
-        k = 100, nList = 4, nProbe = 2, seed = 11L, dim = dim,
-        numVectors = Some(40L))
+        k = 100, nList = 4, nProbe = 2, seed = 11L, numVectors = Some(40L))
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     // 1) candidate restriction IS the IVF candidate set (same coarse
     //    quantizer, same probes); 2) every probed pair scores exactly
@@ -1175,6 +1174,82 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(ivfadc.nonEmpty && ivfadc.size < full.size)
     ivfadc.foreach { case (pair, c) =>
       assert(full(pair) == c, s"ADC score mismatch for $pair: $c vs ${full(pair)}")
+    }
+  }
+
+  test("Similarity.ivfTopK probes from the query vectors: out-of-corpus queries at nProbe = nList equal bruteTopK") {
+    import spark.implicits._
+    val dim = 8
+    def rng(seed: Long): Iterator[Double] = Iterator.iterate(seed * 2862933555777941757L + 3037000493L)(
+      s => s * 2862933555777941757L + 3037000493L)
+      .map(s => (s >>> 33).toDouble / (1L << 31).toDouble - 0.5)
+    val d = (0 until 300).map(i => (i.toLong, rng(i + 1).take(dim).toArray)).toDF("vid", "vec")
+    // query ids outside the corpus, vectors of their own
+    val q = (0 until 5).map(i => (1000L + i, rng(500 + i).take(dim).toArray)).toDF("vid", "vec")
+    // 4 cells (autoNList(300, 4, 256)), every one probed: the IVF
+    // candidate set is the whole corpus, so the answer is brute force's
+    val ivf = Similarity.ivfTopK(d, q, "vid", "vec", k = 3, nList = 4, nProbe = 4,
+        seed = 11L, numVectors = Some(300L)).collect().toSet
+    val brute = Similarity.bruteTopK(d, q, "vid", "vec", k = 3).collect().toSet
+    assert(brute.size == 15)
+    assert(ivf == brute, s"ivf ${ivf -- brute} / brute ${brute -- ivf}")
+  }
+
+  test("IVF and embedding near-dup entry points refuse nProbe < 1, naming the value") {
+    import spark.implicits._
+    val noVecs = Seq.empty[(Long, Int, Array[Float])].toDF("vid", "lbl", "vec")
+    for (np <- Seq(0, -1)) {
+      val calls: Seq[() => Any] = Seq(
+        () => Similarity.ivfTopK(noVecs, noVecs, "vid", "vec", nProbe = np),
+        () => Similarity.ivfPqTopK(noVecs, noVecs, "vid", "vec", nProbe = np, dim = 8, m = 2),
+        () => Similarity.searchIvfPqIndex("/nonexistent-index", noVecs, "vid", "vec", nProbe = np),
+        () => Dedup.embeddingNearDup(noVecs, "vid", "vec", Seq("lbl"), threshold = 0.9, nProbe = np),
+        () => Dedup.embeddingNearDupCandidates(noVecs, "vid", "vec", Seq("lbl"), nProbe = np))
+      calls.foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"nProbe >= 1, got $np"), e.getMessage)
+      }
+    }
+  }
+
+  test("Dedup.cellPairs over a k-means assignment equals a brute (cell, a.id < b.id) join at tau") {
+    import spark.implicits._
+    val dim = 8
+    def rng(seed: Long): Iterator[Double] = Iterator.iterate(seed * 2862933555777941757L + 3037000493L)(
+      s => s * 2862933555777941757L + 3037000493L)
+      .map(s => (s >>> 33).toDouble / (1L << 31).toDouble - 0.5)
+    // 60 bases plus a lightly perturbed near-dup of every 4th
+    val base = (0 until 60).map(i => (i.toLong, rng(i + 1).take(dim).toArray))
+    val dups = base.filter(_._1 % 4 == 0).map { case (id, v) =>
+      (id + 100, v.zip(rng(id + 1000).take(dim)).map { case (a, b) => a + 0.001 * b })
+    }
+    val rows = (base ++ dups).map { case (id, v) => (id, v.map(_.toFloat)) }
+    val e = rows.toDF("vid", "v")
+    val asg = Similarity.kmeans(e, "vid", "v", k = 4, iters = 2, seed = 4242L)
+      .select(col("vid"), col("cell"))
+    val tau = 0.4
+    // the form dedup_semantic runs: (vid, cell, v) through the shared join
+    val found = Dedup.cellPairs(asg.join(e, "vid"), "vid", "v")
+      .filter(col("c") >= tau)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    val cell = asg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val vec = rows.toMap
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < dim) { dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i); i += 1 }
+      dot / math.sqrt(na * nb)
+    }
+    val expected = (for {
+      (ia, va) <- rows; (ib, vb) <- rows
+      if ia < ib && cell(ia) == cell(ib) && cos(va, vb) >= tau
+    } yield (ia, ib)).toSet
+    assert(cell.values.toSet.size > 1, "the assignment must split the corpus")
+    assert(expected.nonEmpty)
+    assert(found.length == found.map(_._1).toSet.size, "a single-cell assignment emits each pair once")
+    assert(found.map(_._1).toSet == expected,
+      s"missed ${expected -- found.map(_._1)} / spurious ${found.map(_._1).toSet -- expected}")
+    found.foreach { case ((a, b), c) =>
+      assert(math.abs(c - cos(vec(a), vec(b))) < 1e-12, s"cosine of ($a, $b): $c")
     }
   }
 
@@ -1840,22 +1915,22 @@ class LibraryOpsSpec extends AnyFunSuite {
       (1L, Array(1.0, 0.0)), (2L, Array(0.99, 0.14)),
       (3L, Array(0.0, 1.0)), (4L, Array(0.14, 0.99))).toDF("vid", "vec")
     val out = Similarity.kmeansSilhouette(vs, "vid", "vec",
-        k = 2, iters = 2, seed = 11L, dim = 2)
+        k = 2, iters = 2, seed = 11L)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out.size == 4)
     assert(out.values.forall(s => s > 0.5 && s <= 1.0),
       s"tight separated clusters must score high: $out")
     // assignments agree with kmeans on the same seed/chain
     val cells = Similarity.kmeans(vs, "vid", "vec", k = 2, iters = 2,
-        seed = 11L, dim = 2)
+        seed = 11L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val silCells = Similarity.kmeansSilhouette(vs, "vid", "vec",
-        k = 2, iters = 2, seed = 11L, dim = 2)
+        k = 2, iters = 2, seed = 11L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(silCells == cells, "silhouette must score the kmeans assignment")
     // k = 1: no alternative centroid → silhouette defined as 0
     val k1 = Similarity.kmeansSilhouette(vs, "vid", "vec",
-        k = 1, iters = 1, seed = 11L, dim = 2)
+        k = 1, iters = 1, seed = 11L)
       .collect().map(_.getDouble(2))
     assert(k1.forall(_ == 0.0), s"k=1 must score 0: ${k1.toSeq}")
   }

@@ -120,7 +120,7 @@ class PropertySpec extends AnyFunSuite {
     val df = rows.toDF("vid", "lbl", "vec")
     def run(d: org.apache.spark.sql.DataFrame) =
       Dedup.embeddingNearDup(d, "vid", "vec", blockCols = Seq("lbl"),
-        threshold = 0.3, nList = 4, nProbe = 2, seed = 9L, dim = 8)
+        threshold = 0.3, nList = 4, nProbe = 2, seed = 9L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val a = run(df.coalesce(1).orderBy("vid"))
     val b = run(df.repartition(7, col("vec")))
