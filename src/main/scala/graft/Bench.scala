@@ -85,7 +85,7 @@ object Bench {
     * `SPARK_GRAFT_ONLY` — a filtered run never replaces the record of
     * the whole registry. */
   private[graft] def outputPath(filtered: Boolean, env: Map[String, String],
-      repoRoot: String): String =
+      repoRoot: => String): String =
     env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"$repoRoot/${if (filtered) "BENCH_FILTERED.json" else "BENCH_PARSED.json"}")
 

@@ -172,8 +172,8 @@ object Dedup {
     *
     * `memoKey`: when set, the table is memoized session-wide in the
     * CORPUS tier ([[Memo.cachedCorpus]] — corpus-proportional by
-    * construction; at 100 TB this frame is the one you WRITE as a
-    * derived Parquet table instead of caching, see the Memo tier doc).
+    * construction, so it is WRITTEN once as a derived Parquet table
+    * instead of cached, see the Memo tier doc).
     * `carry` columns ride along so consumers' block keys (lang,
     * length bucket, source) need no join back to the raw table. */
   def minhashSigTable(docs: DataFrame, idCol: String, textCol: String,
@@ -213,8 +213,8 @@ object Dedup {
     * the [[minhashSigTable]] written ONCE as a Parquet SIGNATURE STORE
     * (the S4 sink discipline the ANN index got in
     * [[Similarity.writeIvfPqIndex]], and exactly the conversion the
-    * corpus-tier memo doc prescribes at 100 TB: the per-document
-    * derived table is the one you WRITE instead of caching). Two
+    * corpus-tier memo makes: the per-document derived table is
+    * WRITTEN instead of cached). Two
     * datasets under `dir`:
     *
     *  - `sig/` (id, s: array<bigint>, mh0..mh{nHash−1}: bigint): one
@@ -628,7 +628,7 @@ object Dedup {
     * the operator builds the same table itself. A supplied table is
     * used as-is by SEVERAL plan branches (bands + both verify sides)
     * with no persist layered on top — the memoized table is already
-    * cached and a projection of it re-reads that cache; a RAW
+    * a written table and a projection of it re-scans it; a RAW
     * unpersisted table would re-run its text stage per branch, so
     * persist it (or pass `memoKey` to [[minhashSigTable]]) before
     * handing it in. */

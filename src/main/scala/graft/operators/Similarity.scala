@@ -505,9 +505,8 @@ object Similarity {
     * FINAL assignment are memoized session-wide via [[Memo]] under
     * `memoKey/params/…` — codebooks on the BOUNDED tier (m·kCodes
     * rows), exSub and the final assignment on the CORPUS tier (m rows
-    * per input vector, the audited per-row factor: these are the
-    * frames a 100 TB deployment writes as derived Parquet instead of
-    * pinning) — `sim_pq_error` (iters = 2) and
+    * per input vector, the audited per-row factor: written once as
+    * derived Parquet, never pinned) — `sim_pq_error` (iters = 2) and
     * `sim_pq_adc_topk` (iters = 1) train the SAME seeded codebooks,
     * and iteration i's frames are a strict prefix of iteration i+1's,
     * so with a shared key the second query (and every bench rep) pays
@@ -553,9 +552,9 @@ object Similarity {
       case None    => CacheScope.persist(b.coalesce(1))
     }
     // corpus-PROPORTIONAL frames (m rows per input vector: the sliced
-    // sub-vector table and the final assignment): CORPUS tier when
-    // keyed — the write-as-derived-Parquet-at-100TB class, audited
-    // against the m-per-row factor — else the original behavior
+    // sub-vector table and the final assignment): CORPUS tier (a
+    // written table) when keyed, audited against the m-per-row
+    // factor — else the original behavior
     def memoCp(k: String)(b: => DataFrame): DataFrame = pfx match {
       case Some(p) => Memo.cachedCorpus(s"$p/$k")(b)
       case None    => CacheScope.persist(b)

@@ -32,13 +32,20 @@ object Q {
       QText.all ++ QSim.all ++ QKernels.all ++ QMedia.all ++ QStream.all ++
       QGaps.all ++ QGaps2.all ++ QCuration.all ++ QScale.all ++ QEvents.all
 
-  /** Repo root for the committed fixture parquets — overridable for
-    * non-/root/repo checkouts via -Dgraft.repo.root or GRAFT_REPO_ROOT
-    * (resolved when the oracle SQL is built, i.e. at Verify time). */
-  def repoRoot: String =
-    sys.props.get("graft.repo.root")
-      .orElse(sys.env.get("GRAFT_REPO_ROOT"))
-      .getOrElse("/root/repo")
+  /** Repo root for the committed fixture parquets and the records
+    * `graft.Bench` and `tools.ScaleAccounting` write:
+    * -Dgraft.repo.root, else GRAFT_REPO_ROOT, else the working
+    * directory when it holds `build.sbt` (sbt runs mains and tests from
+    * the checkout root); anywhere else it fails, naming the variable. */
+  def repoRoot: String = repoRoot(sys.props.toMap, sys.env, sys.props("user.dir"))
+
+  private[graft] def repoRoot(props: Map[String, String], env: Map[String, String],
+      cwd: String): String =
+    props.get("graft.repo.root").orElse(env.get("GRAFT_REPO_ROOT")).getOrElse {
+      require(new java.io.File(cwd, "build.sbt").isFile,
+        s"no repo root: $cwd holds no build.sbt; set GRAFT_REPO_ROOT to the checkout")
+      cwd
+    }
 
   /** Root of the generated sf* parquet directories — overridable the
     * same way as [[repoRoot]] for non-/root checkout layouts (used by

@@ -37,6 +37,7 @@ object ScaleAccounting {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleAccounting <sfDir> [<sfDir> ...]")
+    val out = graft.queries.Q.repoRoot + "/SCALE_ACCOUNTING.json"
     val spark = GraftSession.local()
 
     val lines = args.toSeq.map { sfDir =>
@@ -128,7 +129,6 @@ object ScaleAccounting {
       f"""{"sf":"$sfDir","simhash":{"n_docs":$nDocs,${blk(shCand, shEmit)}},"embedding_cosine":{"n_vecs":$nVecs,${blk(emCand, emEmit)}},"minhash_lsh":{${blk(mhCand, mhEmit)}},"incremental_minhash":{${blk(inCand, inEmit)}},"ngram_jaccard":{${blk(ngCand, ngEmit)}},"ngram_containment":{${blk(ctCand, ctEmit)}},"substring_run":{${blk(srCand, srEmit)}},"semantic":{${blk(smCand, smEmit)}}}"""
     }
     lines.foreach(println)
-    val out = graft.queries.Q.repoRoot + "/SCALE_ACCOUNTING.json"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       lines.mkString("", "\n", "\n"))
     catch { case e: Throwable =>

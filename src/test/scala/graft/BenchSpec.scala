@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Q
 
 /** The bench record's output routing, its head fields and its `errors`
   * object. */
@@ -12,6 +13,21 @@ class BenchSpec extends AnyFunSuite {
     val out = Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/x.json")
     assert(Bench.outputPath(filtered = true, out, "/r") == "/tmp/x.json")
     assert(Bench.outputPath(filtered = false, out, "/r") == "/tmp/x.json")
+  }
+
+  test("the repo root comes from the property, the variable or a checkout working directory") {
+    val checkout = java.nio.file.Files.createTempDirectory("graft-root").toFile
+    val elsewhere = java.nio.file.Files.createTempDirectory("graft-noroot").toFile
+    new java.io.File(checkout, "build.sbt").createNewFile()
+    val env = Map("GRAFT_REPO_ROOT" -> "/e")
+    assert(Q.repoRoot(Map("graft.repo.root" -> "/p"), env, elsewhere.getPath) == "/p")
+    assert(Q.repoRoot(Map.empty, env, elsewhere.getPath) == "/e")
+    assert(Q.repoRoot(Map.empty, Map.empty, checkout.getPath) == checkout.getPath)
+    val e = intercept[IllegalArgumentException](Q.repoRoot(Map.empty, Map.empty, elsewhere.getPath))
+    assert(e.getMessage.contains("GRAFT_REPO_ROOT") && e.getMessage.contains(elsewhere.getPath))
+    // an explicit output path needs no repo root
+    assert(Bench.outputPath(filtered = false, Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/x.json"),
+      sys.error("root resolved")) == "/tmp/x.json")
   }
 
   test("the record and the summary line carry the session's core count") {

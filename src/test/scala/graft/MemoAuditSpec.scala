@@ -21,8 +21,10 @@ import graft.operators.Memo
   *    m = 8 for PQ's sliced sub-vectors) — memoizing an EXPLODED
   *    stream (per-token/per-shingle rows) would blow the executor
   *    cache at scale and fails the row bound here;
-  *  - every entry persists with a disk fallback (an OOM-safe storage
-  *    level), since memo entries outlive per-query cache scopes.
+  *  - every bounded entry persists with a disk fallback (an OOM-safe
+  *    storage level), since memo entries outlive per-query cache
+  *    scopes; every corpus entry is a written table holding no RDD
+  *    storage.
   */
 class MemoAuditSpec extends AnyFunSuite {
 
@@ -78,6 +80,10 @@ class MemoAuditSpec extends AnyFunSuite {
           Some(s"${e.key}: registered in tier '${e.tier}', allowlisted as '$tiers'")
         case Some(_) if e.tier == "corpus" && !corpusBound.contains(tag) =>
           Some(s"${e.key}: corpus-tier tag '$tag' has no declared row bound")
+        case _ if e.tier == "corpus" && !e.storage.startsWith("written:") =>
+          Some(s"${e.key}: corpus-tier entry is not a written table (${e.storage})")
+        case _ if e.tier == "corpus" && Memo.lookup(e.key).exists(_.storageLevel.isValid) =>
+          Some(s"${e.key}: corpus-tier entry holds RDD storage")
         case _ if !e.storage.contains("disk") && !e.storage.startsWith("written:") =>
           Some(s"${e.key}: storage '${e.storage}' has no disk fallback")
         case _ => None
@@ -170,12 +176,83 @@ class MemoAuditSpec extends AnyFunSuite {
       spark.conf.unset(conf)
       Memo.clear()
     }
-    // with the conf unset the default executor-cache posture is intact
-    val df = Memo.cachedCorpus("tok:/spec/spill-default@cafe") {
-      Seq((1L, "a")).toDF("doc_id", "text")
+  }
+
+  test("default corpus-tier posture: written under the per-application root, no RDD storage, reported on-disk bytes") {
+    import spark.implicits._
+    Memo.clear()
+    try {
+      val key = "tok:/spec/spill-default@cafe"
+      def corpus = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text")
+      val cachedBefore = spark.sparkContext.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet
+      val df = Memo.cachedCorpus(key)(corpus)
+      assert(df.collect().map(_.toSeq).toSet == corpus.collect().map(_.toSeq).toSet,
+        "written-table serve diverged from the built frame")
+      val sc = spark.sparkContext
+      val appRoot = new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft_corpus_memo-${sc.applicationId}-${sc.startTime}")
+      val stat = Memo.report.find(_.key == key).get
+      assert(stat.tier == "corpus" && stat.storage.startsWith(s"written:${appRoot.getPath}/tok-"),
+        s"default corpus entry reported as (${stat.tier}, ${stat.storage}) under $appRoot")
+      assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        s"default corpus entry is cached at ${df.storageLevel}")
+      assert(sc.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet == cachedBefore,
+        "serving a default corpus entry added RDD storage")
+      // the report's bytes are the written table's on-disk Parquet bytes
+      val parts = new java.io.File(stat.storage.stripPrefix("written:")).listFiles
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty && stat.bytes == parts.map(_.length).sum,
+        s"reported ${stat.bytes} bytes, on disk ${parts.map(_.length).sum}")
+      // clear() drops the session's written tables with the entries
+      Memo.clear()
+      assert(!appRoot.exists, s"clear() left the per-application root $appRoot")
+    } finally Memo.clear()
+  }
+
+  test("the per-application corpus root is deleted when its SparkContext stops") {
+    // a context cannot be stopped under the shared test session, so a
+    // child JVM on this classpath builds, serves and stops its own
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++ Seq("-Dspark.ui.enabled=false",
+      "-cp", System.getProperty("java.class.path"), "graft.MemoAppRootProbe")
+    val out = new StringBuilder
+    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), _ => ()))
+    val lines = out.toString.linesIterator.toSeq
+    assert(rc == 0, s"probe JVM exited $rc:\n$out")
+    val root = lines.collectFirst { case s"root $r" => r }.get
+    assert(lines.contains("before stop: present"), out.toString)
+    assert(lines.contains("after stop: absent"), out.toString)
+    assert(!new java.io.File(root).exists, s"$root outlived its context")
+  }
+
+  test("a corpus write does not hold the memo lock: report returns while a build is blocked") {
+    import spark.implicits._
+    Memo.clear()
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val builder = new Thread(() => {
+      Memo.cachedCorpus("tok:/spec/lock@1") {
+        entered.countDown()
+        release.await()
+        Seq((1L, "a")).toDF("doc_id", "text")
+      }
+      ()
+    })
+    builder.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS), "build never started")
+      val rep = scala.concurrent.Future(Memo.report)(scala.concurrent.ExecutionContext.global)
+      val keys = scala.concurrent.Await.result(rep, scala.concurrent.duration.Duration(10, "s"))
+        .map(_.key)
+      assert(!keys.contains("tok:/spec/lock@1"), "entry registered before its build finished")
+    } finally {
+      release.countDown()
+      builder.join(120000)
     }
-    assert(df.storageLevel.useDisk && df.storageLevel.useMemory,
-      "default corpus-tier posture must remain MEMORY_AND_DISK")
+    assert(Memo.report.exists(_.key == "tok:/spec/lock@1"), "entry not registered after its build")
     Memo.clear()
   }
 

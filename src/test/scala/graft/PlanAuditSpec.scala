@@ -34,7 +34,9 @@ class PlanAuditSpec extends AnyFunSuite {
       "sim_hard_negatives",       // same 8-query broadcast scoring pass
       "text_bm25_rank",           // 1-row corpus-stats broadcast cross
       "ret_hybrid_rrf",           // both legs' bounded crosses (bm25 stats + 1 query vec)
-      "sim_kmeans_cells",         // 1-row centroid-array broadcast cross (per iteration)
+      // (sim_kmeans_cells: its per-iteration 1-row centroid-array
+      // crosses run INSIDE the written corpus-tier assignment build, so
+      // the registered plan scans that table with no nested loop)
       "sim_kmeans_silhouette",    // same chain + the 1-row top-2 scoring cross
       "sketch_kmv_overlap",       // three 1-row sketch crosses
       "text_unigram_logprob",     // 1-row corpus-total broadcast cross
@@ -343,10 +345,19 @@ class PlanAuditSpec extends AnyFunSuite {
       s"sim_scalar_quant lost its broadcast scale join:\n$sq")
     // the per-document stages must stay ROW-LOCAL native expressions —
     // a silent regression to the explode+groupBy formulations would
-    // reintroduce a corpus-wide shuffle before candidate generation
+    // reintroduce a corpus-wide shuffle before candidate generation.
+    // The signature tables are corpus-tier memo entries, written by
+    // their own job and scanned by the queries, so the stage is pinned
+    // on the frame each table is written from (the same builder, unkeyed)
+    import graft.operators.Dedup
+    val docs = graft.Tables.documents(spark, s"${Q.testdataRoot}/sf0.001")
+    val mhSig = Dedup.minhashSigTable(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
+    assert(mhSig.contains("graft_minhash_sig") && !mhSig.contains("collect_set"),
+      s"minhashSigTable lost its row-local signature stage:\n$mhSig")
     val mh = plan("dedup_minhash_lsh")
-    assert(mh.contains("graft_minhash_sig") && !mh.contains("collect_set"),
-      s"dedup_minhash_lsh lost its row-local signature stage:\n$mh")
+    assert(!mh.contains("collect_set"),
+      s"dedup_minhash_lsh regressed to a grouped signature stage:\n$mh")
     // the band-bucket population guard must stay an ANTI-join (bucket
     // drop), not a count window (full sort of the bands stream) or a
     // missing guard (unbounded degenerate buckets)
@@ -354,9 +365,10 @@ class PlanAuditSpec extends AnyFunSuite {
       s"dedup_minhash_lsh lost its band-bucket anti-join guard:\n$mh")
     assert(!mh.contains("Window"),
       s"dedup_minhash_lsh regressed to a window-based bucket guard:\n$mh")
-    val sh = plan("dedup_simhash")
+    val sh = Dedup.simhashSigTable(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString
     assert(sh.contains("graft_simhash"),
-      s"dedup_simhash lost its row-local signature stage:\n$sh")
+      s"simhashSigTable lost its row-local signature stage:\n$sh")
     val rep = plan("text_repetition_signals")
     assert(rep.contains("graft_repetition"),
       s"text_repetition_signals lost its row-local stage:\n$rep")
