@@ -25,6 +25,12 @@ import org.apache.spark.sql.SparkSession
   * alphabetical cluster (the failure mode of four straight r5–r8
   * closing recordings).
   *
+  * "cache" records, per query, the executor storage held right after
+  * its action and before its scope releases the scope's persists: the
+  * bytes and count of cached RDDs (the largest seen in any pass). A
+  * frame a query pins shows up against that query; session memos
+  * pinned by earlier queries show up too.
+  *
   * Load robustness: min-of-N cannot filter SUSTAINED machine load (the
   * r5 recording was inflated 2–3× across its whole duration), so the
   * run brackets itself with a fixed CPU-bound canary job timed before
@@ -121,6 +127,22 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
+  /** Executor storage held right now: the bytes (memory + disk) of
+    * every cached RDD and how many there are. Sampled after each
+    * query's action, inside its scope, so a frame the query pinned is
+    * recorded against that query. */
+  private[graft] def cacheSample(spark: SparkSession): (Long, Int) = {
+    val infos = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
+    (infos.map(i => i.memSize + i.diskSize).sum, infos.length)
+  }
+
+  /** The `cache` object: per query, the largest [[cacheSample]] seen
+    * after its action in any pass. */
+  private[graft] def cacheJson(peaks: Seq[(String, (Long, Int))]): String =
+    peaks.map { case (q, (bytes, frames)) =>
+      s""""${esc(q)}":{"bytes":$bytes,"frames":$frames}"""
+    }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.coreCount()
@@ -151,10 +173,23 @@ object Bench {
     // cost including plan compilation, codegen and any session-memo
     // build — the committed record of what the memo-warm minima hide.
     val coldAcc = scala.collection.mutable.Map.empty[String, Double]
-    selected.foreach { case (name, fn) =>
+    val cachePeak = scala.collection.mutable.Map.empty[String, (Long, Int)]
+    // runs a query's action and samples the cache inside its scope;
+    // returns the seconds taken without the sample's own time
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { graft.operators.CacheScope.withScope { fn(spark, sfDir).count() }
-        coldAcc(name) = (System.nanoTime() - t0) / 1e9 }
+      val sampleNs = graft.operators.CacheScope.withScope {
+        fn(spark, sfDir).count()
+        val s0 = System.nanoTime()
+        val (b, f) = cacheSample(spark)
+        val (pb, pf) = cachePeak.getOrElse(name, (0L, 0))
+        cachePeak(name) = (b.max(pb), f.max(pf))
+        System.nanoTime() - s0
+      }
+      (System.nanoTime() - t0 - sampleNs) / 1e9
+    }
+    selected.foreach { case (name, fn) =>
+      try coldAcc(name) = timed(name, fn)
       catch { case scala.util.control.NonFatal(_) => () }
     }
     val canaryStart = canarySec(spark)
@@ -178,18 +213,15 @@ object Bench {
     val errors = scala.collection.mutable.Map.empty[String, Throwable]
     (1 to math.max(1, reps)).foreach { pass =>
       selected.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
         // CacheScope: operator-internal persists release after each rep,
         // so caches never accumulate across the run (the r3 f-cluster
         // regression was exactly this pressure).
         // A rep that throws records nothing: a query failing every pass
         // reports null in the JSON, never the min of N fast failures.
-        val ok = try { graft.operators.CacheScope.withScope {
-          fn(spark, sfDir).count() }; true }
+        try acc(name) += timed(name, fn)
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          errors(name) = e; false }
-        if (ok) acc(name) += (System.nanoTime() - t0) / 1e9
+          errors(name) = e }
       }
       if (pass < math.max(1, reps)) {
         // A raw shot taken IMMEDIATELY after a pass's last query reads
@@ -261,7 +293,7 @@ object Bench {
     val loadSuspect = canaryRatio < 0.67 || canaryRatio > 1.5 ||
       passCanaries.exists(c => c >= 1.5 * math.max(canaryStart, canaryEnd))
     val full =
-      "{" + headJson(total, nFailed, cpus) + f""","total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"errors":$errs,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
+      "{" + headJson(total, nFailed, cpus) + f""","total_median":$totalMed%.3f,"canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f,"canary_ratio":$canaryRatio%.3f,"canary_passes":$cps,"load_suspect":$loadSuspect,"errors":$errs,"queries":$qs,"queries_median":$qsMed,"queries_cold":$qsCold,"cache":${cacheJson(selected.flatMap { case (k, _) => cachePeak.get(k).map(k -> _) })},"memo":$memoJson,"sf":"${esc(sfDir)}"}"""
     println(full)
     // The full line (~3 KB at 86 queries) outgrows the harness's 2000-char
     // output tail, so per-query numbers also go to a FILE, and the very

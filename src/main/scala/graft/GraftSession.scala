@@ -94,6 +94,16 @@ object GraftSession {
             graft.functions.SimhashSig(a)
           }))
         ext.injectFunction((
+          FunctionIdentifier("graft_bucket_members"),
+          new ExpressionInfo(classOf[graft.functions.BucketMembers].getName,
+            "graft_bucket_members"),
+          (children: Seq[Expression]) => {
+            val Seq(m, cap) = arity("graft_bucket_members", 2, children)
+            require(cap.foldable && cap.eval() != null,
+              s"graft_bucket_members needs a literal cap, got ${cap.sql}")
+            graft.functions.BucketMembers(m, cap.eval().toString.toLong)
+          }))
+        ext.injectFunction((
           FunctionIdentifier("graft_repetition"),
           new ExpressionInfo(classOf[graft.functions.RepetitionSignals].getName,
             "graft_repetition"),

@@ -109,20 +109,41 @@ object Dedup {
       .filter(col("j") >= threshold)
       .select(keep.map(col) :+ round(col("j"), 6).as("jaccard"): _*)
 
-  /** The degenerate-corpus guard's drop list for a bucketed frame: the
-    * buckets (distinct `keys` values — (band, bkey) for the MinHash
-    * family, the probed `bucket` for [[simhash]]) holding more than
-    * `maxBucket` rows, which the caller anti-joins away before its
-    * candidate join (see [[minhashLsh]]'s `maxBucket`). Shared by the
-    * batch, incremental, streaming and simhash operators, so what the
-    * guard drops is decided in one place. */
-  private[graft] def overCapBuckets(bucketed: DataFrame, maxBucket: Long,
-      keys: Seq[String] = Seq("band", "bkey")): DataFrame = {
+  /** The degenerate-corpus guard of every bucketed candidate generator
+    * (batch, incremental and streaming MinHash on (band, bkey),
+    * [[simhash]] on its probed `bucket`), as ONE keyed pass: `bucketed`
+    * grouped on `keys`, one row per bucket holding at most `maxBucket`
+    * rows, with `members` — an array of struct(`member` columns) — for
+    * the caller to expand into candidate pairs ([[memberPairs]]) or
+    * index rows. A bucket over the cap is dropped whole (see
+    * [[minhashLsh]]'s `maxBucket`), so what the guard drops is decided
+    * in one place. The aggregate is [[graft.functions.BucketMembers]]:
+    * its state never holds more than `maxBucket` members and is
+    * dropped once a bucket passes the cap, so a flooded bucket costs
+    * O(1) state, not its population. The bucketed stream has this one
+    * reader, so it needs no persist, and the output is already
+    * hash-partitioned on `keys`. */
+  private[graft] def bucketMembers(bucketed: DataFrame, keys: Seq[String],
+      member: Seq[String], maxBucket: Long): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     bucketed.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bc")).filter(col("bc") > maxBucket)
-      .select(keys.map(col): _*)
+      .agg(call_function("graft_bucket_members", struct(member.map(col): _*),
+        lit(maxBucket)).as("members"))
+      .filter(col("members").isNotNull)
   }
+
+  /** The candidate pairs of a [[bucketMembers]] frame: `keys` plus
+    * member structs `a` and `b`, one row per ordered pair of members of
+    * one bucket with `aSide` true for `a` and `pair` true for (a, b).
+    * Singleton buckets never expand; `aSide` prunes before `b` does. */
+  private def memberPairs(buckets: DataFrame, keys: Seq[String],
+      pair: org.apache.spark.sql.Column,
+      aSide: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    buckets.filter(size(col("members")) > 1)
+      .select(keys.map(col) :+ col("members") :+ explode(col("members")).as("a"): _*)
+      .filter(aSide)
+      .select(keys.map(col) :+ col("a") :+ explode(col("members")).as("b"): _*)
+      .filter(pair)
 
   /** The LSH bands of a frame carrying minhash columns mh0..: `keep`
     * plus one (band, bkey) row per band of `bandRows` consecutive
@@ -528,9 +549,9 @@ object Dedup {
     * trusted from the caller (a mismatch would band against
     * incomparable minima, silently surfacing nothing) — and unioned
     * with the loaded store under an is_new flag; the chain from there
-    * is [[minhashLshIncremental]]'s own (band equi-join, over-cap
-    * bucket guard counted over store ∪ shard, exact-Jaccard verify on
-    * the stored shingle sets). Row-identical to running the inline
+    * is [[minhashLshIncremental]]'s own (one keyed band pass whose
+    * bucket guard counts store ∪ shard, exact-Jaccard verify on the
+    * stored shingle sets). Row-identical to running the inline
     * incremental over (corpus ∪ shard) by construction. `textCol` must
     * match the store's recorded text column — a different name is a
     * wrong-corpus signal, not a convenience to paper over. Output as
@@ -572,10 +593,13 @@ object Dedup {
       s"store sig/ at $storeDir lacks the $nHash minhash columns meta/ declares")
     val store = storeSig.select(col(storeId).as(idCol) +:
       lit(false).as("is_new") +: col("s") +: mhCols.map(col): _*)
-    // shard-sized only — scope-persisted because the unioned frame
-    // feeds three plan branches (bands + both verify sides); the STORE
-    // side deliberately stays an uncached scan per branch (at 100 TB
-    // the store is served from disk, not pinned in executor memory)
+    // the shard's signatures are the one persist of the serve, and it
+    // is shard-sized: the unioned frame has three readers (the keyed
+    // band pass and both verify sides), and without it each would
+    // re-hash the shard's text. The STORE side stays an uncached scan
+    // per reader (at 100 TB the store is served from disk, not pinned
+    // in executor memory), and the corpus-sized band rows stream into
+    // the keyed pass unpersisted
     val shardSig = CacheScope.persist(
       minhashSigTable(shard, idCol, textCol, Nil, ngram, nHash)
         .select(col(idCol) +: lit(true).as("is_new") +:
@@ -595,16 +619,17 @@ object Dedup {
 
   /** MinHash + LSH banding near-dup pairs: shingle → one md5 → 31-bit
     * integer → `nHash` affine-mix minhashes → `nHash/bandRows` bands →
-    * band-bucket equi-join → exact Jaccard verify ≥ `threshold`.
-    * Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
+    * one keyed pass over the band buckets ([[bucketMembers]]) whose
+    * members expand into candidate pairs → exact Jaccard verify ≥
+    * `threshold`. Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
     *
     * `maxBucket` is the degenerate-corpus guard (analog of
-    * [[ngramJaccard]]'s `maxDf`): a (band, bkey) bucket holding more
-    * than `maxBucket` docs is dropped from candidate generation
-    * entirely. Without it, 10⁶ boilerplate near-identical docs collapse
-    * into ONE bucket and the self-join emits ~5·10¹¹ candidate pairs —
-    * the one O(n²) path the banded design otherwise prevents. The
-    * recall trade, stated precisely: docs whose EVERY band bucket is
+    * [[ngramJaccard]]'s `maxDf`), applied in [[bucketMembers]]: a
+    * (band, bkey) bucket holding more than `maxBucket` docs is dropped
+    * from candidate generation entirely. Without it, 10⁶ boilerplate
+    * near-identical docs collapse into ONE bucket that expands into
+    * ~5·10¹¹ candidate pairs — the one O(n²) path the banded design
+    * otherwise prevents. The recall trade, stated precisely: docs whose EVERY band bucket is
     * over-cap surface no pairs from this operator — but identical docs
     * are caught upstream by exact dedup (cheaper and exact), and a doc
     * flood large enough to blow the cap is precisely the boilerplate
@@ -693,26 +718,15 @@ object Dedup {
     val perDoc = sigTable.getOrElse(CacheScope.persist(
         minhashSigTable(docs, idCol, textCol, Nil, ngram, nHash)))
       .select(col(idCol) +: col("s") +: (0 until nHash).map(i => col(s"mh$i")): _*)
-    // Population guard BEFORE the self-join, as an ANTI-join against
-    // the over-cap bucket list: bucket populations reduce through a
-    // map-side-combinable aggregate (only distinct (band, bkey) rows
-    // shuffle), the over-cap survivors are tiny — on honest corpora
-    // EMPTY — and an over-cap bucket is dropped whole, never expanded
-    // into its quadratic candidate set. Deliberately NOT a broadcast
-    // hint and NOT a count window: the aggregate, the anti-join, and
-    // the candidate self-join all key on (band, bkey), so Catalyst
-    // plans ONE exchange of the bands stream reused by all three
-    // (verified: a broadcast guard costs an extra blocking job, a
-    // window guard a full sort of the stream — both measured ~1.5× this
-    // plan's cost at sf0.1).
-    val bandsAll = explodeBands(perDoc, Seq(idCol), nHash, bandRows)
-    // guarding ONE side suffices: a pair needs both endpoints in the
-    // bucket, so an empty a-side kills every pair of an over-cap bucket
-    val bands = bandsAll.join(overCapBuckets(bandsAll, maxBucket),
-      Seq("band", "bkey"), "left_anti")
-    val candRows = bands.as("a").join(bandsAll.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.band") === col("b.band") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+    // Population guard and candidate generation in ONE keyed pass
+    // (bucketMembers): the band stream is grouped on (band, bkey) once,
+    // an over-cap bucket is dropped whole and never expanded into its
+    // quadratic candidate set, and every kept bucket expands its
+    // members into the a < b pairs.
+    val buckets = bucketMembers(explodeBands(perDoc, Seq(idCol), nHash, bandRows),
+      Seq("band", "bkey"), Seq(idCol), maxBucket)
+    val candRows = memberPairs(buckets, Seq("band", "bkey"),
+        col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"))
     (perDoc, candRows)
   }
@@ -793,21 +807,12 @@ object Dedup {
     * [[minhashLshIncrementalCandidates]]: (perDoc, pre-distinct
     * candidate rows).
     *
-    * Scale note on the `bandsAll` persist: the exploded band frame is
-    * CORPUS-proportional (nHash/bandRows narrow rows per document) and
-    * feeds three consumers (the over-cap aggregate, the new-side
-    * anti-join probe, the candidate join's b-side), so one
-    * materialization replaces three re-derivations — on the serve path
-    * three extra SCANS of the persisted signature store, since
-    * Catalyst does not CSE across join branches. MEMORY_AND_DISK keeps
-    * the trade disk-IO-shaped when the frame outgrows executor memory
-    * (it spills, it does not OOM), and the scope unpersists it with
-    * the consuming action. At full corpus scale the alternative —
-    * re-deriving bands per consumer from the columnar store scan — is
-    * the knob to flip if executor-local disk is scarcer than store
-    * read bandwidth: drop this persist and the plan re-scans instead
-    * of spilling; both shapes are correct, the choice is a storage
-    * economics call this comment exists to make visible. */
+    * Scale note: the exploded band frame is CORPUS-proportional
+    * (nHash/bandRows narrow rows per document) and has ONE reader, the
+    * keyed [[bucketMembers]] pass that both guards and expands the
+    * buckets. So it is never persisted: on the serve path it is one
+    * scan of the signature store, streamed into the aggregate, and
+    * nothing corpus-sized is pinned in executor storage. */
   private def minhashIncBandParts(docs: DataFrame, idCol: String,
       textCol: String, isNewCol: String, nHash: Int, bandRows: Int,
       ngram: Int, maxBucket: Long,
@@ -821,18 +826,17 @@ object Dedup {
       .select(col(idCol) +:
         coalesce(col(isNewCol).cast("boolean"), lit(false)).as("is_new") +:
         col("s") +: (0 until nHash).map(i => col(s"mh$i")): _*)
-    val bandsAll = CacheScope.persist(
-      explodeBands(perDoc, Seq(idCol, "is_new"), nHash, bandRows))
-    // guard the NEW side only: every emitted pair has a new endpoint,
-    // so an empty new side kills all pairs of an over-cap bucket
-    val bandsNew = bandsAll.filter(col("is_new"))
-      .join(overCapBuckets(bandsAll, maxBucket), Seq("band", "bkey"), "left_anti")
-    val candRows = bandsNew.as("a").join(bandsAll.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.band") === col("b.band") &&
-          // old partner: any order (pair surfaces once, new side first);
-          // new partner: a < b so the two new rows emit the pair once
-          (!col("b.is_new") && col(s"a.$idCol") =!= col(s"b.$idCol") ||
-            col("b.is_new") && col(s"a.$idCol") < col(s"b.$idCol")))
+    // one keyed pass over the band stream (bucketMembers): the bucket
+    // population counts old and new docs alike, and only pairs with a
+    // new `a` side expand
+    val buckets = bucketMembers(explodeBands(perDoc, Seq(idCol, "is_new"), nHash, bandRows),
+      Seq("band", "bkey"), Seq(idCol, "is_new"), maxBucket)
+    val candRows = memberPairs(buckets, Seq("band", "bkey"),
+        // old partner: any order (pair surfaces once, new side first);
+        // new partner: a < b so the two new rows emit the pair once
+        !col("b.is_new") && col(s"a.$idCol") =!= col(s"b.$idCol") ||
+          col("b.is_new") && col(s"a.$idCol") < col(s"b.$idCol"),
+        aSide = col("a.is_new"))
       .select(col(s"a.$idCol").as("doc_new"), col(s"b.$idCol").as("doc_other"),
         col("b.is_new").as("other_is_new"))
     (perDoc, candRows)
@@ -1478,7 +1482,7 @@ object Dedup {
     * hamming ≤ 2 pair surfaces at every width; wider candidates are
     * filtered by the verify). The width is chosen from the OBSERVED
     * bucket populations ([[observedBucketWidth]], in-plan, no driver
-    * collect): the candidate join's volume is Σ population², and an
+    * collect): the candidate volume is Σ population², and an
     * expected-population rule (n / 2^bits) under-sizes it badly on
     * signature-CONCENTRATED corpora — same-distribution documents
     * cluster in signature space, and a replicated near-dup corpus at
@@ -1491,17 +1495,18 @@ object Dedup {
     * and the r6–r12 form emitted every meeting and collapsed them with
     * a distinct, which at sf1 meant materializing and shuffling 28.2M
     * join rows to keep 2.4M pairs (a per-stage split, r13;
-    * this predicate took the query 12.2 → ~6 s). The join now keeps
-    * exactly ONE meeting per pair, decided row-locally from the two
-    * carried base prefixes (D = base_a XOR base_b): if popcount(D) ≤ 1
+    * this predicate took the query 12.2 → ~6 s). The candidate
+    * expansion now keeps exactly ONE meeting per pair, decided
+    * row-locally from the two carried base prefixes
+    * (D = base_a XOR base_b): if popcount(D) ≤ 1
     * the canonical meeting is the one where `a` sits at its base
     * (D = 0: both at base; D = one bit: a at base, b flipped); if
     * popcount(D) = 2 it is the one where `a` is flipped at the LOWEST
     * set bit of D (b flipped at the other). Every bucket-Hamming ≤ 2
     * pair satisfies the predicate in exactly one surviving meeting, so
-    * the post-join distinct is gone and no pair is shuffled once per
-    * meeting. (A pigeonhole block scheme — Manku, Jain & Das Sarma,
-    * WWW 2007 — was measured as the alternative: its fixed 16-bit
+    * the distinct is gone and no pair is shuffled once per meeting.
+    * (A pigeonhole block scheme — Manku, Jain & Das Sarma, WWW 2007 —
+    * was measured as the alternative: its fixed 16-bit
     * two-block keys admitted 27.4M mostly-false candidates on the same
     * corpus, because concentration demands the ADAPTIVE key width.)
     * Output: (doc_a, doc_b, hamming), one row per pair.
@@ -1512,9 +1517,10 @@ object Dedup {
     * (10⁶ copies of one boilerplate doc) collapse into one bucket no
     * width can split — the one O(n²) path width adaptation cannot
     * close. A probed bucket holding more than `maxBucket` docs is
-    * dropped whole from candidate generation. Recall trade, stated
-    * precisely for the canonical-meeting form: a pair whose CANONICAL
-    * meeting bucket is over-cap surfaces no row (under the old
+    * dropped whole from candidate generation ([[bucketMembers]] keyed
+    * on `bucket`, the same guard as the MinHash family). Recall trade,
+    * stated precisely for the canonical-meeting form: a pair whose
+    * CANONICAL meeting bucket is over-cap surfaces no row (under the old
     * any-meeting form it could still surface through a sibling
     * bucket), but a flood that big is exactly what upstream exact
     * dedup removes; with no bucket over cap the result is
@@ -1531,7 +1537,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
 
   /** The candidate stage of [[simhash]] alone: every (doc_a, doc_b,
-    * hamming) row the probed-bucket join emits — one row per candidate
+    * hamming) row the probed buckets expand to — one row per candidate
     * PAIR (canonical-meeting emission), BEFORE the hamming filter.
     * Public so the scale accounting (tools.ScaleAccounting) can
     * measure candidate volume against emitted-pair volume on the exact
@@ -1542,8 +1548,9 @@ object Dedup {
     * `sigTable`: a pre-built [[simhashSigTable]] of the same docs /
     * textCol — the signature stage is then read from it (typically the
     * memoized corpus-tier table) instead of re-hashing the text. As in
-    * [[minhashLsh]], a supplied table is used as-is by the four
-    * consumers below, so a RAW one should be persisted (or memoized)
+    * [[minhashLsh]], a supplied table is used as-is by the two
+    * consumers below (the width aggregate and the probe rows), so a RAW
+    * one should be persisted (or memoized)
     * before it is handed in; inline signatures are scope-persisted. */
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       probeBits: Int = 16, targetBucketSize: Int = 256,
@@ -1553,15 +1560,9 @@ object Dedup {
     sigTable.foreach(requireSigProvenance(_, textCol, pinned = "simhash"))
     val sh = sigTable.getOrElse(
       CacheScope.persist(simhashSignatures(docs, idCol, textCol)))
-    // The probe frame is deliberately NOT persisted: its three
-    // consumers (population aggregate, anti-join survivor side, join
-    // b-side) re-derive it from the CACHED signature frame with one
-    // row-local explode each — and since all three references share
-    // the same plan subtree, Spark's exchange/subquery reuse runs the
-    // width aggregate once. Materializing the (bw + 1)-fanned probe
-    // rows instead was measured ~1.1 s SLOWER per run at the 10x bench
-    // scale (cache write of 1.45M wide rows beats three cheap
-    // re-explodes — a per-stage split, r13).
+    // The probe frame ((bw + 1) rows per doc) has one reader, the
+    // keyed bucketMembers pass, so it streams from the signature frame
+    // unpersisted.
     val pr =
       sh.crossJoin(broadcast(observedBucketWidth(sh, probeBits, targetBucketSize)))
         .withColumn("base", expr("simhash div CAST(pow(2, 32 - bw) AS BIGINT)"))
@@ -1569,11 +1570,6 @@ object Dedup {
           explode(expr("concat(array(base), " +
             "transform(sequence(0, bw - 1), k -> base ^ CAST(pow(2, k) AS BIGINT)))"))
             .as("bucket"))
-    // population guard BEFORE the self-join (minhashLsh's anti-join
-    // shape: aggregate, anti-join and candidate join all key on
-    // `bucket`, so the exchange is reused; guarding one side suffices)
-    val prG = pr.join(overCapBuckets(pr, maxBucket, Seq("bucket")),
-      Seq("bucket"), "left_anti")
     // canonical-meeting predicate (see the operator scaladoc): with
     // D = base_a XOR base_b, keep the base-side meeting when the bases
     // differ in ≤ 1 bit, else the meeting where `a` is flipped at D's
@@ -1581,19 +1577,14 @@ object Dedup {
     // arithmetic on the carried base prefixes.
     val d = col("a.base").bitwiseXOR(col("b.base"))
     val canonical =
-      (bit_count(d) <= 1 && col("a.bucket") === col("a.base")) ||
+      (bit_count(d) <= 1 && col("bucket") === col("a.base")) ||
         (bit_count(d) === 2 &&
-          col("a.bucket").bitwiseXOR(col("a.base")) === d.bitwiseAND(-d))
-    // SHUFFLE_HASH on the b side (r14): Catalyst's estimate of the
-    // probe frame lands under the broadcast threshold and the whole
-    // (bw+1)-fanned probe stream serializes through the driver —
-    // measured 5.5 s vs 2.5 s for the hash-partitioned join at the 10x
-    // scale, and at 100 TB a corpus-side broadcast is an OOM. All three
-    // probe-frame consumers still key on `bucket`, so the exchange this
-    // hint forces is the same one the aggregate and anti-join reuse.
-    prG.as("a").join(pr.hint("shuffle_hash").as("b"),
-        col("a.bucket") === col("b.bucket") && col(s"a.$idCol") < col(s"b.$idCol") &&
-          canonical)
+          col("bucket").bitwiseXOR(col("a.base")) === d.bitwiseAND(-d))
+    // population guard and candidate expansion in one keyed pass
+    // (bucketMembers): no probe-frame self-join, so no corpus-sized
+    // join side that Catalyst could decide to broadcast
+    memberPairs(bucketMembers(pr, Seq("bucket"), Seq(idCol, "simhash", "base"), maxBucket),
+        Seq("bucket"), col(s"a.$idCol") < col(s"b.$idCol") && canonical)
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
   }

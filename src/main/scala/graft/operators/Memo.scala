@@ -131,8 +131,8 @@ object Memo {
     * ([[StoreFs.promoteIfAbsent]]), so a complete directory is
     * immutable under concurrent writers. The table keeps the built
     * frame's partitioning, one file per partition: coalescing to fewer
-    * files ([[StoreFs.sizedForWrite]]) would also run the build's last
-    * stage, and every serve's scan, in that many tasks. Build, write
+    * files would also run the build's last stage, and every serve's
+    * scan, in that many tasks. Build, write
     * and promote run outside the memo lock — only the registration
     * takes it. A fresh
     * write is served with the built frame's schema (its column

@@ -151,24 +151,15 @@ object StoreFs {
     * (measured r17: the compact-serve scan ran 59 tasks over 59 tiny
     * files, in-rows ≈ tasks).
     *
-    * The partition target is `ceil(est / targetFileBytes)` (default
-    * 64 MB) with `est` from the optimized plan's statistics —
-    * the real accumulated size when the lineage is materialized (cached
-    * frame, parquet scan), a conservative over-estimate otherwise; and
-    * in-memory stats over-estimate parquet-on-disk bytes anyway, so the
-    * bias is toward MORE files, never toward collapsing a big write.
-    * `coalesce` only merges partitions (no shuffle, and a target above
-    * the current width is a no-op), so a corpus-sized frame keeps its
-    * full write parallelism on any cluster — scale-adaptive, not a
-    * local-mode constant. */
-  def sizedForWrite(df: org.apache.spark.sql.DataFrame,
-      targetFileBytes: Long = 64L << 20): org.apache.spark.sql.DataFrame = {
-    require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => return df }
-    val parts = ((est + targetFileBytes - 1) / targetFileBytes)
-      .min(BigInt(Int.MaxValue)).toInt
-    df.coalesce(math.max(1, parts))
-  }
+    * An AQE `rebalance`: one shuffle after the frame's last stage,
+    * whose partitions AQE then coalesces (or splits) by the bytes it
+    * MEASURED, so a tiny frame lands as one file and a corpus-sized one
+    * as many. The frame's own stages keep their width, which a
+    * `coalesce` to the file count would not: with no shuffle it
+    * narrows the frame's last stage too (an append shard's signature
+    * hashing or an ANN index's codes join would run in one task at
+    * bench scale). Without AQE the rebalance writes one file per
+    * shuffle partition. */
+  def sizedForWrite(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.hint("rebalance")
 }

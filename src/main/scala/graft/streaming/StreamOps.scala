@@ -388,7 +388,8 @@ object StreamOps {
     * Plan: the static side builds the old-corpus banded-signature
     * index once (same row-local signature chain as the batch
     * operators — [[graft.operators.Dedup.minhashBandRows]] — plus the
-    * standard over-population bucket guard, applied at INDEX BUILD
+    * standard over-population bucket guard,
+    * [[graft.operators.Dedup.bucketMembers]], applied at INDEX BUILD
     * time: a boilerplate-flooded bucket is dropped whole before any
     * arrival can join it). Each micro-batch computes arriving docs'
     * band rows with the identical expression and equi-joins the index
@@ -397,13 +398,13 @@ object StreamOps {
     * same as the batch verify) runs row-locally on the joined pair.
     * The index side is one row per (band, doc) of the ENTIRE standing
     * corpus, so the DEFAULT (`broadcastIndex = false`) carries no
-    * broadcast hint and pre-partitions the index on (band, bkey) —
-    * prepositioning it for the shuffled stream-static equi-join that
-    * is the only shape surviving a 100 TB standing corpus (a
-    * broadcast there is a driver OOM). The JOIN STRATEGY itself stays
-    * stats-driven: streaming plans have no AQE, and at toy scale the
-    * planner may still broadcast the small static side (making the
-    * repartition an extra exchange it tolerates); what matters is
+    * broadcast hint, and the index leaves [[nearDupIndex]]'s keyed
+    * pass hash-partitioned on (band, bkey) — prepositioned for the
+    * shuffled stream-static equi-join that is the only shape surviving
+    * a 100 TB standing corpus (a broadcast there is a driver OOM). The
+    * JOIN STRATEGY itself stays stats-driven: streaming plans have no
+    * AQE, and at toy scale the planner may still broadcast the small
+    * static side; what matters is
     * that nothing FORCES a corpus-sized broadcast when the stats say
     * otherwise. `broadcastIndex = true` opts a KNOWN-SMALL index (a
     * per-tenant or per-day slice) into the classic map-side screen;
@@ -456,17 +457,21 @@ object StreamOps {
 
   /** The static half of [[streamingNearDup]]: the standing corpus's
     * banded-signature index with the over-population guard applied at
-    * build time. */
+    * build time — one row per (band, doc) of every bucket that
+    * [[graft.operators.Dedup.bucketMembers]] keeps. Its keyed pass
+    * leaves the index hash-partitioned on (band, bkey), the layout the
+    * shuffled stream-static join needs. */
   def nearDupIndex(oldDocs: DataFrame, nHash: Int = 12, bandRows: Int = 2,
       ngram: Int = 3,
       maxBucket: Long = graft.operators.Dedup.defaultMaxBandBucket,
       sigTable: Option[DataFrame] = None): DataFrame = {
     val oldRows = graft.operators.Dedup.minhashBandRows(
       oldDocs, "doc_id", "text", nHash, bandRows, ngram, sigTable)
-    oldRows.join(graft.operators.Dedup.overCapBuckets(oldRows, maxBucket),
-        Seq("band", "bkey"), "left_anti")
+    graft.operators.Dedup.bucketMembers(oldRows, Seq("band", "bkey"),
+        Seq("doc_id", "s"), maxBucket)
+      .select(col("band"), col("bkey"), explode(col("members")).as("m"))
       .select(col("band"), col("bkey"),
-        col("doc_id").as("doc_old"), col("s").as("s_old"))
+        col("m.doc_id").as("doc_old"), col("m.s").as("s_old"))
   }
 
   /** The streaming half of [[streamingNearDup]] — composition point
@@ -480,8 +485,7 @@ object StreamOps {
         .minhashBandRows(arriving, "doc_id", "text", nHash, bandRows, ngram)
         .withColumnRenamed("doc_id", "doc_new")
         .join(
-          if (broadcastIndex) broadcast(index)
-          else index.repartition(col("band"), col("bkey")),
+          if (broadcastIndex) broadcast(index) else index,
           Seq("band", "bkey")),
       "s", "s_old", threshold, "doc_new", "doc_old")
 

@@ -30,6 +30,22 @@ class BenchSpec extends AnyFunSuite {
       sys.error("root resolved")) == "/tmp/x.json")
   }
 
+  test("a query's cached frames are sampled inside its scope and recorded per query") {
+    val spark = GraftSession.local(4)
+    val (bytes0, frames0) = Bench.cacheSample(spark)
+    val inScope = graft.operators.CacheScope.withScope {
+      graft.operators.CacheScope.persist(
+        spark.range(1000).selectExpr("id * 7919 AS bench_spec_x")).count()
+      Bench.cacheSample(spark)
+    }
+    // the scope's persist is visible to a sample taken before the scope
+    // closes, and released after
+    assert(inScope._2 == frames0 + 1 && inScope._1 > bytes0, s"in scope: $inScope")
+    assert(Bench.cacheSample(spark)._2 == frames0)
+    assert(Bench.cacheJson(Seq("q\"1" -> (42L, 2), "q2" -> (0L, 0))) ==
+      """{"q\"1":{"bytes":42,"frames":2},"q2":{"bytes":0,"frames":0}}""")
+  }
+
   test("the record and the summary line carry the session's core count") {
     assert(Bench.headJson(12.3456, 1, 4) ==
       """"metric":"total","value":12.346,"unit":"sec","failed":1,"cpus":4""")

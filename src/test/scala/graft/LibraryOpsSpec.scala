@@ -567,6 +567,138 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(run(100000L).size == 200 * 199 / 2 + 1)
   }
 
+  test("BucketMembers: the buffer never holds more than the cap, under update or merge") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, TypedImperativeAggregate}
+    import org.apache.spark.sql.types.LongType
+    import graft.functions.BucketMembers
+    val cap = 3
+    val member = BoundReference(0, LongType, nullable = false)
+    // the most members any buffer held while 10 rows were reduced into
+    // one buffer, and while partial buffers of 2 rows each were merged
+    def peak[T](agg: TypedImperativeAggregate[T], size: T => Int): Int = {
+      var most = 0
+      def seen(b: T): T = { most = most.max(size(b)); b }
+      val rows = (1L to 10L).map(i => InternalRow(i))
+      rows.foldLeft(agg.createAggregationBuffer())((b, r) => seen(agg.update(b, r)))
+      rows.grouped(2).map(_.foldLeft(agg.createAggregationBuffer())(
+          (b, r) => seen(agg.update(b, r))))
+        .reduce((a, b) => seen(agg.merge(a, b)))
+      most
+    }
+    val bounded = BucketMembers(member, cap)
+    assert(peak[BucketMembers.Buf](bounded, _.items.size) <= cap)
+    // control: the same probe catches an unbounded collect
+    assert(peak[scala.collection.mutable.ArrayBuffer[Any]](CollectList(member), _.size) > cap,
+      "the probe must see an unbounded buffer grow past the cap")
+    // at the cap the members are kept; one past it the bucket is NULL
+    def run(n: Int): BucketMembers.Buf = (1L to n.toLong).foldLeft(
+      bounded.createAggregationBuffer())((b, i) => bounded.update(b, InternalRow(i)))
+    val full = bounded.eval(run(cap)).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    assert(full.toLongArray().sorted.toSeq == (1L to cap.toLong))
+    assert(bounded.eval(run(cap + 1)) == null)
+    // a merge that crosses the cap closes the buffer for good
+    val closed = bounded.merge(run(2), run(2))
+    assert(closed.closed && closed.items.isEmpty)
+    assert(bounded.merge(closed, run(1)).closed)
+    // the shuffle form round-trips open and closed buffers
+    val back = bounded.deserialize(bounded.serialize(run(2)))
+    assert(!back.closed && back.rows == 2L && back.items.map(_.asInstanceOf[Long]).sorted == Seq(1L, 2L))
+    assert(bounded.deserialize(bounded.serialize(closed)).closed)
+  }
+
+  test("bucketMembers keyed pass equals the anti-join + self-join formulation") {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
+    // One candidate generator: its bucketed rows, bucket keys, the
+    // reference pair rule and output, and the operator under test.
+    case class Family(bucketed: DataFrame => DataFrame, keys: Seq[String],
+        a: DataFrame => DataFrame, pair: Column, out: Seq[Column],
+        keyed: (DataFrame, Long) => DataFrame)
+    // the formulation the keyed pass replaced, kept as the reference:
+    // the over-cap bucket list, anti-joined from the a side of the
+    // bucket self-join
+    def reference(f: Family, docs: DataFrame, cap: Long): DataFrame = {
+      val bucketed = f.bucketed(docs)
+      val overCap = bucketed.groupBy(f.keys.map(col): _*).agg(count(lit(1)).as("bc"))
+        .filter(col("bc") > cap).select(f.keys.map(col): _*)
+      f.a(bucketed).join(overCap, f.keys, "left_anti").as("a")
+        .join(bucketed.as("b"),
+          f.keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && f.pair)
+        .select(f.out: _*)
+    }
+    val withNew = (d: DataFrame) => d.withColumn("is_new", col("id") % 3 === 0)
+    val batch = Family(
+      d => Dedup.minhashBandRows(d, "id", "body", nHash = 8).select("id", "band", "bkey"),
+      Seq("band", "bkey"), identity, col("a.id") < col("b.id"),
+      Seq(col("a.id").as("doc_a"), col("b.id").as("doc_b")),
+      (d, c) => Dedup.minhashLshCandidates(d, "id", "body", nHash = 8, maxBucket = c))
+    val incremental = Family(
+      d => Dedup.minhashBandRows(d, "id", "body", nHash = 8)
+        .join(withNew(d).select("id", "is_new"), "id").select("id", "is_new", "band", "bkey"),
+      Seq("band", "bkey"), _.filter(col("is_new")),
+      !col("b.is_new") && col("a.id") =!= col("b.id") ||
+        col("b.is_new") && col("a.id") < col("b.id"),
+      Seq(col("a.id").as("doc_new"), col("b.id").as("doc_other"),
+        col("b.is_new").as("other_is_new")),
+      (d, c) => Dedup.minhashLshIncrementalCandidates(withNew(d), "id", "body", "is_new",
+        nHash = 8, maxBucket = c))
+    // simhash: the probe rows rebuilt here, canonical-meeting rule
+    val dd = col("a.base").bitwiseXOR(col("b.base"))
+    val sim = Family(
+      { d =>
+        val sh = Dedup.simhashSignatures(d, "id", "body")
+        sh.crossJoin(broadcast(Dedup.observedBucketWidth(sh, 16)))
+          .withColumn("base", expr("simhash div CAST(pow(2, 32 - bw) AS BIGINT)"))
+          .select(col("id"), col("simhash"), col("base"),
+            explode(expr("concat(array(base), " +
+              "transform(sequence(0, bw - 1), k -> base ^ CAST(pow(2, k) AS BIGINT)))"))
+              .as("bucket"))
+      },
+      Seq("bucket"), identity,
+      col("a.id") < col("b.id") &&
+        ((bit_count(dd) <= 1 && col("a.bucket") === col("a.base")) ||
+          (bit_count(dd) === 2 &&
+            col("a.bucket").bitwiseXOR(col("a.base")) === dd.bitwiseAND(-dd))),
+      Seq(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming")),
+      (d, c) => Dedup.simhashCandidates(d, "id", "body", maxBucket = c))
+    // a random corpus with one mutated near-copy per base document
+    val rnd = new scala.util.Random(20261019L)
+    val vocab = (0 until 40).map(i => s"w$i")
+    val base = (0 until 60).map(_ => Vector.fill(12)(vocab(rnd.nextInt(40))))
+    val random = (0 until 120).map { i =>
+      val w = base(i % 60)
+      val t = if (i < 60) w else w.updated(rnd.nextInt(12), "x" + rnd.nextInt(1000))
+      (i.toLong, t.mkString(" "))
+    }
+    val clean = random.toDF("id", "body")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    for ((name, f) <- Seq("batch" -> batch, "incremental" -> incremental, "simhash" -> sim)) {
+      // random corpus: every pair equal
+      val keyed = rows(f.keyed(clean, Dedup.defaultMaxBandBucket))
+      assert(keyed.nonEmpty, s"$name: the random corpus must yield candidates")
+      assert(keyed == rows(reference(f, clean, Dedup.defaultMaxBandBucket)),
+        s"$name: keyed pass differs from the reference on the random corpus")
+      // planted over-cap bucket: cap + 1 identical documents, with the
+      // cap at the random corpus's largest bucket, so only the planted
+      // bucket goes over it — its pairs vanish, every other pair stays
+      val cap = f.bucketed(clean).groupBy(f.keys.map(col): _*).count()
+        .agg(max("count")).head.getLong(0).max(2L)
+      val planted = (1000L to 1000L + cap).map(_ -> "zq1 zq2 zq3 zq4 zq5 zq6 zq7 zq8")
+      val flooded = (random ++ planted).toDF("id", "body")
+      def touchesPlanted(r: String) = r.split(",").take(2).exists(_.toLong >= 1000L)
+      val keyedCap = rows(f.keyed(flooded, cap))
+      val keyedAll = rows(f.keyed(flooded, Dedup.defaultMaxBandBucket))
+      assert(keyedCap == rows(reference(f, flooded, cap)),
+        s"$name: keyed pass differs from the reference with the guard firing")
+      assert(keyedAll.exists(touchesPlanted), s"$name: the planted flood must pair when uncapped")
+      assert(keyedCap == keyedAll.filterNot(touchesPlanted),
+        s"$name: the guard must drop the planted bucket's pairs and keep every other pair")
+    }
+  }
+
   test("Dedup.simhashCandidates emits each pair exactly once (canonical meeting)") {
     import spark.implicits._
     // identical docs share the base bucket AND every flip bucket —
@@ -2520,7 +2652,7 @@ class LibraryOpsSpec extends AnyFunSuite {
     Dedup.searchMinhashSigStore(dir, shard, "id", "body").collect()
   }
 
-  test("sizedForWrite: tiny frames land as one file, big targets keep the width") {
+  test("sizedForWrite: tiny frames land as one file, the frame keeps its width") {
     import spark.implicits._
     import graft.operators.StoreFs
     def partFiles(dir: String): Int =
@@ -2535,12 +2667,13 @@ class LibraryOpsSpec extends AnyFunSuite {
       s"40 rows across 16 partitions must land as ONE file, got ${partFiles(d1)}")
     // identical rows either way
     assert(spark.read.parquet(d1).as[Int].collect().sorted.toSeq == (1 to 40))
-    // with a 1-byte target every partition stays: coalesce never
-    // INCREASES the width, so the write keeps its full parallelism
-    val d2 = java.nio.file.Files.createTempDirectory("graft-szw2").toString
-    StoreFs.sizedForWrite(tiny, targetFileBytes = 1).write.mode("overwrite").parquet(d2)
-    assert(partFiles(d2) == 16,
-      s"1-byte target must keep all 16 partitions, got ${partFiles(d2)}")
+    // the frame's own stages keep their width: the sizing is one
+    // shuffle after the frame whose partitions AQE sizes from measured
+    // bytes, never a coalesce that narrows the frame's last stage
+    val sized = StoreFs.sizedForWrite(tiny.select((col("x") * 2).as("x2")))
+      .queryExecution.executedPlan.toString
+    assert(sized.contains("REBALANCE_PARTITIONS_BY_NONE") && !sized.contains("Coalesce"),
+      s"sizedForWrite must rebalance after the frame, not coalesce it:\n$sized")
     // end-to-end: a sig store written over a session-width corpus frame
     // serves from a single-file sig/ dataset with identical rows
     val corpus = (1L to 30L).map(i =>

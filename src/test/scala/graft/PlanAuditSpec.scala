@@ -17,6 +17,32 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)
 
+  /** The shape of every MinHash band-candidate plan: the bounded member
+    * aggregate guards the (band, bkey) buckets in one keyed pass; there
+    * is no Window (a count window sorts the whole band stream), no
+    * `collect_list`/`collect_set` (its state grows with a flooded
+    * bucket), and no cached relation holds band rows (the band stream
+    * has one reader, so nothing corpus-sized is pinned). */
+  private def assertBandPass(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    val plan = df.queryExecution.executedPlan
+    val str = plan.toString
+    assert(str.contains("graft_bucket_members"),
+      s"$name lost its bounded member aggregate bucket guard:\n$str")
+    assert(!str.contains("Window"), s"$name regressed to a window-based bucket guard:\n$str")
+    assert(!str.contains("collect_list") && !str.contains("collect_set"),
+      s"$name regressed to an unbounded collect:\n$str")
+    object walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      def relations(p: SparkPlan): Seq[InMemoryRelation] =
+        collect(p) { case t: InMemoryTableScanExec => t.relation }
+          .flatMap(r => r +: relations(r.cachedPlan))
+    }
+    val bandFrames = walk.relations(plan).filter(r =>
+      Set("band", "bkey").subsetOf(r.output.map(_.name).toSet))
+    assert(bandFrames.isEmpty, s"$name pins a band frame in executor storage:\n$str")
+  }
+
   test("nested-loop joins appear only in the intentional dimension-bounded plans") {
     val intentional = Set(
       "dedup_simhash",            // 1-row observed-bucket-width broadcast cross
@@ -358,13 +384,12 @@ class PlanAuditSpec extends AnyFunSuite {
     val mh = plan("dedup_minhash_lsh")
     assert(!mh.contains("collect_set"),
       s"dedup_minhash_lsh regressed to a grouped signature stage:\n$mh")
-    // the band-bucket population guard must stay an ANTI-join (bucket
-    // drop), not a count window (full sort of the bands stream) or a
-    // missing guard (unbounded degenerate buckets)
-    assert(mh.contains("LeftAnti"),
-      s"dedup_minhash_lsh lost its band-bucket anti-join guard:\n$mh")
-    assert(!mh.contains("Window"),
-      s"dedup_minhash_lsh regressed to a window-based bucket guard:\n$mh")
+    // the band-bucket population guard is the bounded member aggregate
+    // (one keyed pass that drops an over-cap bucket whole), not a count
+    // window (full sort of the bands stream), an unbounded collect
+    // (state grows with a flooded bucket) or a missing guard
+    assertBandPass("dedup_minhash_lsh", Q.registry.find(_.name == "dedup_minhash_lsh").get
+      .build(spark, s"${Q.testdataRoot}/sf0.001"))
     val sh = Dedup.simhashSigTable(docs, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(sh.contains("graft_simhash"),
@@ -385,13 +410,18 @@ class PlanAuditSpec extends AnyFunSuite {
     // registered plan only shows the final labeling join over the
     // checkpointed leaf — the embeddingNearDup pin covers the same
     // vector-payload construct.)
-    for (name <- Seq("dedup_simhash", "dedup_embedding_cosine",
-        "dedup_incremental_minhash")) {
+    for (name <- Seq("dedup_embedding_cosine", "dedup_incremental_minhash")) {
       val p = plan(name)
       assert(p.contains("ShuffledHashJoin"),
         s"$name lost its hash-partitioned candidate/verify join " +
           s"(driver-broadcast regression):\n$p")
     }
+    // simhash expands its candidates from the keyed bucket pass: the
+    // probe frame is never a join side, so it cannot be broadcast
+    val shPlan = plan("dedup_simhash")
+    assert(shPlan.contains("graft_bucket_members") && !shPlan.contains("BroadcastHashJoin") &&
+        !shPlan.contains("ShuffledHashJoin") && !shPlan.contains("SortMergeJoin"),
+      s"dedup_simhash must generate candidates from its keyed bucket pass, with no probe-frame join:\n$shPlan")
   }
 
   test("persisted-store serve plans stay audited (fixture stores, no registry side effects)") {
@@ -456,10 +486,10 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(sigPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"sig-store serve grew a window:\n$sigStr")
-    // the over-cap bucket guard must stay an ANTI-join on the serve
-    // path too, and the corpus side must come from the persisted store
-    assert(sigStr.contains("LeftAnti"),
-      s"sig-store serve lost its band-bucket anti-join guard:\n$sigStr")
+    // the serve path guards its band buckets with the same bounded
+    // keyed pass, pins no band frame, and its corpus side comes from
+    // the persisted store
+    assertBandPass("sig-store serve", sigServe)
     assert(sigStr.contains("graft-audit-sig"),
       s"sig-store serve does not scan the persisted store:\n$sigStr")
     // r15 join-strategy pin: the STORE side must never be the build
