@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. Each query is
-  * forced with a count() action (full pipeline execution, no result
-  * materialization on the driver).
+  * forced by writing it to Spark's `noop` sink ([[force]]): every output
+  * column is computed, nothing is materialized on the driver. (A
+  * `count()` lets Catalyst prune the columns it does not need, so it
+  * timed a smaller program than the query; totals recorded before the
+  * change to `noop` do not compare with later ones.)
   *
   * Each query runs SPARK_GRAFT_REPS times (default 5) in INTERLEAVED
   * round-robin passes over the whole registry (pass r runs every query
@@ -34,12 +37,13 @@ import org.apache.spark.sql.SparkSession
   * Load robustness: min-of-N cannot filter SUSTAINED machine load (the
   * r5 recording was inflated 2–3× across its whole duration), so the
   * run brackets itself with a fixed CPU-bound canary job timed before
-  * the first query and after the last, plus a settled median-of-3
-  * canary between passes ("canary_passes") that timestamps any
-  * mid-run excursion the endpoint canaries cannot see (the settle
-  * matters: an immediate raw shot reads the pass's trailing async
-  * unpersist/GC, ~3× the idle floor, so it used to flag every honest
-  * recording). "canary_ratio" (end/start) near 1.0 means a steady
+  * the first query and after the last, plus a median-of-3 canary
+  * between passes ("canary_passes") that timestamps any mid-run
+  * excursion the endpoint canaries cannot see. Every canary settles
+  * first ([[canarySec]]): an immediate shot reads the previous pass's
+  * trailing async unpersist/GC, ~3× the idle floor, so it used to flag
+  * honest recordings — between passes, and at the start leg, which
+  * follows the cold pass. "canary_ratio" (end/start) near 1.0 means a steady
   * machine; either leg far off the idle band for the record's
   * `cpus` (~0.07 s on 32 cores, ~0.1 s on 4), a ratio outside
   * [0.67, 1.5], or a pass canary
@@ -56,34 +60,44 @@ object Bench {
 
   /** Fixed CPU-bound probe: ~134M hash+sum across all cores, no IO, no
     * shuffle width sensitivity. Sized long (~0.3 s) so steady-state
-    * arithmetic dominates the JIT-sensitive per-task scheduling path.
-    *
-    * Warm-up is ADAPTIVE, not fixed-count: a fresh JVM's probe time
-    * drifts downward for many shots (JIT tiers, not machine load — a
-    * fixed 3-shot warm-up still read start ≈ 1.7× end on an idle
-    * machine, flagging every honest recording as suspect), so shots are
-    * discarded until three consecutive ones agree within 10% (cap 12),
-    * and only then is the median of 3 fresh shots taken. The end-of-run
-    * canary stabilizes immediately, so a ratio outside [0.67, 1.5] then
-    * really is machine load, not measurement drift. */
-  private def canarySec(spark: SparkSession): Double = {
-    def shot(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 1L << 27, 1L, 32)
-        .selectExpr("sum(hash(id)) AS s").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val recent = scala.collection.mutable.Queue.empty[Double]
-    var i = 0
-    var stable = false
-    while (i < 12 && !stable) {
-      recent.enqueue(shot())
-      if (recent.size > 3) recent.dequeue()
-      stable = recent.size == 3 && (recent.max - recent.min) / recent.min < 0.10
-      i += 1
-    }
-    median((1 to 3).map(_ => shot()))
+    * arithmetic dominates the JIT-sensitive per-task scheduling path. */
+  private def probeSec(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 1L << 27, 1L, 32)
+      .selectExpr("sum(hash(id)) AS s").count()
+    (System.nanoTime() - t0) / 1e9
   }
+
+  /** A canary reading: a 1.5 s settle, so the previous pass's trailing
+    * cleanup drains, then the median of 3 [[probeSec]] shots.
+    *
+    * The endpoint legs (`warmUp`) first discard shots until three
+    * consecutive ones agree within 10% (cap 12): a fresh JVM's probe
+    * time drifts downward for many shots (JIT tiers, not machine load —
+    * a fixed 3-shot warm-up still read start ≈ 1.7× end on an idle
+    * machine, flagging every honest recording as suspect). The
+    * end-of-run canary stabilizes immediately, so a ratio outside
+    * [0.67, 1.5] then really is machine load, not measurement drift. */
+  private def canarySec(spark: SparkSession, warmUp: Boolean): Double = {
+    Thread.sleep(1500)
+    if (warmUp) {
+      val recent = scala.collection.mutable.Queue.empty[Double]
+      var i = 0
+      var stable = false
+      while (i < 12 && !stable) {
+        recent.enqueue(probeSec(spark))
+        if (recent.size > 3) recent.dequeue()
+        stable = recent.size == 3 && (recent.max - recent.min) / recent.min < 0.10
+        i += 1
+      }
+    }
+    median((1 to 3).map(_ => probeSec(spark)))
+  }
+
+  /** Runs a query to Spark's `noop` sink: every row and every column
+    * is computed and dropped, nothing reaches the driver. */
+  private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Where the full JSON record goes: `SPARK_GRAFT_BENCH_OUT` when set;
     * otherwise `BENCH_PARSED.json` at the repo root for a full run, and
@@ -151,7 +165,7 @@ object Bench {
 
     // JVM/codegen warm-up on the smallest sf so per-query numbers
     // measure the plan, not first-call compilation.
-    try graft.operators.CacheScope.withScope { SparkEntry.entry(spark).count() }
+    try graft.operators.CacheScope.withScope { force(SparkEntry.entry(spark)) }
     catch { case scala.util.control.NonFatal(_) => () }
 
     // Optional comma-separated name filter for single-query profiling.
@@ -179,7 +193,7 @@ object Bench {
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val sampleNs = graft.operators.CacheScope.withScope {
-        fn(spark, sfDir).count()
+        force(fn(spark, sfDir))
         val s0 = System.nanoTime()
         val (b, f) = cacheSample(spark)
         val (pb, pf) = cachePeak.getOrElse(name, (0L, 0))
@@ -192,7 +206,7 @@ object Bench {
       try coldAcc(name) = timed(name, fn)
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    val canaryStart = canarySec(spark)
+    val canaryStart = canarySec(spark, warmUp = true)
     // INTERLEAVED passes, not per-query back-to-back reps: pass r runs
     // every query once, and each query reports its min ACROSS passes.
     // Four straight closing recordings were contaminated by roaming
@@ -224,26 +238,13 @@ object Bench {
           errors(name) = e }
       }
       if (pass < math.max(1, reps)) {
-        // A raw shot taken IMMEDIATELY after a pass's last query reads
-        // the pass's own trailing async unpersist/GC, not machine load
-        // (r11 judge: isolated probes on an idle host still read
-        // 0.23–0.28 s here vs 0.09–0.12 s at the settled endpoints —
-        // every honest recording tripped the bench's own suspicion
-        // rule). A short settle lets the cleanup drain, and the median
-        // of 3 rejects a residual one-off; the result is comparable to
-        // the endpoint canaries, so an out-of-band pass canary now
-        // really marks a mid-run load excursion.
-        Thread.sleep(1500)
-        passCanaries += median((1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          spark.range(0L, 1L << 27, 1L, 32)
-            .selectExpr("sum(hash(id)) AS s").count()
-          (System.nanoTime() - t0) / 1e9
-        })
+        // settled like the endpoint legs, so an out-of-band pass canary
+        // marks a mid-run load excursion, not the pass's own cleanup
+        passCanaries += canarySec(spark, warmUp = false)
       }
     }
     val results = selected.map { case (name, _) => name -> acc(name).toSeq }
-    val canaryEnd = canarySec(spark)
+    val canaryEnd = canarySec(spark, warmUp = true)
     val canaryRatio = canaryEnd / canaryStart
     // Memo-tier footprint ("memo" in the JSON): entry count, cached
     // bytes (real accumulated size once materialized — Memo.report)

@@ -104,6 +104,19 @@ object GraftSession {
             graft.functions.BucketMembers(m, cap.eval().toString.toLong)
           }))
         ext.injectFunction((
+          FunctionIdentifier("graft_decimal_sum"),
+          new ExpressionInfo(classOf[graft.functions.DecimalSum].getName,
+            "graft_decimal_sum"),
+          (children: Seq[Expression]) => {
+            val Seq(x, p, s) = arity("graft_decimal_sum", 3, children)
+            def literal(e: Expression): Int = {
+              require(e.foldable && e.eval() != null,
+                s"graft_decimal_sum needs a literal precision and scale, got ${e.sql}")
+              e.eval().toString.toInt
+            }
+            graft.functions.DecimalSum(x, literal(p), literal(s))
+          }))
+        ext.injectFunction((
           FunctionIdentifier("graft_repetition"),
           new ExpressionInfo(classOf[graft.functions.RepetitionSignals].getName,
             "graft_repetition"),

@@ -14,6 +14,14 @@ import org.apache.spark.sql.functions._
   * it is (a) reproducible across runs/cluster sizes — unlike
   * `rand(seed)`, which depends on partition layout — and (b) exactly
   * replayable by any ANSI SQL engine for oracle checks.
+  *
+  * The exact moments behind the statistics layer are decimal sums
+  * ([[stableSum]], [[stableSumGuarded]], [[decimalSum]]): each term is
+  * rounded HALF_UP to a fixed scale and summed exactly, so the result
+  * does not depend on accumulation order and equals the oracle's
+  * `CAST(SUM(CAST(x AS DECIMAL(p,s))) AS DOUBLE)` bit for bit. All three
+  * run on the native kernel [[DecimalSum]], which returns what Spark's
+  * own `sum(cast(..))` returns, NULLs included.
   */
 object Deterministic {
   /** 0 <= hrand < M, uniform-ish over keys; stable across partitionings. */
@@ -38,24 +46,33 @@ object Deterministic {
     s"(((($key % 2147483648 + 2147483648) % 2147483648) * 1103515245 + ${seed * 12345L} + 104729) " +
       "% 2147483648 + 2147483648) % 2147483648"
 
-  /** Exact order-independent sum of a double expression: round each term
-    * to a decimal at `scale`, sum as DECIMAL(38, scale), cast back.
-    * Makes big-group sums bit-stable between Spark and the oracle
-    * regardless of accumulation order.
+  /** `graft_decimal_sum(term, p, s)` ([[DecimalSum]]): Spark's
+    * non-ANSI `sum(CAST(term AS DECIMAL(p, s)))`, value, type
+    * `DECIMAL(min(38, p + 10), s)` and NULLs alike — a NaN, ±Inf or
+    * over-p-digit term is skipped, an empty group or a sum past the
+    * result precision is NULL — on a fixed-width 128-bit buffer instead
+    * of a `BigDecimal` per row. Every exact sum in the engine goes
+    * through it; the oracle SQL keeps the `SUM(CAST(…))` spelling, so
+    * the DuckDB replay checks it independently. */
+  def decimalSum(term: Column, precision: Int, scale: Int): Column =
+    call_function("graft_decimal_sum", term, lit(precision), lit(scale))
+
+  /** Exact order-independent sum of a double expression: each term
+    * rounded HALF_UP to a DECIMAL(28, scale), summed exactly as
+    * DECIMAL(38, scale), cast back. Makes big-group sums bit-stable
+    * between Spark and the oracle regardless of accumulation order
+    * (the oracle spells it [[stableSumSql]]).
     */
-  def stableSum(term: Column, scale: Int = 6): Column =
-    sum(term.cast(org.apache.spark.sql.types.DecimalType(28, scale)))
-      .cast("double")
+  def stableSum(term: Column, scale: Int = 6): Column = decimalSum(term, 28, scale).cast("double")
 
   /** High-precision guarded variant (18 fractional digits) for internal
-    * fixture-pinned stages: casting a double to DECIMAL nulls NaN/±Inf
-    * (and out-of-range values), and `sum` skips nulls — poison would
-    * silently become a plausible finite answer. The guard aggregate
-    * propagates NaN whenever any term is non-finite or ≥ 1e18. */
+    * fixture-pinned stages: a NaN/±Inf or out-of-range term is a NULL
+    * cast, which the sum skips — poison would silently become a
+    * plausible finite answer. The guard aggregate propagates NaN
+    * whenever any term is non-finite or ≥ 1e18. */
   def stableSumGuarded(term: Column): Column = {
     val bad = sum(when(isnan(term) || abs(term) >= lit(1e18), lit(1)).otherwise(lit(0)))
-    when(bad > 0, lit(Double.NaN))
-      .otherwise(sum(term.cast(org.apache.spark.sql.types.DecimalType(38, 18))).cast("double"))
+    when(bad > 0, lit(Double.NaN)).otherwise(decimalSum(term, 38, 18).cast("double"))
   }
 
   def stableSumSql(term: String, scale: Int = 6): String =

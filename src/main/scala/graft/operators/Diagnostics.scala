@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Deterministic.stableSum
 
 /** Planning diagnostics: the statistics a 100 TB job needs BEFORE it
   * picks a physical strategy. Key-skew summaries answer "does this
@@ -46,7 +47,6 @@ object Diagnostics {
     * h_x_given_y, redundancy = MI/min(H) (0 = independent,
     * 1 = one determines the other; 0 when min(H) = 0). */
   def mutualInformation(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     // NULL categories are excluded from the WHOLE computation (cells,
     // marginals, n_rows): the MI sum joins cells to marginals on
     // equality, which can never match a NULL key, so keeping NULLs in
@@ -63,7 +63,7 @@ object Diagnostics {
         .crossJoin(broadcast(tot))
         .select(round(-(col("ck").cast("double") / col("n"))
           * log(col("ck").cast("double") / col("n")), 6).as("t"))
-        .agg(sum(col("t").cast(dec)).cast("double").as(out))
+        .agg(stableSum(col("t")).as(out))
     val mx = cells.groupBy(col(xCol)).agg(sum("c").as("cx"))
     val my = cells.groupBy(col(yCol)).agg(sum("c").as("cy"))
     val mi = cells.join(broadcast(mx), xCol).join(broadcast(my), yCol)
@@ -71,7 +71,7 @@ object Diagnostics {
       .select(round((col("c").cast("double") / col("n"))
         * log(col("c").cast("double") * col("n")
           / (col("cx").cast("double") * col("cy"))), 6).as("t"))
-      .agg(sum(col("t").cast(dec)).cast("double").as("mi"))
+      .agg(stableSum(col("t")).as("mi"))
     tot.crossJoin(broadcast(margEnt(xCol, "hx")))
       .crossJoin(broadcast(margEnt(yCol, "hy")))
       .crossJoin(broadcast(mi))
@@ -103,8 +103,7 @@ object Diagnostics {
         round(-p * log(p), 6).as("term"))
       .groupBy(col(groupCol))
       .agg(max(col("n")).as("n_rows"), max(col("n_cats")).as("n_cats"),
-        sum(col("term").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-          .cast("double").as("entropy"))
+        stableSum(col("term")).as("entropy"))
       .withColumn("eff_cats", round(exp(col("entropy")), 6))
   }
 
@@ -305,7 +304,6 @@ object Diagnostics {
   def psiDrift(df: DataFrame, groupCol: String, valueCol: String,
       refGroup: Column, bins: Int = 10): DataFrame = {
     require(bins >= 2 && bins <= 100, s"psiDrift needs 2 <= bins <= 100, got $bins")
-    val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     // Reference ntile cuts via the shared refine core ([[valuesAtRanks]]
     // — r17: the previous inline distinct-histogram + persist + bucketed
     // window shape shuffled ~the whole reference column for doubles).
@@ -384,7 +382,7 @@ object Diagnostics {
           6).as("term"))
     terms.groupBy(col(groupCol))
       .agg(max(col("n")).as("n_rows"),
-        round(sum(col("term").cast(dec)).cast("double"), 6).as("psi"))
+        round(stableSum(col("term")), 6).as("psi"))
       .withColumn("drifted", col("psi") > 0.2)
   }
 
@@ -410,7 +408,6 @@ object Diagnostics {
     * drifted). */
   def embeddingDrift(vectors: DataFrame, groupCol: String, vecCol: String,
       dim: Int, minCos: Double = 0.99): DataFrame = {
-    import graft.functions.Deterministic.stableSum
     val ex = CacheScope.persist(vectors
       .select(col(groupCol),
         posexplode(col(vecCol).cast("array<double>")).as(Seq("__i", "__x"))))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.Deterministic.stableSum
 
 /** Iterative graph analytics as relational plans. Complements the
   * connected-components operator (Dedup.connectedComponents): CC finds
@@ -208,8 +208,7 @@ object Graphs {
           round(col("r") / col("dg"), 12).as("w"))
       val mass = e.join(w, col("src") === col("wnode"))
         .groupBy(col("dst").as("node"))
-        .agg(sum(col("w").cast(DecimalType(28, 12)))
-          .cast("double").as("mass"))
+        .agg(stableSum(col("w"), 12).as("mass"))
       val base = nd.select("node").join(mass, Seq("node"), "left")
         .crossJoin(broadcast(n))
       val next =
@@ -222,8 +221,7 @@ object Graphs {
           // node-keyed rj again (co-partitioned, no exchange) folded
           // to a 1-row broadcast, redistributed uniformly
           val dm = rj.filter(col("dg") === 0L)
-            .agg(sum(col("r").cast(DecimalType(28, 12)))
-              .cast("double").as("dm"))
+            .agg(stableSum(col("r"), 12).as("dm"))
           base.crossJoin(broadcast(dm))
             .select(col("node"),
               round((lit(1.0).cast("double") - lit(damping)) / col("nn") +

@@ -57,8 +57,7 @@ object Layout {
     val ent = cells.join(shards.select("shard", "n_docs"), "shard")
       .select(col("shard"), round(-p * log(p), 6).as("__term"))
       .groupBy("shard")
-      .agg(sum(col("__term").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-        .cast("double").as("domain_entropy"))
+      .agg(Deterministic.stableSum(col("__term")).as("domain_entropy"))
     shards.join(ent, "shard").crossJoin(broadcast(total))
       .select(col("shard"), col("n_docs"), col("n_tokens"),
         round(col("n_tokens").cast("double") / col("__tot"), 6).as("token_share"),

@@ -64,7 +64,6 @@ object Sampling {
   def prioritySample(df: DataFrame, strataCol: String, keyCol: String,
       weightCol: String, k: Int, seed: Long): DataFrame = {
     require(k >= 1, s"priority sampling needs k >= 1, got $k")
-    import org.apache.spark.sql.types.DecimalType
     val topAgg = org.apache.spark.sql.functions.udaf(
       new graft.functions.TopKRowsAgg(k + 1),
       org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
@@ -85,8 +84,8 @@ object Sampling {
         posexplode(col("top")).as(Seq("idx", "r")))
       .filter(col("idx") < k)
     val est = sample.groupBy(strataCol).agg(
-      sum(round(greatest(col("r.k2").cast("double"), col("tau_raw")), 6)
-        .cast(DecimalType(28, 6))).cast("double").as("est_raw"))
+      Deterministic.stableSum(round(greatest(col("r.k2").cast("double"), col("tau_raw")), 6))
+        .as("est_raw"))
     sample.join(est, strataCol)
       .select(col(strataCol), (col("idx") + 1).cast("long").as("rk"),
         col("r.k1").as("sample_key"), col("r.k2").as("weight"),
@@ -126,7 +125,7 @@ object Sampling {
     totals
       .withColumn("pw", round(pow(col("n_tokens").cast("double"), temperature), 6))
       .withColumn("norm",
-        sum(col("pw").cast(org.apache.spark.sql.types.DecimalType(28, 6))).over(w)
+        Deterministic.decimalSum(col("pw"), 28, 6).over(w)
           .cast("double"))
       .withColumn("total", sum("n_tokens").over(w))
       .withColumn("weight", col("pw") / col("norm"))
@@ -172,7 +171,7 @@ object Sampling {
     totals
       .withColumn("pw", round(pow(col("n_tokens").cast("double"), temperature), 6))
       .withColumn("norm",
-        sum(col("pw").cast(org.apache.spark.sql.types.DecimalType(28, 6))).over(w)
+        Deterministic.decimalSum(col("pw"), 28, 6).over(w)
           .cast("double"))
       .withColumn("total", sum("n_tokens").over(w))
       .withColumn("weight", col("pw") / col("norm"))

@@ -560,7 +560,7 @@ object TextOps {
     // close. Integer arithmetic is identical everywhere.
     scored.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"),
-        (sum(col("nll").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
+        (Deterministic.decimalSum(col("nll"), 28, 6)
           * lit(1000000L)).cast("long").as("k6"))
       .select(col(idCol), col("n_bigrams"),
         (expr("(2 * k6 + n_bigrams) div (2 * n_bigrams)").cast("double")

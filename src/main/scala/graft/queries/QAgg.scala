@@ -138,7 +138,7 @@ object QAgg {
     FROM part ORDER BY p_brand, p_partkey"""
   ))((s, d) =>
     Tables.part(s, d).select(col("p_brand"), col("p_partkey"),
-      sum(col("p_retailprice").cast("decimal(18,2)"))
+      decimalSum(col("p_retailprice"), 18, 2)
         .over(Window.partitionBy("p_brand").orderBy("p_partkey")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("double").as("cum_price"))
@@ -195,10 +195,10 @@ object QAgg {
     val wOrd = Window.partitionBy("p_brand").orderBy(col("p_retailprice").desc, col("p_partkey"))
     val lam = Tables.part(s, d).select(
       col("p_brand"), col("p_partkey"), col("p_retailprice").as("l"),
-      sum(col("p_retailprice").cast("decimal(18,2)"))
+      decimalSum(col("p_retailprice"), 18, 2)
         .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("double").as("cum"),
-      sum(col("p_retailprice").cast("decimal(18,2)"))
+      decimalSum(col("p_retailprice"), 18, 2)
         .over(Window.partitionBy("p_brand")).cast("double").as("tot"),
       row_number().over(wOrd).as("k"))
     lam.groupBy("p_brand").agg(
@@ -359,8 +359,7 @@ object QAgg {
       .join(cTax, o("o_custkey") === cTax("c_custkey")) // cTax/sTax are customer/supplier-scaled
       .join(sTax, li("l_suppkey") === sTax("s_suppkey"))
     val aggs = regions.map(r =>
-      round(sum(when(col("region_s") === r,
-        col("l_extendedprice").cast("decimal(28,6)"))).cast("double"), 4).as(mcol(r)))
+      round(stableSum(when(col("region_s") === r, col("l_extendedprice"))), 4).as(mcol(r)))
     base.groupBy("region_c").agg(aggs.head, aggs.tail: _*)
       .orderBy("region_c")
   })

@@ -73,7 +73,7 @@ object QGaps2 {
       .join(broadcast(w), "bucket")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        (sum((col("v100") * col("w6")).cast(org.apache.spark.sql.types.DecimalType(28, 0)))
+        (decimalSum(col("v100") * col("w6"), 28, 0)
           .cast("double") / lit(100000000L)).as("projection"))
       .orderBy("event_type")
   })
@@ -166,7 +166,7 @@ object QGaps2 {
     FROM lineitem GROUP BY 1 ORDER BY 1"""
   ))((s, d) => {
     def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast(org.apache.spark.sql.types.DecimalType(28, 4))).cast("double")
+      stableSum(c, 4)
     Tables.lineitem(s, d)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),

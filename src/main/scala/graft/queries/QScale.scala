@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.Deterministic.{decimalSum, stableSum}
 import graft.Tables
 import graft.operators.{Dedup, Incremental, Layout, Sessionize, Sketches}
 
@@ -42,7 +42,7 @@ object QScale {
       .select(col("user_id"), col("ts").cast("long").as("t"), col("value"))
     Sessionize.summarize(e, "user_id", "t", gapSeconds = 1800L,
         extraAggs = Seq(
-          sum(col("value").cast(DecimalType(28, 6))).cast("double").as("sum_value")))
+          stableSum(col("value")).as("sum_value")))
       .orderBy("user_id", "session_id")
   })
 
@@ -154,7 +154,7 @@ object QScale {
       .select(col("user_id"), col("ts").cast("long").as("t"), col("value"))
     val w = Window.partitionBy("user_id").orderBy("t").rangeBetween(-3600L, 0L)
     e.withColumn("n_1h", count(lit(1)).over(w))
-      .withColumn("s_1h", sum(col("value").cast(DecimalType(28, 6))).over(w))
+      .withColumn("s_1h", decimalSum(col("value"), 28, 6).over(w))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         max(col("n_1h")).as("peak_1h_n"),
@@ -177,17 +177,17 @@ object QScale {
     FROM events GROUP BY 1 ORDER BY 1"""
   ))((s, d) => {
     val e = Tables.events(s, d).select(col("user_id"), col("event_type"),
-      col("event_id"), col("value").cast(DecimalType(28, 6)).as("v"))
+      col("event_id"), col("value"))
     def partials(f: org.apache.spark.sql.DataFrame) =
       f.groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
+        .agg(count(lit(1)).as("n"), decimalSum(col("value"), 28, 6).as("s"))
     val snap = partials(e.filter(col("event_id") % 2 === 0))
     val delta = partials(e.filter(col("event_id") % 2 === 1))
     Incremental.mergeAggregates(snap, delta, Seq("user_id", "event_type"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_keys"),
         sum(col("n")).as("total_n"),
-        sum(col("s")).cast("double").as("total_value"))
+        decimalSum(col("s"), 38, 6).cast("double").as("total_value"))
       .orderBy("event_type")
   })
 

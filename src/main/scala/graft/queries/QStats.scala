@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.Deterministic.{stableSum, stableSumSql}
+import graft.functions.Deterministic.{decimalSum, stableSum, stableSumSql}
 
 /** Normalization & projection math (L2–L5), statistics layer (T1–T9,
   * L13), streaming twin — SURVEY §2.8 (Catalyst-expressible part),
@@ -43,12 +43,11 @@ object QStats {
       round(COALESCE((value - sx / n) / NULLIF(sd, 0), 0), 4) AS z
     FROM z ORDER BY event_id"""
   ))((s, d) => {
-    val dec6 = org.apache.spark.sql.types.DecimalType(28, 6)
     val w = Window.partitionBy("event_type")
     val n = count(lit(1)).over(w)
     val nD = n.cast("double")
-    val sx = sum(col("value").cast(dec6)).over(w).cast("double")
-    val sxx = sum((col("value") * col("value")).cast(dec6)).over(w).cast("double")
+    val sx = decimalSum(col("value"), 28, 6).over(w).cast("double")
+    val sxx = decimalSum(col("value") * col("value"), 28, 6).over(w).cast("double")
     val sd = when(n > 1,
       sqrt(greatest((sxx - sx * sx / nD) / (nD - lit(1.0)), lit(0.0))))
     Tables.events(s, d).select(col("event_id"),
@@ -446,8 +445,7 @@ object QStats {
       val mc = sum("c").over(ties)
       cum - mc + (mc + lit(1)) / 2.0
     }
-    val dec = org.apache.spark.sql.types.DecimalType(38, 2)
-    def qsum(term: org.apache.spark.sql.Column) = sum(term.cast(dec)).cast("double")
+    def qsum(term: org.apache.spark.sql.Column) = decimalSum(term, 38, 2).cast("double")
     val g = joint
       .select(col("event_type"), col("c"),
         tieRank("value").as("rx"), tieRank("lp").as("ry"))
@@ -486,7 +484,7 @@ object QStats {
   ))((s, d) => {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum((col("value") - 50.0).cast("decimal(28,6)")).cast("double").as("dsum"))
+      .agg(stableSum(col("value") - 50.0).as("dsum"))
     val base = daily.filter(col("dsum") > 0)
       .groupBy("event_type").agg(min("day").as("baseline_day"))
     daily.join(base, "event_type")
@@ -685,8 +683,7 @@ object QStats {
       .crossJoin(broadcast(nn))
       .select(expr(chi2Term).as("term"))
     val st = terms
-      .agg(round(sum(col("term").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-        .cast("double"), 4).as("chi2"))
+      .agg(round(stableSum(col("term")), 4).as("chi2"))
       .crossJoin(broadcast(dims))
       .crossJoin(broadcast(nn))
     st.withColumn("df", expr("CAST((r - 1) * (c - 1) AS BIGINT)"))
@@ -713,7 +710,7 @@ object QStats {
       .groupBy(window(col("ts"), "1 hour").getField("start").as("window_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
+        stableSum(col("value")).as("sum_value"))
       .orderBy("window_start", "event_type"))
 
   // --------------------------------------- T12 Kolmogorov–Smirnov

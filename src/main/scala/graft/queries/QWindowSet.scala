@@ -38,7 +38,7 @@ object QWindowSet {
         least(round(col("n") * 30 / 100.0).cast("long"), col("n") - 2))
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n_kept"),
-        sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("kept_bal"))
+        decimalSum(col("c_acctbal"), 18, 2).cast("double").as("kept_bal"))
       .orderBy("c_nationkey")
   })
 

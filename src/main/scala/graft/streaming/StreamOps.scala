@@ -209,7 +209,7 @@ object StreamOps {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(28,6)")).cast("double").as("sum_value"))
+        graft.functions.Deterministic.stableSum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
     runToMemory(spark, agg, "graft_stream_wm", OutputMode.Append(),

@@ -46,6 +46,16 @@ class BenchSpec extends AnyFunSuite {
       """{"q\"1":{"bytes":42,"frames":2},"q2":{"bytes":0,"frames":0}}""")
   }
 
+  test("the forcing action computes every output column") {
+    val spark = GraftSession.local(4)
+    val df = spark.range(3).selectExpr("id", "raise_error('bench column computed') AS boom")
+    // count() prunes the unreferenced column, so it never runs
+    assert(df.count() == 3)
+    val e = intercept[Exception](Bench.force(df))
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("bench column computed")), e)
+  }
+
   test("the record and the summary line carry the session's core count") {
     assert(Bench.headJson(12.3456, 1, 4) ==
       """"metric":"total","value":12.346,"unit":"sec","failed":1,"cpus":4""")

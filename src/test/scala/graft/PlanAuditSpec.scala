@@ -43,6 +43,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bandFrames.isEmpty, s"$name pins a band frame in executor storage:\n$str")
   }
 
+  /** Every node of a physical plan, descending into AQE wrappers and
+    * cached frames (memo entries hide their producer's plan). */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      planNodes(a.inputPlan)
+    case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+      planNodes(m.relation.cachedPlan)
+    case _ => p.children.flatMap(planNodes)
+  })
+
   test("nested-loop joins appear only in the intentional dimension-bounded plans") {
     val intentional = Set(
       "dedup_simhash",            // 1-row observed-bucket-width broadcast cross
@@ -277,15 +288,6 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
     import graft.functions.{MinhashSig, SortedIntersectSize}
     val setNames = Set("s", "shs", "s_a", "s_b", "s_old")
-    // descend into cached frames (memo entries hide their producer's
-    // plan) and AQE wrappers
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        nodes(a.inputPlan)
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        nodes(m.relation.cachedPlan)
-      case _ => p.children.flatMap(nodes)
-    })
     // the shingle-set arrays a column carries, itself or as a struct field
     def sets(name: String, t: DataType): Seq[(String, ArrayType)] = t match {
       case a: ArrayType if setNames(name) => Seq(name -> a)
@@ -298,7 +300,7 @@ class PlanAuditSpec extends AnyFunSuite {
         case _ => false
       }) || p.output.exists(_.metadata.contains("graft_shingle_encoding")))
     def violations(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val ns = nodes(df.queryExecution.executedPlan)
+      val ns = planNodes(df.queryExecution.executedPlan)
       if (!handlesSets(ns)) Nil else ns.flatMap { p =>
         p.output.flatMap(a => sets(a.name, a.dataType)).collect {
           case (n, t) if t.elementType != LongType => s"$n: ${t.sql}"
@@ -341,6 +343,51 @@ class PlanAuditSpec extends AnyFunSuite {
     Dedup.writeMinhashSigStore(docs, "doc_id", "text", sigDir, nHash = 8)
     assert(violations(Dedup.searchMinhashSigStore(sigDir,
       docs.withColumn("doc_id", $"doc_id" + 10), "doc_id", "text")).isEmpty)
+  }
+
+  test("exact sums run on graft_decimal_sum, never Spark's sum over a cast to DECIMAL") {
+    // Spark's sum(cast(x AS DECIMAL(p, s))) over a double or integral x
+    // pays a BigDecimal add per row; the native kernel computes the same
+    // value on a 128-bit buffer (Deterministic.decimalSum, DecimalSumSpec).
+    // A window's (or a pre-projected) sum reads its cast through an
+    // attribute, so a sum's input is followed through the plan's aliases.
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, ExprId, Expression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types._
+    def castSums(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val ns = planNodes(df.queryExecution.executedPlan)
+      val defs: Map[ExprId, Expression] =
+        ns.flatMap(_.expressions.flatMap(_.collect { case a: Alias => a.exprId -> a.child })).toMap
+      def input(e: Expression): Expression = e match {
+        case a: Attribute if defs.contains(a.exprId) => input(defs(a.exprId))
+        case _ => e
+      }
+      ns.flatMap(_.expressions.flatMap(_.collect {
+        case s: Sum if (input(s.child) match {
+          case c: Cast => c.dataType.isInstanceOf[DecimalType] && (c.child.dataType match {
+            case DoubleType | FloatType | ByteType | ShortType | IntegerType | LongType => true
+            case _ => false
+          })
+          case _ => false
+        }) => s"${s.sql} over ${input(s.child).sql}"
+      })).distinct
+    }
+    // the detector sees the construct, windowed and under a cached frame,
+    // and passes the kernel
+    import org.apache.spark.sql.functions.{col, sum}
+    val raw = sum((col("id") * 0.5).cast("double").cast(DecimalType(28, 6)))
+    assert(castSums(spark.range(4).agg(raw)).nonEmpty)
+    assert(castSums(spark.range(4).select(raw.over())).nonEmpty)
+    val cached = spark.range(4).groupBy(col("id") % 2).agg(raw.as("v")).cache()
+    assert(castSums(cached.select("v")).nonEmpty)
+    cached.unpersist()
+    assert(castSums(spark.range(4).agg(
+      graft.functions.Deterministic.stableSum(col("id").cast("double")))).isEmpty)
+    val offenders = Q.registry
+      .filterNot(q => q.name.startsWith("stream_") || q.buildExecutes)
+      .map(q => q.name -> castSums(q.build(spark, s"${Q.testdataRoot}/sf0.001")))
+      .filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, s"sum over a cast to DECIMAL outside the kernel: $offenders")
   }
 
   test("j1_skewed_segment joins on the deterministic salt") {
