@@ -18,112 +18,58 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * session built here.
   */
 object GraftSession {
-  /** Arity gate for the injected builders: a wrong-arity SQL call gets
-    * the standard WRONG_NUM_ARGS AnalysisException (naming function and
-    * counts) instead of a builder IndexOutOfBoundsException. */
-  private def arity(name: String, expected: Int,
-      children: Seq[Expression]): Seq[Expression] = {
-    if (children.length != expected)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> s"`$name`",
-          "expectedNum" -> expected.toString,
-          "actualNum" -> children.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    children
+  /** The engine's native functions: (name, class, arity, builder over
+    * arity-checked children). A wrong-arity SQL call gets the standard
+    * WRONG_NUM_ARGS AnalysisException (naming function and counts)
+    * instead of a builder MatchError. */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = {
+    import graft.functions._
+    def literal(fn: String, what: String, e: Expression): String = {
+      require(e.foldable && e.eval() != null, s"$fn needs a literal $what, got ${e.sql}")
+      e.eval().toString
+    }
+    Seq(
+      ("graft_cosine", classOf[CosineSimilarity], 2,
+        { case Seq(a, b) => CosineSimilarity(a, b) }),
+      ("graft_lsh_bucket", classOf[LshBucket], 2, { case Seq(a, b) => LshBucket(a, b) }),
+      ("graft_top_cells", classOf[TopCells], 3, { case Seq(a, b, c) => TopCells(a, b, c) }),
+      ("graft_minhash_sig", classOf[MinhashSig], 3,
+        { case Seq(a, b, c) => MinhashSig(a, b, c) }),
+      ("graft_sorted_intersect_size", classOf[SortedIntersectSize], 2,
+        { case Seq(a, b) => SortedIntersectSize(a, b) }),
+      ("graft_kgrams", classOf[Kgrams], 3, { case Seq(a, b, c) => Kgrams(a, b, c) }),
+      ("graft_simhash", classOf[SimhashSig], 1, { case Seq(a) => SimhashSig(a) }),
+      ("graft_bucket_members", classOf[BucketMembers], 2, { case Seq(m, cap) =>
+        BucketMembers(m, literal("graft_bucket_members", "cap", cap).toLong) }),
+      ("graft_decimal_sum", classOf[DecimalSum], 3, { case Seq(x, p, s) =>
+        val what = "precision and scale"
+        DecimalSum(x, literal("graft_decimal_sum", what, p).toInt,
+          literal("graft_decimal_sum", what, s).toInt) }),
+      ("graft_repetition", classOf[RepetitionSignals], 1,
+        { case Seq(a) => RepetitionSignals(a) }))
   }
+
+  /** Names of the injected native functions. */
+  private[graft] def functionNames: Seq[String] = functions.map(_._1)
 
   def configure(b0: SparkSession.Builder, cores: String): SparkSession.Builder = {
     val b = localDirDefault.fold(b0)(d => b0.config("spark.local.dir", d))
     b.withExtensions { ext =>
-        ext.injectFunction((
-          FunctionIdentifier("graft_cosine"),
-          new ExpressionInfo(classOf[graft.functions.CosineSimilarity].getName,
-            "graft_cosine"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b) = arity("graft_cosine", 2, children)
-            graft.functions.CosineSimilarity(a, b)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_lsh_bucket"),
-          new ExpressionInfo(classOf[graft.functions.LshBucket].getName,
-            "graft_lsh_bucket"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b) = arity("graft_lsh_bucket", 2, children)
-            graft.functions.LshBucket(a, b)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_top_cells"),
-          new ExpressionInfo(classOf[graft.functions.TopCells].getName,
-            "graft_top_cells"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b, c) = arity("graft_top_cells", 3, children)
-            graft.functions.TopCells(a, b, c)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_minhash_sig"),
-          new ExpressionInfo(classOf[graft.functions.MinhashSig].getName,
-            "graft_minhash_sig"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b, c) = arity("graft_minhash_sig", 3, children)
-            graft.functions.MinhashSig(a, b, c)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_sorted_intersect_size"),
-          new ExpressionInfo(classOf[graft.functions.SortedIntersectSize].getName,
-            "graft_sorted_intersect_size"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b) = arity("graft_sorted_intersect_size", 2, children)
-            graft.functions.SortedIntersectSize(a, b)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_kgram_first_pos"),
-          new ExpressionInfo(classOf[graft.functions.KgramFirstPos].getName,
-            "graft_kgram_first_pos"),
-          (children: Seq[Expression]) => {
-            val Seq(a, b) = arity("graft_kgram_first_pos", 2, children)
-            graft.functions.KgramFirstPos(a, b)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_simhash"),
-          new ExpressionInfo(classOf[graft.functions.SimhashSig].getName,
-            "graft_simhash"),
-          (children: Seq[Expression]) => {
-            val Seq(a) = arity("graft_simhash", 1, children)
-            graft.functions.SimhashSig(a)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_bucket_members"),
-          new ExpressionInfo(classOf[graft.functions.BucketMembers].getName,
-            "graft_bucket_members"),
-          (children: Seq[Expression]) => {
-            val Seq(m, cap) = arity("graft_bucket_members", 2, children)
-            require(cap.foldable && cap.eval() != null,
-              s"graft_bucket_members needs a literal cap, got ${cap.sql}")
-            graft.functions.BucketMembers(m, cap.eval().toString.toLong)
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_decimal_sum"),
-          new ExpressionInfo(classOf[graft.functions.DecimalSum].getName,
-            "graft_decimal_sum"),
-          (children: Seq[Expression]) => {
-            val Seq(x, p, s) = arity("graft_decimal_sum", 3, children)
-            def literal(e: Expression): Int = {
-              require(e.foldable && e.eval() != null,
-                s"graft_decimal_sum needs a literal precision and scale, got ${e.sql}")
-              e.eval().toString.toInt
-            }
-            graft.functions.DecimalSum(x, literal(p), literal(s))
-          }))
-        ext.injectFunction((
-          FunctionIdentifier("graft_repetition"),
-          new ExpressionInfo(classOf[graft.functions.RepetitionSignals].getName,
-            "graft_repetition"),
-          (children: Seq[Expression]) => {
-            val Seq(a) = arity("graft_repetition", 1, children)
-            graft.functions.RepetitionSignals(a)
-          }))
+        functions.foreach { case (name, cls, arity, build) =>
+          ext.injectFunction((FunctionIdentifier(name),
+            new ExpressionInfo(cls.getName, name),
+            (children: Seq[Expression]) => {
+              if (children.length != arity)
+                throw new org.apache.spark.sql.AnalysisException(
+                  errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+                  messageParameters = Map(
+                    "functionName" -> s"`$name`",
+                    "expectedNum" -> arity.toString,
+                    "actualNum" -> children.length.toString,
+                    "docroot" -> "https://spark.apache.org/docs/latest"))
+              build(children)
+            }))
+        }
       }
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")

@@ -46,10 +46,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * than `ngram` tokens return NULL (the caller's `isNotNull` filter
   * is the old `size(w) >= n` gate).
   *
-  * Per shingle the pass allocates nothing: a space byte only ever
-  * encodes ' ', so shingle i is a byte range of the document's UTF-8
-  * bytes, digested into a reused buffer and recorded as two longs in a
-  * per-thread scratch array.
+  * Per shingle the pass allocates nothing: tokenizing and digesting is
+  * [[Kgrams.windows]], the text family's one k-gram routine (shared with
+  * `graft_kgrams`), which records each shingle as two longs in
+  * per-thread scratch; its stable sort + compaction yields `shs`.
   */
 case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
     extends TernaryExpression with CodegenFallback {
@@ -84,36 +84,14 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
   override def eval(input: InternalRow): Any = {
     val t = text.eval(input)
     if (t == null) return null
-    // decode + re-encode: ill-formed UTF-8 is replaced exactly as the
-    // split-then-encode formulation replaces it, token by token
-    val bytes = t.asInstanceOf[UTF8String].toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var spaces = 0
-    var b = 0
-    while (b < bytes.length) { if (bytes(b) == ' ') spaces += 1; b += 1 }
-    if (spaces + 1 < n) return null
-    val shingles = spaces + 2 - n
-    val sc = MinhashSig.scratch.get().reserve(spaces + 1, shingles)
-    // ends(w) = the byte index just past token w
-    val ends = sc.ends
-    var w = 0
-    b = 0
-    while (b < bytes.length) { if (bytes(b) == ' ') { ends(w) = b; w += 1 }; b += 1 }
-    ends(w) = bytes.length
+    val w = Kgrams.windows(t.asInstanceOf[UTF8String], n)
+    if (w == null) return null
     val m = graft.operators.Dedup.mixM
     val mins = Array.fill(k)(Long.MaxValue)
-    val pairs = sc.pairs
-    val md = sc.md
     var i = 0
-    while (i < shingles) {
-      val from = if (i == 0) 0 else ends(i - 1) + 1
-      md.update(bytes, from, ends(i + n - 1) - from)
-      md.digest(sc.dig, 0, 16)
-      val hi = sc.digBuf.getLong(0)
-      pairs(2 * i) = hi
-      pairs(2 * i + 1) = sc.digBuf.getLong(8)
+    while (i < w.count) {
       // first 8 hex chars = top 4 digest bytes, unsigned, mod 2^31
-      val h1 = (hi >>> 32) % m
+      val h1 = (w.pairs(2 * i) >>> 32) % m
       var x = 0
       while (x < k) {
         val v = (h1 * as(x) + bs(x)) % m
@@ -122,10 +100,10 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
       }
       i += 1
     }
-    val distinct = MinhashSig.sortDistinct(pairs, sc.tmp, shingles)
+    val distinct = w.sortDistinct()
     new GenericInternalRow(Array[Any](
       UnsafeArrayData.fromPrimitiveArray(mins),
-      UnsafeArrayData.fromPrimitiveArray(pairs, Platform.LONG_ARRAY_OFFSET, 2 * distinct, 8)))
+      UnsafeArrayData.fromPrimitiveArray(w.pairs, Platform.LONG_ARRAY_OFFSET, 2 * distinct, 8)))
   }
 
   override protected def withNewChildrenInternal(
@@ -133,64 +111,4 @@ case class MinhashSig(text: Expression, ngram: Expression, nHash: Expression)
     copy(text = newFirst, ngram = newSecond, nHash = newThird)
 
   override def prettyName: String = "graft_minhash_sig"
-}
-
-object MinhashSig {
-  /** Per-thread working state: MD5 instances are not thread-safe and
-    * expressions may be shared across tasks. The arrays grow to the
-    * largest document a thread has seen and are reused after that. */
-  private final class Scratch {
-    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
-    val dig = new Array[Byte](16)
-    val digBuf: java.nio.ByteBuffer = java.nio.ByteBuffer.wrap(dig) // big-endian
-    var ends = new Array[Int](64)
-    var pairs = new Array[Long](128)
-    var tmp = new Array[Long](128)
-
-    def reserve(tokens: Int, shingles: Int): Scratch = {
-      if (ends.length < tokens) ends = new Array[Int](math.max(tokens, 2 * ends.length))
-      if (pairs.length < 2 * shingles) {
-        val len = math.max(2 * shingles, 2 * pairs.length)
-        pairs = new Array[Long](len); tmp = new Array[Long](len)
-      }
-      this
-    }
-  }
-
-  private val scratch = new ThreadLocal[Scratch] {
-    override def initialValue(): Scratch = new Scratch
-  }
-
-  /** Sorts the first `count` (hi, lo) pairs of `p` by unsigned (hi, lo)
-    * and compacts away repeats; returns the number of distinct pairs.
-    * `tmp` is merge scratch of at least `2 · count` longs. */
-  private def sortDistinct(p: Array[Long], tmp: Array[Long], count: Int): Int = {
-    sort(p, tmp, 0, count)
-    var m = 0
-    var i = 0
-    while (i < count) {
-      if (m == 0 || p(2 * i) != p(2 * m - 2) || p(2 * i + 1) != p(2 * m - 1)) {
-        p(2 * m) = p(2 * i); p(2 * m + 1) = p(2 * i + 1); m += 1
-      }
-      i += 1
-    }
-    m
-  }
-
-  /** Merge sort of pairs [from, until) by unsigned (hi, lo). */
-  private def sort(p: Array[Long], tmp: Array[Long], from: Int, until: Int): Unit =
-    if (until - from > 1) {
-      val mid = (from + until) >>> 1
-      sort(p, tmp, from, mid)
-      sort(p, tmp, mid, until)
-      var i = from; var j = mid; var o = from
-      while (o < until) {
-        val takeLeft = j >= until || (i < mid && SortedIntersect.comparePairs(
-          p(2 * i), p(2 * i + 1), p(2 * j), p(2 * j + 1)) <= 0)
-        val s = if (takeLeft) { i += 1; i - 1 } else { j += 1; j - 1 }
-        tmp(2 * o) = p(2 * s); tmp(2 * o + 1) = p(2 * s + 1)
-        o += 1
-      }
-      System.arraycopy(tmp, 2 * from, p, 2 * from, 2 * (until - from))
-    }
 }

@@ -16,28 +16,37 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
   * tables consumed by both sides of a self-join are persisted because
   * Catalyst does not CSE across join branches — via [[CacheScope.persist]],
   * so the consumer's scope unpersists them once its action completes.
+  *
+  * Gram key: every word k-gram of the text family is its MD5 digest as
+  * two longs (hi, lo), from the one tokenizer/digest routine
+  * [[graft.functions.Kgrams.windows]] — through `graft_kgrams` (shingles,
+  * substring runs, span rewrite) or `graft_minhash_sig` (the signature
+  * family's sorted `s` sets). Joins, windows and aggregates key on the
+  * pair; no 32-char hex digest is built anywhere.
   */
 object Dedup {
 
-  /** Row-wise word n-gram md5 shingles. Output: `carry` columns + `sh`
-    * (md5 hex). With `dedup` (the default) one row per distinct
-    * (carry, shingle) — set semantics for consumers that count rows.
-    * `dedup = false` skips that full shuffle and emits one row per
-    * shingle OCCURRENCE — the right form for consumers that are
-    * multiset-insensitive anyway (min-of-hash signatures, collect_set).
-    * Documents with fewer than `n` whitespace tokens are dropped. */
+  /** Row-wise word n-gram shingles. Output: `carry` columns + the
+    * shingle's MD5 as two longs, `sh_hi` and `sh_lo` (the `graft_kgrams`
+    * gram key — the hex digest is never built). With `dedup` (the
+    * default) one row per distinct (carry, shingle) — set semantics for
+    * consumers that count rows. `dedup = false` skips that full shuffle
+    * and emits one row per shingle OCCURRENCE — the right form for
+    * consumers that are multiset-insensitive anyway (joins into a
+    * distinct count, distinct sketches). Documents with fewer than `n`
+    * whitespace tokens are dropped. */
   def shingles(docs: DataFrame, textCol: String, carry: Seq[String], n: Int = 3,
       dedup: Boolean = true): DataFrame = {
-    val grams = (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(", ")
     val occ = docs
-      .withColumn("w", split(col(textCol), " "))
-      .filter(size(col("w")) >= n)
-      .select((carry.map(col) :+ col("w") :+
-        explode(expr(s"sequence(0, size(w) - $n)")).as("i")): _*)
-      .select((carry.map(col) :+
-        expr(s"md5(encode(concat_ws(' ', $grams), 'UTF-8'))").as("sh")): _*)
+      .select((carry.map(col) :+ explode(kgrams(textCol, n, firstOnly = false)).as("g")): _*)
+      .select((carry.map(col) :+ col("g.hi").as("sh_hi") :+ col("g.lo").as("sh_lo")): _*)
     if (dedup) occ.distinct() else occ
   }
+
+  /** `graft_kgrams(textCol, k, firstOnly)`: a document's word k-grams as
+    * (hi, lo, pos) digest keys, NULL below k tokens. */
+  private def kgrams(textCol: String, k: Int, firstOnly: Boolean): org.apache.spark.sql.Column =
+    expr(s"graft_kgrams($textCol, $k, $firstOnly)")
 
   /** Exact-dedup summary per group: total/distinct/removed counts and the
     * smallest surviving id. One hash-groupBy — map-side combine, one
@@ -1187,9 +1196,8 @@ object Dedup {
       s"carry columns must be distinct from blockCols/idCol, got $carry")
     // The distinct shingle set and its size are PER-DOCUMENT values, so
     // they come from the signature table's `s` (distinct md5s as
-    // (hi, lo) long pairs — one-to-one with the hex md5s of shingles(),
-    // so the (sh_hi, sh_lo) join keys match exactly the pairs the hex
-    // keys did): the exploded index frame is a pure projection of the
+    // (hi, lo) long pairs — the same (sh_hi, sh_lo) keys shingles()
+    // emits): the exploded index frame is a pure projection of the
     // input — no corpus-wide distinct shuffle and no per-doc count
     // window before the join, the same structural win minhashLsh took.
     // `s` is nHash-invariant, so a caller's shared nHash=12 table
@@ -1315,10 +1323,11 @@ object Dedup {
     * the memorization-risk signal, caught by the suffix-array pass in
     * the paper and by a k-gram diagonal-run scan here.
     *
-    * Mechanics: each doc emits its k-token window md5s with positions
-    * (FIRST occurrence per distinct gram — repeated-token degenerate
-    * docs collapse instead of multiplying join rows; true duplicated
-    * passages in natural text have distinct grams and survive intact);
+    * Mechanics: each doc emits its k-token window md5 keys (hi, lo)
+    * with positions (FIRST occurrence per distinct gram —
+    * repeated-token degenerate docs collapse instead of multiplying
+    * join rows; true duplicated passages in natural text have
+    * distinct grams and survive intact);
     * an inverted-index equi-join on the gram keys candidates (Σ df²
     * rows, df capped to [2, maxDf] — singleton grams cannot match,
     * hot boilerplate grams are dropped exactly as ngramJaccard's
@@ -1327,7 +1336,7 @@ object Dedup {
     * each maximal run of consecutive grams — r consecutive k-grams =
     * r + k − 1 verbatim tokens.
     *
-    * Scale: every stage keys on (gram), (pair, diagonal) or (pair) —
+    * Scale: every stage keys on (hi, lo), (pair, diagonal) or (pair) —
     * never fewer; the island window sorts only a pair's matches on one
     * diagonal. All-integer arithmetic end to end.
     *
@@ -1339,7 +1348,7 @@ object Dedup {
     * +0.3 s, island window + run aggregation +1.8 s (one sort of the
     * 12M (pair, diag, ia) match rows). No stage moves data it does not
     * consume, the join was verified hash-partitioned (not a driver
-    * broadcast), and the two windows key on (g) and (pair, diag) —
+    * broadcast), and the two windows key on the gram and (pair, diag) —
     * each stage is at its volume's floor, so further cuts require
     * changing the measure (coarser k, tighter df cap), not the plan.
     *
@@ -1374,21 +1383,19 @@ object Dedup {
     require(k >= 1, s"substringRuns needs k >= 1, got $k")
     require(maxDf >= 2, s"substringRuns needs maxDf >= 2, got $maxDf")
     // (gram, first-position) pairs are PER-DOCUMENT facts — computed
-    // row-locally by the native KgramFirstPos pass (identical
-    // token/md5 chain), so the index frame is a pure projection: no
-    // corpus-wide groupBy of the gram stream before the df gate (the
-    // same structural win the minhash/ngram paths took). A NULL result
-    // (doc shorter than k tokens) explodes to no rows — the old
-    // size(w) >= k gate.
+    // row-locally by graft_kgrams' first-only mode, so the index frame
+    // is a pure projection: no corpus-wide groupBy of the gram stream
+    // before the df gate (the same structural win the minhash/ngram
+    // paths took). A NULL result (doc shorter than k tokens) explodes
+    // to no rows — the old size(w) >= k gate.
     val occ = docs
-      .select(col(idCol),
-        explode(expr(s"graft_kgram_first_pos($textCol, $k)")).as("z"))
-      .select(col(idCol), col("z.g").as("g"), col("z.i").as("i"))
+      .select(col(idCol), explode(kgrams(textCol, k, firstOnly = true)).as("z"))
+      .select(col(idCol), col("z.hi").as("hi"), col("z.lo").as("lo"), col("z.pos").as("i"))
     val ex = CacheScope.persist(occ
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("hi", "lo")))
       .filter(col("df").between(2L, maxDf)).drop("df"))
-    ex.as("a").join(ex.as("b"),
-        col("a.g") === col("b.g") && col(s"a.$idCol") < col(s"b.$idCol"))
+    ex.as("a").join(ex.as("b"), col("a.hi") === col("b.hi") &&
+        col("a.lo") === col("b.lo") && col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("doc_a"), col(s"b.$idCol").as("doc_b"),
         col("a.i").as("ia"), (col("a.i") - col("b.i")).as("diag"))
   }
@@ -1427,22 +1434,17 @@ object Dedup {
     require(minDf >= 2, s"spanRewrite needs minDf >= 2, got $minDf")
     val d = docs.filter(col(textCol).isNotNull)
       .select(col(idCol), col(textCol).as("text"))
-    val grams = (0 until k).map(j => if (j == 0) "w[i]" else s"w[i+$j]").mkString(", ")
     // ALL gram occurrences with positions (not first-per-doc: every
     // occurrence of a hot gram must mask its token range)
     val occ = CacheScope.persist(d
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= k)
-      .select(col(idCol), col("w"),
-        explode(expr(s"sequence(0, size(w) - $k)")).as("i"))
-      .select(col(idCol), col("i"),
-        expr(s"md5(encode(concat_ws(' ', $grams), 'UTF-8'))").as("g")))
-    val hot = occ.groupBy("g")
+      .select(col(idCol), explode(kgrams("text", k, firstOnly = false)).as("z"))
+      .select(col(idCol), col("z.pos").as("i"), col("z.hi").as("hi"), col("z.lo").as("lo")))
+    val hot = occ.groupBy("hi", "lo")
       .agg(countDistinct(col(idCol)).as("df"))
-      .filter(col("df") >= minDf).select("g")
+      .filter(col("df") >= minDf).select("hi", "lo")
     // covered token positions: hot occurrences fanned out ×k, dedup'd —
     // volume ≤ k × (hot occurrence count), i.e. duplication-bounded
-    val cov = occ.join(hot, "g")
+    val cov = occ.join(hot, Seq("hi", "lo"))
       .select(col(idCol), explode(expr(s"sequence(i, i + ${k - 1})")).as("pos"))
       .distinct()
     // per-doc covered-position array rides back onto the doc ROW —

@@ -260,8 +260,8 @@ object TextOps {
     * corpus gains by KEEPING a document (and a corpus-level novelty
     * drop over time is the standard crawl-saturation signal).
     *
-    * Shape: one shingle pass (md5 grams, distinct per doc via
-    * [[Dedup.shingles]]), document frequency by ONE gram-keyed window
+    * Shape: one shingle pass ((hi, lo) md5 gram keys, distinct per doc
+    * via [[Dedup.shingles]]), document frequency by ONE gram-keyed window
     * over that stream, then the per-doc roll-up — shuffles key on
     * (gram) and (doc), never fewer. All-integer until the one rounded
     * ratio. Output: (idCol, n_grams, n_novel, novelty). */
@@ -269,7 +269,7 @@ object TextOps {
       n: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = Dedup.shingles(docs, textCol, Seq(idCol), n)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh_hi", "sh_lo")))
     sh.groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("df") === 1L, 1L).otherwise(0L)).as("n_novel"))
@@ -357,9 +357,9 @@ object TextOps {
       textCol: String, ngram: Int = 5): DataFrame = {
     val evalSh = Dedup.shingles(evalSet, textCol, Seq.empty, ngram)
     val trainSh = Dedup.shingles(train, textCol, Seq(idCol), ngram, dedup = false)
-    trainSh.join(broadcast(evalSh), "sh")
+    trainSh.join(broadcast(evalSh), Seq("sh_hi", "sh_lo"))
       .groupBy(idCol)
-      .agg(countDistinct(col("sh")).as("n_shared"))
+      .agg(countDistinct(col("sh_hi"), col("sh_lo")).as("n_shared"))
   }
 
   /** Gopher-style intra-document repetition signals over word n-grams:

@@ -474,7 +474,7 @@ object QAgg {
         Tables.documentsP(s, d).filter(col("source").isin(ovA, ovB)),
         "text", Seq("source"), n = 2, dedup = false)
       .select(col("source"),
-        conv(substring(col("sh"), 1, 15), 16, 10).cast("long").as("h"))
+        shiftrightunsigned(col("sh_hi"), 4).as("h"))
     // (source, h) distinct: four plan subtrees consume it (three
     // sketches + the exact legs), so it is scope-persisted — Catalyst
     // does not CSE across aggregation branches. A sketch-only

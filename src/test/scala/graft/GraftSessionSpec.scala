@@ -20,4 +20,15 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$v'"), v)
     }
   }
+
+  test("a wrong-arity call to any native function raises WRONG_NUM_ARGS") {
+    val spark = GraftSession.local(4)
+    assert(GraftSession.functionNames.size == 10)
+    for (name <- GraftSession.functionNames; args <- Seq("", "1, 2, 3, 4, 5")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $name($args)").queryExecution.analyzed)
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$name($args)")
+      assert(e.getMessage.contains(s"`$name`"), s"$name($args)")
+    }
+  }
 }

@@ -18,6 +18,20 @@ class LibraryOpsSpec extends AnyFunSuite {
     rows.toDF("id", "grp", "body")
   }
 
+  /** The hex formulation of word n-grams the native k-gram stage is
+    * pinned against: one row per window occurrence, `carry` + its start
+    * token `i` + `sh`, the lowercase-hex md5 of
+    * `concat_ws(' ', w[i..i+n-1])` over `w = split(text, ' ')`. */
+  private def hexGrams(d: DataFrame, textCol: String, carry: Seq[String], n: Int): DataFrame = {
+    val grams = (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(", ")
+    d.withColumn("w", split(col(textCol), " "))
+      .filter(size(col("w")) >= n)
+      .select((carry.map(col) :+ col("w") :+
+        explode(expr(s"sequence(0, size(w) - $n)")).as("i")): _*)
+      .select((carry.map(col) :+ col("i") :+
+        expr(s"md5(encode(concat_ws(' ', $grams), 'UTF-8'))").as("sh")): _*)
+  }
+
   test("Dedup.ngramJaccard finds an exact near-dup pair with custom schema/params") {
     val d = docs(
       (1L, "x", "alpha beta gamma delta epsilon"),
@@ -752,30 +766,53 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(hashOf(16, ramp.map(b => (120 - (b & 0xff)).toByte)) == 0L)
   }
 
-  test("graft_kgram_first_pos matches the explode+groupBy formulation bit-for-bit") {
+  test("graft_kgrams matches the hex formulation bit-for-bit in both modes") {
     import spark.implicits._
-    val d = Seq(
-      (1L, "a b c a b c a b"),          // repeated grams → first positions
-      (2L, "x y"),                      // shorter than k=3 → NO rows
-      (3L, "p q r s"),                  // exactly two 3-grams
-      (4L, ""),                         // empty text → 1 token → no rows
-      (5L, "t  u v w"))                 // double space → empty token kept
-      .toDF("id", "body")
-    val viaExpr = d.select(col("id"),
-        explode(expr("graft_kgram_first_pos(body, 3)")).as("z"))
-      .select(col("id"), col("z.g"), col("z.i"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    val viaPlan = d.withColumn("w", split(col("body"), " "))
-      .filter(size(col("w")) >= 3)
-      .select(col("id"), col("w"),
-        explode(expr("sequence(0, size(w) - 3)")).as("i"))
-      .select(col("id"),
-        expr("md5(encode(concat_ws(' ', w[i], w[i+1], w[i+2]), 'UTF-8'))").as("g"),
-        col("i"))
-      .groupBy("id", "g").agg(min("i").as("i"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    assert(viaExpr == viaPlan && viaExpr.nonEmpty)
-    assert(!viaExpr.exists(t => t._1 == 2L || t._1 == 4L))
+    val rnd = new scala.util.Random(31)
+    val vocab = Seq("aa", "bb", "cc", "", "é∂", "漢字")
+    val utf8 = (t: String) => t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val fixed = Seq(
+      utf8("a b c a b c a b"),            // repeated grams → first positions
+      utf8("x y"),                        // shorter than k=3 → NULL
+      utf8("p q r s"),                    // exactly two 3-grams
+      utf8(""),                           // empty text → 1 (empty) token
+      utf8("t  u v w "),                  // consecutive + trailing spaces
+      utf8("  lead é∂ 漢字 é∂ 漢字 é∂"),     // leading spaces + multibyte
+      Array[Byte](0x61, -1, 0x20, 0x62, 0x20, -61, 0x20, 0x63, -30, -126, 0x20, 0x64),
+      Array[Byte](-19, -96, -128, 0x20, 0x78, 0x20, -128, 0x79, 0x20, 0x7a)) // ill-formed UTF-8
+    val random = (1 to 60).map(_ => utf8(
+      Seq.fill(rnd.nextInt(14))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    // raw bytes → string keeps ill-formed sequences as they are
+    val d = (fixed ++ random).zipWithIndex
+      .map { case (b, i) => (i.toLong, b.map("%02x".format(_)).mkString) }
+      .toDF("id", "hx").select(col("id"), unhex(col("hx")).cast("string").as("body"))
+      .cache()
+    val hex = udf((hi: Long, lo: Long) => f"$hi%016x$lo%016x")
+    for (k <- Seq(1, 2, 3)) {
+      val ref = hexGrams(d, "body", Seq("id"), k)
+      def native(firstOnly: Boolean) = d
+        .select(col("id"), explode(expr(s"graft_kgrams(body, $k, $firstOnly)")).as("z"))
+        .select(col("id"), hex(col("z.hi"), col("z.lo")), col("z.pos"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+      val rows = (df: DataFrame) =>
+        df.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq.sorted
+      // every occurrence: the raw explode, in position order per doc
+      val every = native(firstOnly = false)
+      assert(every.sorted == rows(ref.select("id", "sh", "i")), s"every occurrence, k=$k")
+      assert(every.groupBy(_._1).values.forall(g => g.map(_._3) == g.indices), s"k=$k")
+      // first only: groupBy(id, gram) min(i), one entry per distinct
+      // gram, sorted by unsigned (hi, lo) = hex order
+      val first = native(firstOnly = true)
+      assert(first.sorted == rows(ref.groupBy("id", "sh").agg(min("i"))), s"first only, k=$k")
+      assert(first.groupBy(_._1).values.forall(g => g.map(_._2) == g.map(_._2).sorted.distinct))
+      assert(first.size < every.size)
+      // NULL exactly below k tokens
+      val nulls = d.filter(expr(s"graft_kgrams(body, $k, true) IS NULL"))
+        .select("id").as[Long].collect().toSet
+      assert(nulls == d.filter(size(split(col("body"), " ")) < k)
+        .select("id").as[Long].collect().toSet && (k < 3 || nulls.contains(1L)), s"k=$k")
+    }
+    d.unpersist()
   }
 
   test("BMP synth/decode round-trips the raster across every stride residue") {
@@ -1019,7 +1056,7 @@ class LibraryOpsSpec extends AnyFunSuite {
       // reference: the old plan-level formulation; the set is the
       // shingles' distinct hex md5s, sorted (string order = unsigned
       // digest order)
-      val ex = Dedup.shingles(d, "body", Seq("id"), n, dedup = false)
+      val ex = hexGrams(d, "body", Seq("id"), n)
       val h1 = pmod(expr("conv(substring(sh, 1, 8), 16, 10)").cast("long"),
         lit(Dedup.mixM))
       val mhCols = (0 until k).map(i =>
@@ -1134,13 +1171,13 @@ class LibraryOpsSpec extends AnyFunSuite {
     val r = TextOps.fingerprint(d, "id", "body", n = 2).collect()(0)
     assert(r.getLong(1) == 3) // 4 tokens -> 3 bigrams
     // the fingerprint is the smallest lowercase-hex shingle md5
-    val minMd5 = Dedup.shingles(d, "body", Seq("id"), 2)
+    val minMd5 = hexGrams(d, "body", Seq("id"), 2)
       .agg(min(col("sh"))).head().getString(0)
     assert(r.getString(2) == minMd5)
     // both halves keep their leading zeros and sign-bit digits: over
     // many documents every fingerprint is the 32-digit minimum md5
     val many = docs((1 to 300).map(i => (i.toLong, "g", s"w$i x${i % 7} y z")): _*)
-    val want = Dedup.shingles(many, "body", Seq("id"), 2).groupBy("id")
+    val want = hexGrams(many, "body", Seq("id"), 2).groupBy("id")
       .agg(min(col("sh"))).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val fps = TextOps.fingerprint(many, "id", "body", n = 2).collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap

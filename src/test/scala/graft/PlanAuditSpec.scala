@@ -390,6 +390,50 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"sum over a cast to DECIMAL outside the kernel: $offenders")
   }
 
+  test("word k-grams are keyed by digest halves: no plan md5-hashes a concat_ws") {
+    // The text family keys every gram by its MD5 as two longs
+    // (graft_kgrams, Dedup.shingles); md5(encode(concat_ws(' ', ..))) is
+    // the retired per-gram 32-char hex key. Encode is runtime-replaced by
+    // a StaticInvoke of Encode.encode; a projection split in two reads
+    // the concat_ws through an alias.
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ConcatWs, Encode, ExprId, Expression, Md5}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    def hexGramKeys(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val ns = planNodes(df.queryExecution.executedPlan)
+      val defs: Map[ExprId, Expression] =
+        ns.flatMap(_.expressions.flatMap(_.collect { case a: Alias => a.exprId -> a.child })).toMap
+      def gramText(e: Expression): Boolean = e match {
+        case a: Attribute if defs.contains(a.exprId) => gramText(defs(a.exprId))
+        case _: ConcatWs => true
+        case enc: Encode => gramText(enc.str)
+        case si: StaticInvoke if si.staticObject == classOf[Encode] => gramText(si.arguments.head)
+        case _ => false
+      }
+      ns.flatMap(_.expressions.flatMap(_.collect {
+        case m: Md5 if gramText(m.child) => m.sql
+      })).distinct
+    }
+    // the detector sees the chain, encoded or not, cached or not, and
+    // passes an md5 of a plain column
+    import org.apache.spark.sql.functions.{col, concat_ws, encode, md5}
+    val words = spark.range(3).select(concat_ws(" ", col("id").cast("string"),
+      (col("id") + 1).cast("string")).as("g"))
+    assert(hexGramKeys(words.select(md5(encode(col("g"), "UTF-8")))).nonEmpty)
+    assert(hexGramKeys(words.select(md5(col("g").cast("binary")))).isEmpty)
+    assert(hexGramKeys(words.select(md5(encode(concat_ws(" ", col("g"), col("g")), "UTF-8"))))
+      .nonEmpty)
+    val cached = words.select(md5(encode(col("g"), "UTF-8")).as("h")).cache()
+    assert(hexGramKeys(cached.select("h")).nonEmpty)
+    cached.unpersist()
+    assert(hexGramKeys(spark.range(3).select(
+      md5(encode(col("id").cast("string"), "UTF-8")))).isEmpty)
+    val offenders = Q.registry
+      .filterNot(q => q.name.startsWith("stream_") || q.buildExecutes)
+      .map(q => q.name -> hexGramKeys(q.build(spark, s"${Q.testdataRoot}/sf0.001")))
+      .filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, s"hex md5(concat_ws) gram keys: $offenders")
+  }
+
   test("j1_skewed_segment joins on the deterministic salt") {
     val plan = Q.registry.find(_.name == "j1_skewed_segment").get
       .build(spark, s"${Q.testdataRoot}/sf0.001")
