@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 
 /** Session factory with the engine's standard configuration.
   *
@@ -46,7 +47,14 @@ object GraftSession {
         DecimalSum(x, literal("graft_decimal_sum", what, p).toInt,
           literal("graft_decimal_sum", what, s).toInt) }),
       ("graft_repetition", classOf[RepetitionSignals], 1,
-        { case Seq(a) => RepetitionSignals(a) }))
+        { case Seq(a) => RepetitionSignals(a) }),
+      // Spark's bounded top-k aggregate, reachable from SQL only through
+      // this row: the k least values in ascending SQL order (NULL inputs
+      // skipped, NULL struct fields first), O(k) state per group.
+      ("graft_top_k", classOf[CollectTopK], 2, { case Seq(v, k) =>
+        val n = literal("graft_top_k", "k", k).toIntOption.getOrElse(0)
+        require(n >= 1, s"graft_top_k needs an integer k >= 1, got ${k.sql}")
+        new CollectTopK(v, n, true, 0, 0) }))
   }
 
   /** Names of the injected native functions. */

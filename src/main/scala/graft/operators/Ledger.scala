@@ -37,9 +37,9 @@ object Ledger {
     * the report's shape is fixed by the pipeline, not the data.
     *
     * `idCol` must be integral (the bounded-state sampler ranks ids
-    * numerically). Output: (stage_idx, stage, reason, n_rows,
-    * sample_ids), one row per stage + the `kept` row, ordered by
-    * stage_idx. */
+    * numerically; NULL ids count but are never sampled). Output:
+    * (stage_idx, stage, reason, n_rows, sample_ids), one row per stage
+    * + the `kept` row, ordered by stage_idx. */
   def rejectLedger(df: DataFrame, idCol: String, stages: Seq[Stage],
       sampleK: Int = 3): DataFrame = {
     require(stages.nonEmpty, "rejectLedger needs at least one stage")
@@ -50,25 +50,12 @@ object Ledger {
     val idx = stages.zipWithIndex.foldRight(lit(stages.length.toLong)) {
       case ((st, i), rest) => when(!coalesce(st.keep, lit(false)), i.toLong).otherwise(rest)
     }
-    // min-k ids per stage with O(k) state: rank by v = −id (ids far
-    // below 2^53 stay exact in the double), k1 = id ascending tie-break.
-    // The 2^53 contract is ENFORCED, not just commented (r8 ADVICE): an
-    // id at or past the double's exact-integer ceiling raises at run
-    // time instead of silently corrupting the "k smallest" sample.
-    val sampler = udaf(new graft.functions.TopKKeysAgg(sampleK),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
-    val lim = 1L << 53
-    val idGuard = when(
-      col(idCol).cast("long") >= lim || col(idCol).cast("long") <= -lim,
-      raise_error(concat(lit("rejectLedger: |id| >= 2^53 breaks the " +
-        "double-ranked sample exactness contract, got "),
-        col(idCol).cast("string"))))
-      .otherwise(col(idCol).cast("long"))
+    // min-k ids per stage with O(k) state, ranked on the long id itself
     val got = df
-      .select(idx.as("stage_idx"), idGuard.as("id"))
+      .select(idx.as("stage_idx"), col(idCol).cast("long").as("id"))
       .groupBy("stage_idx")
       .agg(count(lit(1)).as("n_rows"),
-        sampler(negate(col("id").cast("double")), col("id"), col("id")).as("sample"))
+        call_function("graft_top_k", col("id"), lit(sampleK)).as("sample"))
     // fixed report shape: every declared stage appears, rejected or not
     val dim = (stages.map(s => (s.name, s.reason)) :+ ("kept" -> "kept"))
       .zipWithIndex

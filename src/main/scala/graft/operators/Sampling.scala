@@ -48,48 +48,49 @@ object Sampling {
     * stratum's total weight, so the sample doubles as a per-stratum
     * weight-total estimator (the property the output exposes).
     *
-    * Scale shape: ONE hash aggregate with the O(k)-state
-    * [[graft.functions.TopKRowsAgg]] — no per-stratum sort, no window
-    * over corpus-sized groups; map-side combine reduces each task to
-    * ≤ k+1 rows per stratum before the shuffle. Determinism: hrand+1
-    * and w are integers exact in doubles, `w·2³¹` < 2⁵³ for any
-    * realistic weight, and IEEE division is correctly rounded — both
-    * engines rank identical priorities (ties broken by key ASC).
+    * Scale shape: ONE hash aggregate with the O(k)-state `graft_top_k`
+    * over struct(−priority, key, weight) ascending — no per-stratum
+    * sort, no window over corpus-sized groups; map-side combine reduces
+    * each task to ≤ k+1 rows per stratum before the shuffle.
+    * Determinism: hrand+1 and w are integers exact in doubles, `w·2³¹`
+    * < 2⁵³ for any realistic weight, IEEE division is correctly rounded
+    * and negation is exact — both engines rank identical priorities
+    * (ties broken by key ASC).
     *
     * Output: one row per sampled row — (strata, rk, key, weight,
     * priority, tau, n_rows, total_weight, est_total), with the
     * group-level columns repeated on each sample row. `weightCol` must
     * be a positive integer column; NULL keys/weights are the caller's
-    * contract (NULL priority ranks last). */
+    * contract: their NULL priority ranks FIRST, since a NULL struct
+    * field sorts before every value. */
   def prioritySample(df: DataFrame, strataCol: String, keyCol: String,
       weightCol: String, k: Int, seed: Long): DataFrame = {
     require(k >= 1, s"priority sampling needs k >= 1, got $k")
-    val topAgg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKRowsAgg(k + 1),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
     val pri = col(weightCol).cast("double") * lit(Deterministic.M.toDouble) /
       (Deterministic.hrand(col(keyCol), seed) + lit(1L))
     val grouped = df
       .groupBy(col(strataCol))
-      .agg(topAgg(pri, col(keyCol), col(weightCol).cast("long")).as("top"),
+      .agg(call_function("graft_top_k", struct(negate(pri).as("nv"),
+          col(keyCol).cast("long").as("key"), col(weightCol).cast("long").as("w")),
+          lit(k + 1)).as("top"),
         count(lit(1)).as("n_rows"),
         sum(col(weightCol).cast("long")).as("total_weight"))
       // τ = (k+1)-th priority; a stratum smaller than k+1 is sampled
       // whole and τ = 0 makes the estimator exact (max(w, 0) = w).
       .withColumn("tau_raw",
         when(size(col("top")) === k + 1,
-          element_at(col("top"), k + 1).getField("v")).otherwise(lit(0.0)))
+          negate(element_at(col("top"), k + 1).getField("nv"))).otherwise(lit(0.0)))
     val sample = grouped
       .select(col(strataCol), col("n_rows"), col("total_weight"), col("tau_raw"),
         posexplode(col("top")).as(Seq("idx", "r")))
       .filter(col("idx") < k)
     val est = sample.groupBy(strataCol).agg(
-      Deterministic.stableSum(round(greatest(col("r.k2").cast("double"), col("tau_raw")), 6))
+      Deterministic.stableSum(round(greatest(col("r.w").cast("double"), col("tau_raw")), 6))
         .as("est_raw"))
     sample.join(est, strataCol)
       .select(col(strataCol), (col("idx") + 1).cast("long").as("rk"),
-        col("r.k1").as("sample_key"), col("r.k2").as("weight"),
-        round(col("r.v"), 6).as("priority"), round(col("tau_raw"), 6).as("tau"),
+        col("r.key").as("sample_key"), col("r.w").as("weight"),
+        round(negate(col("r.nv")), 6).as("priority"), round(col("tau_raw"), 6).as("tau"),
         col("n_rows"), col("total_weight"), round(col("est_raw"), 6).as("est_total"))
   }
 
@@ -232,7 +233,7 @@ object Sampling {
     * the domain's pre-cap size.
     *
     * Selection runs through the bounded-state top-k aggregate
-    * ([[graft.functions.TopKRowsAgg]]): O(cap) state per domain with
+    * (`graft_top_k` over struct(−score, id)): O(cap) state per domain with
     * map-side combine, instead of the row_number window the oracle
     * replays — the window form sorts a domain's ENTIRE posting on one
     * task, and a crawl's hottest host is exactly where that posting is
@@ -243,14 +244,12 @@ object Sampling {
   def domainCap(df: DataFrame, domainCol: String, idCol: String,
       score: Column, cap: Int): DataFrame = {
     require(cap >= 1, s"domainCap needs cap >= 1, got $cap")
-    val topAgg = org.apache.spark.sql.functions.udaf(
-      new graft.functions.TopKRowsAgg(cap),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
     df.groupBy(domainCol)
-      .agg(topAgg(score.cast("double"), col(idCol).cast("long"), lit(0L)).as("ks"),
+      .agg(call_function("graft_top_k", struct(negate(score.cast("double")).as("ns"),
+          col(idCol).cast("long").as("id")), lit(cap)).as("ks"),
         count(lit(1)).as("n_docs"))
       .select(col(domainCol), posexplode(col("ks")).as(Seq("p", "r")), col("n_docs"))
       .select(col(domainCol), (col("p") + 1).cast("long").as("rk"),
-        col("r.k1").as(idCol), col("r.v").as("score"), col("n_docs"))
+        col("r.id").as(idCol), negate(col("r.ns")).as("score"), col("n_docs"))
   }
 }

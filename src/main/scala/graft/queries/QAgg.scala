@@ -365,17 +365,20 @@ object QAgg {
   })
 
   // --------------------------------------------------- KMV sketch
-  /** K-minimum-values distinct-count sketch —
-    * functions.KMinDistinctAgg — cardinality estimation with O(k)
-    * state per group where count(DISTINCT) must shuffle every distinct
-    * value (the planning primitive for dedup/shuffle-width sizing at
-    * corpus scale). The 60-bit hash is the first 15 hex chars of the
-    * value's md5 (engine-portable); the estimator (k−1)/U(k) and the
-    * exact-when-under-k contract are downstream arithmetic replayed by
-    * the oracle's rank-over-distinct-hash window. The exact
-    * countDistinct rides along here as the fidelity report (at 100 TB
-    * you would ship only the sketch — the exact leg is the cost being
-    * avoided). */
+  /** K-minimum-values distinct-count sketch — `graft_top_k(h, k)` over
+    * the group's DISTINCT hashes — cardinality estimation with O(k)
+    * sketch state per group (the planning primitive for
+    * dedup/shuffle-width sizing at corpus scale). The 60-bit hash is
+    * the first 15 hex chars of the value's md5 (engine-portable); the
+    * estimator (k−1)/U(k) and the exact-when-under-k contract are
+    * downstream arithmetic replayed by the oracle's
+    * rank-over-distinct-hash window. Distinctness is the input's: the
+    * exact count rides along as the fidelity report and already pays
+    * the (flag, partkey) distinct, so the hash runs once per distinct
+    * key and the sketch reads rows distinct on (flag, h), as the
+    * oracle's `hx` does. A sketch-only consumer would shuffle that
+    * distinct set where a deduplicating sketch aggregate ships O(k) per
+    * map task; no registry query is one. */
   private val kmvK = 128
   private val kmvPow = 1L << 60 // 16^15
 
@@ -398,18 +401,17 @@ object QAgg {
            round(abs(CAST(round(est, 0) AS BIGINT) - n_exact)::DOUBLE / n_exact, 6) AS rel_err
     FROM e ORDER BY 1"""
   })((s, d) => {
-    val kmvAgg = udaf(new graft.functions.KMinDistinctAgg(kmvK),
-      org.apache.spark.sql.Encoders.scalaLong)
     val h = conv(substring(md5(encode(col("l_partkey").cast("string"), "UTF-8")), 1, 15),
       16, 10).cast("long")
     val est = when(size(col("ks")) < kmvK, size(col("ks")).cast("double"))
       .otherwise(lit(kmvK - 1) /
         (element_at(col("ks"), kmvK).cast("double") / lit(kmvPow.toDouble)))
     Tables.lineitem(s, d)
-      .select(col("l_returnflag"), col("l_partkey"), h.as("h"))
+      .select(col("l_returnflag"), col("l_partkey")).distinct()
+      .groupBy(col("l_returnflag"), h.as("h")).agg(count(lit(1)).as("n_keys"))
       .groupBy("l_returnflag")
-      .agg(kmvAgg(col("h")).as("ks"),
-        countDistinct(col("l_partkey")).as("n_exact"))
+      .agg(call_function("graft_top_k", col("h"), lit(kmvK)).as("ks"),
+        sum(col("n_keys")).as("n_exact"))
       .withColumn("n_est", round(est, 0).cast("long"))
       .select(col("l_returnflag"), col("n_exact"), col("n_est"),
         round(abs(col("n_est") - col("n_exact")).cast("double") / col("n_exact"), 6)
@@ -420,9 +422,9 @@ object QAgg {
   // ------------------------------------------- KMV set-overlap sketch
   /** Cross-corpus overlap estimation from KMV sketches — the planning
     * form of "how much does source A overlap source B" (dedup /
-    * decontamination sizing) without shuffling either side's distinct
-    * set: three O(k)-state sketches (A, B, A∪B) over the 60-bit word
-    * BIGRAM hash (the unigram vocabulary of the synthetic corpus is
+    * decontamination sizing): three O(k)-state `graft_top_k` sketches
+    * (A, B, A∪B) over the distinct 60-bit word
+    * BIGRAM hashes (the unigram vocabulary of the synthetic corpus is
     * ~31 tokens — trivially shared; bigrams give a k-exceeding,
     * partially-overlapping universe), then pure array arithmetic. For x in the union sketch K,
     * x ∈ A ⟺ x ∈ sketch(A) (K's elements are ≤ kth-min(A∪B) ≤
@@ -468,8 +470,6 @@ object QAgg {
            CAST(exact_intersect AS BIGINT) AS exact_intersect
     FROM est"""
   })((s, d) => {
-    val kmvAgg = udaf(new graft.functions.KMinDistinctAgg(kmvK),
-      org.apache.spark.sql.Encoders.scalaLong)
     val toks = graft.operators.Dedup.shingles(
         Tables.documentsP(s, d).filter(col("source").isin(ovA, ovB)),
         "text", Seq("source"), n = 2, dedup = false)
@@ -477,18 +477,18 @@ object QAgg {
         shiftrightunsigned(col("sh_hi"), 4).as("h"))
     // (source, h) distinct: four plan subtrees consume it (three
     // sketches + the exact legs), so it is scope-persisted — Catalyst
-    // does not CSE across aggregation branches. A sketch-only
-    // production form would skip BOTH the distinct and this persist
-    // (the aggregator dedups internally in O(k) state); the distinct
-    // exists here because the exact fidelity legs need it anyway.
+    // does not CSE across aggregation branches. Each sketch reads
+    // distinct hashes from it, so graft_top_k's k least are the KMV.
     val dist = graft.operators.CacheScope.persist(toks.distinct())
     def est(ks: org.apache.spark.sql.Column) =
       when(size(ks) < kmvK, size(ks).cast("double"))
         .otherwise(lit(kmvK - 1) /
           (element_at(ks, kmvK).cast("double") / lit(kmvPow.toDouble)))
-    val skA = dist.filter(col("source") === ovA).agg(kmvAgg(col("h")).as("ka"))
-    val skB = dist.filter(col("source") === ovB).agg(kmvAgg(col("h")).as("kb"))
-    val skU = dist.select("h").distinct().agg(kmvAgg(col("h")).as("ku"))
+    def sketch(hs: org.apache.spark.sql.DataFrame, as: String) =
+      hs.agg(call_function("graft_top_k", col("h"), lit(kmvK)).as(as))
+    val skA = sketch(dist.filter(col("source") === ovA), "ka")
+    val skB = sketch(dist.filter(col("source") === ovB), "kb")
+    val skU = sketch(dist.select("h").distinct(), "ku")
     val exact = dist.groupBy("h").agg(count(lit(1)).as("ns"))
       .agg(count(lit(1)).as("exact_union"),
         sum(when(col("ns") === 2, 1L).otherwise(0L)).as("exact_intersect"))

@@ -268,7 +268,7 @@ object QCuration {
     * (order-invariant and mergeable — the same property KMV uses for
     * distinct counts), and the sample's order statistics estimate the
     * group's quantiles with O(1/√k) error. Bounded state: the sample
-    * is selected by the O(k)-state TopKKeysAgg (never a corpus-wide
+    * is selected by the O(k)-state `graft_top_k` (never a corpus-wide
     * sort), measures are fetched by an equi-join on the sampled keys,
     * and the final sort_array touches k values per group. The estimate
     * is DETERMINISTIC (hash sample + fixed index convention), so the
@@ -299,14 +299,11 @@ object QCuration {
     FROM c JOIN s ON c.pri = s.pri ORDER BY 1"""
   ))((s, d) => {
     val orders = Tables.orders(s, d)
-    val sample = udaf(new graft.functions.TopKKeysAgg(qsK),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
-    // bottom-k by hash == top-k by negated hash; hrand < 2^31 is exact
-    // in a double, so the ranking matches the oracle's (hr, key) ASC.
+    // bottom-k by (hr, key) ascending, the oracle's window order
     val keys = orders.groupBy(col("o_orderpriority").as("pri"))
-      .agg(sample(-hrand(col("o_orderkey"), qsSeed).cast("double"),
-        col("o_orderkey"), lit(0L)).as("ks"))
-      .select(col("pri"), explode(col("ks")).as("o_orderkey"))
+      .agg(call_function("graft_top_k", struct(hrand(col("o_orderkey"), qsSeed),
+        col("o_orderkey").cast("long").as("k")), lit(qsK)).as("ks"))
+      .select(col("pri"), explode(col("ks.k")).as("o_orderkey"))
     val meas = keys.join(
         orders.select(col("o_orderpriority").as("pri"), col("o_orderkey"),
           col("o_totalprice").cast("double").as("m")),

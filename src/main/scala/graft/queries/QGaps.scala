@@ -185,13 +185,14 @@ object QGaps {
   // ----------------------------------------------------------- A13/W2
   /** Top-k mean: rank within group, mean of the top 3 (communication-
     * capacity metric shape). Bounded-state top-k aggregate
-    * (functions.TopKByAgg, O(k) state per group with map-side combine)
+    * (`graft_top_k`, O(k) state per group with map-side combine)
     * rather than a `row_number` window — the window form sorts each
-    * return-flag partition (size ∝ corpus) on a single task. The mean
-    * folds the ranked values left-to-right, the same summation order
-    * both engines' windowed formulation produces (window output is
-    * rank-ascending); the fold is an interpreted HOF but runs on 3
-    * groups × 3 elements.
+    * return-flag partition (size ∝ corpus) on a single task. It ranks
+    * struct(−price, orderkey, linenumber) ascending, the window's order;
+    * the mean folds `a − nv` left-to-right (negation is exact), the same
+    * summation order both engines' windowed formulation produces (window
+    * output is rank-ascending); the fold is an interpreted HOF but runs
+    * on 3 groups × 3 elements.
     * Ref: History/.../Dimensionality_communication_analysis.py:265-295. */
   val a13 = Q("a13_topk_mean", Some("""
     WITH r AS (
@@ -203,16 +204,14 @@ object QGaps {
            round(max(l_extendedprice), 4) AS max_val
     FROM r WHERE rk <= 3 GROUP BY 1 ORDER BY 1"""
   ))((s, d) => {
-    val topk = udaf(new graft.functions.TopKByAgg(3),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
     Tables.lineitem(s, d)
       .groupBy("l_returnflag")
-      .agg(topk(col("l_extendedprice"), col("l_orderkey").cast("long"),
-        col("l_linenumber").cast("long")).as("top"))
+      .agg(call_function("graft_top_k", struct(negate(col("l_extendedprice")).as("nv"),
+        col("l_orderkey"), col("l_linenumber")), lit(3)).as("top"))
       .select(col("l_returnflag"),
-        round(expr("aggregate(top, 0D, (a, x) -> a + x) / size(top)"), 4)
+        round(expr("aggregate(top, 0D, (a, x) -> a - x.nv) / size(top)"), 4)
           .as("top3_mean"),
-        round(expr("top[0]"), 4).as("max_val"))
+        round(negate(expr("top[0].nv")), 4).as("max_val"))
       .orderBy("l_returnflag")
   })
 

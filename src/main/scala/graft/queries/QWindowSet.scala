@@ -69,11 +69,11 @@ object QWindowSet {
   /** Seeded deterministic STRATIFIED sampling: k=3 per group via the
     * engine's arithmetic hash (replayable on any SQL engine, stable
     * across partitionings — SURVEY §7.4.1). Selection runs through the
-    * bounded-state top-k aggregate (functions.TopKKeysAgg ranking by
-    * −hrand: O(k) state per stratum, map-side combine) rather than the
-    * row_number window the oracle replays — the window form sorts each
-    * stratum (size ∝ corpus) on one task. hrand < 2^31 is exact in a
-    * double, so the selected set is identical.
+    * bounded-state top-k aggregate (`graft_top_k` over struct(hrand,
+    * key) ascending, the window's order: O(k) state per stratum,
+    * map-side combine) rather than the row_number window the oracle
+    * replays — the window form sorts each stratum (size ∝ corpus) on
+    * one task.
     * Ref: Matlab_part/perform_region_analysis.m:122-124 (seed 12345). */
   val w6 = Q("w6_seeded_sample", Some(s"""
     WITH h AS (
@@ -87,13 +87,11 @@ object QWindowSet {
     SELECT c_nationkey, c_custkey FROM r WHERE rn <= 3
     ORDER BY c_nationkey, c_custkey"""
   ))((s, d) => {
-    val sample = udaf(new graft.functions.TopKKeysAgg(3),
-      org.apache.spark.sql.Encoders.product[graft.functions.TopKRow])
     Tables.customer(s, d)
       .groupBy("c_nationkey")
-      .agg(sample(-hrand(col("c_custkey"), 12345L).cast("double"),
-        col("c_custkey"), lit(0L)).as("ks"))
-      .select(col("c_nationkey"), explode(col("ks")).as("c_custkey"))
+      .agg(call_function("graft_top_k", struct(hrand(col("c_custkey"), 12345L),
+        col("c_custkey").cast("long").as("k")), lit(3)).as("ks"))
+      .select(col("c_nationkey"), explode(col("ks.k")).as("c_custkey"))
       .orderBy("c_nationkey", "c_custkey")
   })
 

@@ -23,7 +23,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("a wrong-arity call to any native function raises WRONG_NUM_ARGS") {
     val spark = GraftSession.local(4)
-    assert(GraftSession.functionNames.size == 10)
+    assert(GraftSession.functionNames.size == 11)
     for (name <- GraftSession.functionNames; args <- Seq("", "1, 2, 3, 4, 5")) {
       val e = intercept[org.apache.spark.sql.AnalysisException](
         spark.sql(s"SELECT $name($args)").queryExecution.analyzed)

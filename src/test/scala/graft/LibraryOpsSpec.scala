@@ -1088,18 +1088,19 @@ class LibraryOpsSpec extends AnyFunSuite {
 
   test("KMinDistinctAgg keeps the k smallest distinct hashes, invariant to layout") {
     import spark.implicits._
-    val kmv = udaf(new graft.functions.KMinDistinctAgg(4),
-      org.apache.spark.sql.Encoders.scalaLong)
+    // the KMV sketch: distinct hashes, then graft_top_k's k least
+    def kmv(df: org.apache.spark.sql.DataFrame, k: org.apache.spark.sql.Column) =
+      df.distinct().agg(call_function("graft_top_k", col("h"), k).as("ks"))
     // values with planned duplicates; k-min of the DISTINCT set
     val d = Seq(9L, 3L, 7L, 3L, 1L, 9L, 5L, 1L, 8L).toDF("h")
     def run(df: org.apache.spark.sql.DataFrame) =
-      df.agg(kmv(col("h")).as("ks")).select("ks").as[Seq[Long]].head()
+      kmv(df, lit(4)).select("ks").as[Seq[Long]].head()
     assert(run(d) == Seq(1L, 3L, 5L, 7L))
     assert(run(d.repartition(5)) == Seq(1L, 3L, 5L, 7L))
     // fewer than k distinct values: the sketch IS the exact set
     assert(run(Seq(2L, 2L, 6L).toDF("h")) == Seq(2L, 6L))
-    // k < 1 fails at construction, not inside an executor
-    intercept[IllegalArgumentException](new graft.functions.KMinDistinctAgg(0))
+    // k < 1 fails at analysis, not inside an executor
+    intercept[IllegalArgumentException](kmv(d, lit(0)))
   }
 
   test("TextOps.languageId honors a custom marker set and tie-break order") {
@@ -1726,20 +1727,18 @@ class LibraryOpsSpec extends AnyFunSuite {
     assert(out == Set((1L, 2L, false), (1L, 3L, false)), s"got $out")
   }
 
-  test("Ledger.rejectLedger raises on ids at or past 2^53") {
+  test("Ledger.rejectLedger samples ids at and past ±2^53 exactly") {
     import spark.implicits._
     import graft.operators.Ledger, Ledger.Stage
-    val bad = Seq((1L << 53, 5.0), (7L, 1.0)).toDF("id", "v")
-    val ex = intercept[Exception] {
-      Ledger.rejectLedger(bad, "id", Seq(Stage("s1", "v too small", col("v") >= 2.0)))
-        .collect()
-    }
-    assert(ex.getMessage != null)
-    val ok = Seq(((1L << 53) - 1, 5.0), (7L, 1.0)).toDF("id", "v")
-    val rows = Ledger.rejectLedger(ok, "id",
-        Seq(Stage("s1", "v too small", col("v") >= 2.0)))
+    // neighbours that one double cannot tell apart are ranked apart
+    val lim = 1L << 53
+    val d = Seq((lim, 1.0), (-lim, 1.0), (7L, 1.0), (Long.MaxValue, 5.0),
+      (Long.MaxValue - 1, 5.0), (lim + 1, 5.0), (-lim - 1, 5.0)).toDF("id", "v")
+    val rows = Ledger.rejectLedger(d, "id", Seq(Stage("s1", "v too small", col("v") >= 2.0)))
       .collect().map(r => (r.getString(1), r.getLong(3), r.getString(4)))
-    assert(rows.toSeq == Seq(("s1", 1L, "7"), ("kept", 1L, "9007199254740991")))
+    assert(rows.toSeq == Seq(
+      ("s1", 3L, "-9007199254740992,7,9007199254740992"),
+      ("kept", 4L, "-9007199254740993,9007199254740993,9223372036854775806")))
   }
 
   test("Memo: same key returns the same persisted frame; clear releases") {

@@ -434,6 +434,37 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"hex md5(concat_ws) gram keys: $offenders")
   }
 
+  test("no typed Scala aggregator in registry plans except WilcoxonSignedRank and MomentsAgg") {
+    // A typed Aggregator ships its per-group buffer through an encoder
+    // (Kryo for a collection buffer) and runs interpreted; bounded
+    // selection runs on graft_top_k (Spark's CollectTopK, an
+    // UnsafeProjection wire form). Only the two statistics kernels keep
+    // the typed form.
+    import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+    import org.apache.spark.sql.functions.{col, udaf}
+    import graft.functions.{MomentsAgg, WilcoxonSignedRank}
+    def typedAggs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      planNodes(df.queryExecution.executedPlan).flatMap(_.expressions.flatMap(_.collect {
+        case a: ScalaAggregator[_, _, _]
+            if !(a.agg.eq(WilcoxonSignedRank) || a.agg.isInstanceOf[MomentsAgg]) =>
+          a.agg.getClass.getName
+      })).distinct
+    // the detector sees a planted udaf, plain and under a cached frame,
+    // and passes the two kernels
+    val planted = udaf(PlantedSumAgg, org.apache.spark.sql.Encoders.scalaLong)
+    assert(typedAggs(spark.range(4).agg(planted(col("id")))).nonEmpty)
+    val cached = spark.range(4).groupBy(col("id") % 2).agg(planted(col("id")).as("s")).cache()
+    assert(typedAggs(cached.select("s")).nonEmpty)
+    cached.unpersist()
+    val wsr = udaf(WilcoxonSignedRank, org.apache.spark.sql.Encoders.scalaDouble)
+    assert(typedAggs(spark.range(4).agg(wsr(col("id").cast("double")))).isEmpty)
+    val offenders = Q.registry
+      .filterNot(q => q.name.startsWith("stream_") || q.buildExecutes)
+      .map(q => q.name -> typedAggs(q.build(spark, s"${Q.testdataRoot}/sf0.001")))
+      .filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, s"typed Scala aggregators outside the kernels: $offenders")
+  }
+
   test("j1_skewed_segment joins on the deterministic salt") {
     val plan = Q.registry.find(_.name == "j1_skewed_segment").get
       .build(spark, s"${Q.testdataRoot}/sf0.001")
@@ -656,4 +687,15 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!plan.contains("ReadSchema: struct<>"), s"$name reads no columns?")
     }
   }
+}
+
+/** A typed aggregator planted in the audit's detector check. */
+private object PlantedSumAgg
+    extends org.apache.spark.sql.expressions.Aggregator[Long, Long, Long] {
+  def zero: Long = 0L
+  def reduce(b: Long, a: Long): Long = b + a
+  def merge(a: Long, b: Long): Long = a + b
+  def finish(b: Long): Long = b
+  def bufferEncoder: org.apache.spark.sql.Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
+  def outputEncoder: org.apache.spark.sql.Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
 }

@@ -62,10 +62,10 @@ class PropertySpec extends AnyFunSuite {
       val universe = 1 + rnd.nextInt(60) // small universe ⇒ many duplicates
       val xs = Seq.fill(n)(rnd.nextInt(universe).toLong - universe / 2)
       val want = xs.distinct.sorted.take(k)
-      val kmv = udaf(new graft.functions.KMinDistinctAgg(k),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val got = xs.toDF("h").repartition(1 + rnd.nextInt(7))
-        .agg(kmv(col("h")).as("ks")).select("ks").as[Seq[Long]].head()
+      // the KMV sketch: distinct hashes, then graft_top_k's k least
+      val got = xs.toDF("h").repartition(1 + rnd.nextInt(7)).distinct()
+        .agg(call_function("graft_top_k", col("h"), lit(k)).as("ks"))
+        .select("ks").as[Seq[Long]].head()
       assert(got == want, s"case $caseSeed (k=$k n=$n universe=$universe)")
     }
   }

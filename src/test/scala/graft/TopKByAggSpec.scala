@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{TopKByAgg, TopKKeysAgg, TopKRow}
 
-/** Contract tests for the bounded-state top-k aggregate that replaces
+/** Contract tests for the bounded-state top-k aggregate `graft_top_k`
+  * (Spark's `CollectTopK`, the k least values ascending) that replaces
   * `row_number() OVER (...) <= k` windows on corpus-scaling partitions:
   * equivalence with the window formulation on seeded random data
-  * (including heavy value ties, which exercise the tie-break keys) and
-  * bit-identity across partition layouts.
+  * (including heavy value ties, which exercise the tie-break keys),
+  * bit-identity across partition layouts, and its NULL and `k` rules.
   */
 class TopKByAggSpec extends AnyFunSuite {
 
@@ -17,10 +17,11 @@ class TopKByAggSpec extends AnyFunSuite {
 
   private def topkDf(rows: Seq[(Int, Double, Long, Long)], k: Int, partitions: Int) = {
     import spark.implicits._
-    val topk = udaf(new TopKByAgg(k),
-      org.apache.spark.sql.Encoders.product[TopKRow])
+    // v DESC, k1, k2 is struct(−v, k1, k2) ascending
     rows.toDF("g", "v", "k1", "k2").repartition(partitions)
-      .groupBy("g").agg(topk(col("v"), col("k1"), col("k2")).as("top"))
+      .groupBy("g").agg(call_function("graft_top_k",
+        struct(negate(col("v")).as("nv"), col("k1"), col("k2")), lit(k)).as("top"))
+      .select(col("g"), transform(col("top"), x => negate(x.getField("nv"))))
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
   }
 
@@ -56,15 +57,19 @@ class TopKByAggSpec extends AnyFunSuite {
     val want = df.withColumn("hr", hrand(col("id"), 777L))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .select("g", "id").as[(Int, Long)].collect().toSet
-    // bounded-state formulation: rank by -hrand, keys out
-    val sample = udaf(new TopKKeysAgg(5),
-      org.apache.spark.sql.Encoders.product[TopKRow])
-    val got = df.groupBy("g")
-      .agg(sample(-hrand(col("id"), 777L).cast("double"), col("id"), lit(0L)).as("ks"))
-      .select(col("g"), explode(col("ks")).as("id"))
+    // bounded-state formulation: the k least (hrand, id), keys out
+    def sample(k: org.apache.spark.sql.Column) = df.groupBy("g")
+      .agg(call_function("graft_top_k", struct(hrand(col("id"), 777L), col("id").as("id")),
+        k).as("ks"))
+    val got = sample(lit(5))
+      .select(col("g"), explode(col("ks.id")).as("id"))
       .as[(Int, Long)].collect().toSet
     assert(got == want)
-    intercept[IllegalArgumentException](new TopKKeysAgg(0))
+    // a wrong k fails at analysis, before any job runs
+    for (k <- Seq(lit(0), lit(-2), lit(1.5), lit(null).cast("int"), col("id"))) {
+      val e = intercept[IllegalArgumentException](sample(k))
+      assert(e.getMessage.contains("graft_top_k needs"), e.getMessage)
+    }
   }
 
   test("bit-identical across partition layouts; short groups return all rows") {
@@ -76,5 +81,32 @@ class TopKByAggSpec extends AnyFunSuite {
     for (p <- Seq(2, 8, 32)) {
       assert(topkDf(rnd.shuffle(rows), 3, p) == base, s"p=$p diverged")
     }
+  }
+
+  test("a NULL struct field ranks first; a NULL value is skipped") {
+    import spark.implicits._
+    val df = Seq[(Option[Double], Option[Long])]((Some(2.0), Some(1L)), (None, Some(2L)),
+      (Some(1.0), Some(3L)), (Some(1.0), None), (None, None)).toDF("v", "id")
+    val top = df.agg(call_function("graft_top_k", struct(col("v"), col("id")), lit(4)))
+      .as[Seq[(Option[Double], Option[Long])]].head()
+    assert(top == Seq((None, None), (None, Some(2L)), (Some(1.0), None), (Some(1.0), Some(3L))))
+    // a NULL value (not a struct holding NULLs) never enters the selection
+    val ids = df.agg(call_function("graft_top_k", col("id"), lit(4))).as[Seq[Long]].head()
+    assert(ids == Seq(1L, 2L, 3L))
+    val none = df.filter(col("id").isNull)
+      .agg(call_function("graft_top_k", col("id"), lit(4))).as[Seq[Long]].head()
+    assert(none.isEmpty)
+  }
+
+  test("a NULL hash in a group does not enter the KMV sketch") {
+    import spark.implicits._
+    // KMV = graft_top_k over the group's distinct hashes
+    val hs = Seq[(Int, Option[Long])]((1, Some(5L)), (1, None), (1, Some(3L)), (1, None),
+      (1, Some(3L)), (2, None)).toDF("g", "h").distinct()
+    def kmv(k: Int) = hs.groupBy("g")
+      .agg(call_function("graft_top_k", col("h"), lit(k)).as("ks"))
+      .as[(Int, Seq[Long])].collect().sortBy(_._1).toSeq
+    assert(kmv(4) == Seq(1 -> Seq(3L, 5L), 2 -> Seq()))
+    assert(kmv(1) == Seq(1 -> Seq(3L), 2 -> Seq()))
   }
 }

@@ -6,8 +6,12 @@
 Each file is split on its `===== name =====` headers. Before comparing,
 the run-specific parts of every plan are replaced by placeholders:
 expression ids (`#123`), plan ids (`plan_id=45`), lambda and object
-hash codes (`$Lambda$12/0x…@1a2b3c`, `@1a2b3c4d`), RDD ids (`RDD[7]`)
-and source line numbers (`.scala:923`). The input may be the raw stdout
+hash codes (`$Lambda$12/0x…@1a2b3c`, `@1a2b3c4d`), RDD ids (`RDD[7]`),
+source line numbers (`.scala:923`) and the store directories the
+registry writes under `java.io.tmpdir`: that prefix itself, the
+per-context corpus memo root (`graft_corpus_memo-<app>-<start>`) and
+the hex-keyed `graft_sig_store/<hex>` and `graft_ann_index/<hex>`
+directories. The input may be the raw stdout
 of `sbt "runMain graft.Explain …"`: `[info] ` prefixes are stripped and
 other sbt-tagged lines (Spark's log output, `[success]`) are dropped.
 
@@ -21,7 +25,11 @@ import sys
 
 HEADER = re.compile(r"^===== (.+) =====$")
 SBT_TAG = re.compile(r"^\[(info|warn|error|success|debug)\] ?")
+STORE = r"graft_(?:corpus_memo-|sig_store/|ann_index/)"
 NORMALIZE = [
+    (re.compile(r"/[^\s\[\],:]*/(?=" + STORE + ")"), "TMPDIR/"),
+    (re.compile(r"graft_corpus_memo-[^/\s\],]+"), "graft_corpus_memo-APP"),
+    (re.compile(r"graft_(sig_store|ann_index)/[0-9a-f]+"), r"graft_\1/H"),
     (re.compile(r"\$Lambda\$?\d*/0x[0-9a-f]+"), "$Lambda$N/0xH"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"#\d+"), "#N"),
